@@ -45,22 +45,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // let AQE re-coalesce the output partitioning of CACHED plans:
-      // the iterative graph queries persist a shrinking edge/label
-      // relation each round, and without this flag every cached round
-      // keeps the full static shuffle width no matter how small the
-      // relation has contracted
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Sessions.requireAqe(spark)
+    val spark = Sessions.local(Sessions.cpus)
     val only = args.toSet
     val unknown = only.diff(SparkEntry.queries.keySet)
     if (unknown.nonEmpty) {

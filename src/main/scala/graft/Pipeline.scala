@@ -38,8 +38,7 @@ object Pipeline {
       secondary: RelationSource,
       key: String = "id",
       destDir: String,
-      destFile: String = "merged.csv",
-      reportSampleSize: Int = 10)
+      destFile: String = "merged.csv")
 
   def run(
       spark: SparkSession,
@@ -104,7 +103,7 @@ object Pipeline {
       notifier: Notifier): Long =
     try {
       val un = MergeOps.unmatched(secondary, primary, spec.key)
-      val (sample, total) = MergeOps.reportSample(un, spec.key, spec.reportSampleSize)
+      val (sample, total) = MergeOps.reportSample(un, spec.key, 10)
       if (total > 0) {
         val more = total - sample.size
         val tail = if (more > 0) s" (+$more more)" else ""
@@ -171,19 +170,14 @@ object Pipeline {
     *     whole invocation exit 1 (after all tenants ran).
     */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      // UTC like Bench/Verify: a timestamp-bearing fixture read through
-      // this main must decode identically to the oracle on any host
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE may re-coalesce cached-plan output partitioning (see Bench)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val notifier = new StdoutNotifier
-    val failed: Seq[String] = args.toSeq match {
+    val stdout = new StdoutNotifier
+    // usage, secrets and config errors stop here, before a session starts
+    def reject(msg: String): Nothing = {
+      System.err.println(msg)
+      sys.exit(1)
+    }
+    // (label, the run's spec and notifier, or the tenant's config error)
+    val runs: Seq[(String, Either[String, (PipelineSpec, Notifier)])] = args.toSeq match {
       case Seq("--config", cfgPath, rest @ _*) =>
         val secrets = rest match {
           case Seq("--secrets", sPath) =>
@@ -192,76 +186,61 @@ object Pipeline {
             // exit 1 as a bad config, not a raw stack trace
             try new io.FileSecretsProvider(sPath)
             catch {
-              case e: Throwable =>
-                System.err.println(s"cannot load secrets $sPath: ${e.getMessage}")
-                spark.stop()
-                sys.exit(1)
+              case e: Throwable => reject(s"cannot load secrets $sPath: ${e.getMessage}")
             }
           case Seq() => io.NoSecretsProvider
           case other =>
-            System.err.println(
-              s"unrecognized arguments: ${other.mkString(" ")}\n" +
-                "usage: Pipeline --config <tenants.json> [--secrets <secrets.json>]")
-            spark.stop()
-            sys.exit(1)
+            reject(s"unrecognized arguments: ${other.mkString(" ")}\n" +
+              "usage: Pipeline --config <tenants.json> [--secrets <secrets.json>]")
         }
         val tenants =
           try Config.loadFileTenants(cfgPath, secrets)
           catch {
-            case e: Throwable =>
-              System.err.println(s"cannot load config $cfgPath: ${e.getMessage}")
-              spark.stop()
-              sys.exit(1)
+            case e: Throwable => reject(s"cannot load config $cfgPath: ${e.getMessage}")
           }
         // per-tenant isolation: a tenant with a broken config (missing
         // field, unknown secret) fails alone; every valid tenant runs
-        tenants.flatMap {
-          case Left((name, err)) =>
-            System.err.println(s"[$name] invalid config: $err")
-            Some(name)
-          case Right(tenant) =>
-            // the config's webhook (HttpNotifier) when present, the
-            // shared stdout notifier otherwise
-            run(spark, tenant.toSpec, tenant.notifier(notifier)) match {
-              case Right(r) =>
-                println(s"[${tenant.name}] complete: ${r.mergedRows} rows -> ${r.csvPath}")
-                None
-              case Left(e) =>
-                System.err.println(s"[${tenant.name}] failed at ${e.stage}: ${e.message}")
-                Some(tenant.name)
-            }
+        // with the config's webhook (HttpNotifier) when present, the
+        // shared stdout notifier otherwise
+        tenants.map {
+          case Left((name, err)) => s"[$name]" -> Left(err)
+          case Right(t) => s"[${t.name}]" -> Right((t.toSpec, t.notifier(stdout)))
         }
       case Seq(primary, secondary, destDir, rest @ _*) =>
         // reject trailing junk like the --config branch does: silently
         // dropping e.g. a misplaced "--secrets s.json" would run the
         // pipeline with different inputs than the user asked for
-        if (rest.length > 1) {
-          System.err.println(
-            s"unrecognized arguments: ${rest.tail.mkString(" ")}\n" +
-              "usage: Pipeline <primary.json> <secondary.parquet> <destDir> [destFile]")
-          spark.stop()
-          sys.exit(1)
-        }
+        if (rest.length > 1)
+          reject(s"unrecognized arguments: ${rest.tail.mkString(" ")}\n" +
+            "usage: Pipeline <primary.json> <secondary.parquet> <destDir> [destFile]")
         val spec = PipelineSpec(
           primary = io.JsonArraySource(primary),
           secondary = io.ParquetSource(secondary),
           destDir = destDir,
           destFile = rest.headOption.getOrElse("merged.csv"))
-        run(spark, spec, notifier) match {
-          case Right(r) =>
-            println(s"pipeline complete: ${r.mergedRows} rows -> ${r.csvPath}")
-            Nil
-          case Left(e) =>
-            System.err.println(s"pipeline failed at ${e.stage}: ${e.message}")
-            Seq("adhoc")
-        }
+        Seq("pipeline" -> Right((spec, stdout)))
       case _ =>
-        System.err.println(
+        reject(
           "usage: Pipeline <primary.json> <secondary.parquet> <destDir> [destFile]\n" +
             "   or: Pipeline --config <tenants.json> [--secrets <secrets.json>]")
-        Seq("usage")
+    }
+    val spark = Sessions.local(Sessions.cpus)
+    // any failure makes the whole invocation exit 1, after every run
+    val failed = runs.count {
+      case (label, Left(err)) =>
+        System.err.println(s"$label invalid config: $err")
+        true
+      case (label, Right((spec, notifier))) =>
+        run(spark, spec, notifier) match {
+          case Right(r) =>
+            println(s"$label complete: ${r.mergedRows} rows -> ${r.csvPath}")
+            false
+          case Left(e) =>
+            System.err.println(s"$label failed at ${e.stage}: ${e.message}")
+            true
+        }
     }
     spark.stop()
-    if (failed.nonEmpty) sys.exit(1)
+    if (failed > 0) sys.exit(1)
   }
 }

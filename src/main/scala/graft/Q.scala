@@ -3,18 +3,16 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One registered operator query: a Spark DataFrame program over the
-  * fixture tables plus (when SQL-expressible) the exact DuckDB oracle the
-  * driver replays for the hash compare. Column names/types must match
-  * between the two (see the builder contract in SparkEntry).
+  * fixture tables plus the exact DuckDB oracle the driver replays for
+  * the hash compare. Column names/types must match between the two (see
+  * the builder contract in SparkEntry).
   */
 final case class Q(
     name: String,
     run: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: String)
 
 object Q {
   def apply(name: String, oracle: String)(run: (SparkSession, String) => DataFrame): Q =
-    Q(name, run, Some(oracle))
-  def noOracle(name: String)(run: (SparkSession, String) => DataFrame): Q =
-    Q(name, run, None)
+    Q(name, run, oracle)
 }

@@ -2,8 +2,40 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-level invariants the engine's plans are designed against. */
+/** The one place a session is built, and the session-level invariants
+  * the engine's plans are designed against.
+  */
 object Sessions {
+
+  /** Local cores for the entry points: `SPARK_GRAFT_CPUS`, default 4. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)
+
+  /** The session every entry point runs in (Pipeline, Bench, Verify,
+    * VerifySliced, the dev tools and the tests): `local[cpus]` with the
+    * graft SQL functions loaded through `spark.sql.extensions` (the
+    * deployment path), one shuffle partition per core, UTC so
+    * timestamp-bearing fixtures decode identically to the oracle on any
+    * host, no UI, WARN logging, and AQE required. `extra` settings are
+    * applied last. A second call returns the live session.
+    */
+  def local(cpus: Int, extra: (String, String)*): SparkSession = {
+    val base = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      // let AQE re-coalesce the output partitioning of CACHED plans:
+      // the iterative graph queries persist a shrinking edge/label
+      // relation each round, and without this flag every cached round
+      // keeps the full static shuffle width no matter how small the
+      // relation has contracted
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      .config("spark.ui.enabled", "false")
+    val spark = extra.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    requireAqe(spark)
+    spark
+  }
 
   /** Fail fast if adaptive execution (including skew-join splitting) is
     * off. Every registered plan assumes AQE's runtime re-planning —

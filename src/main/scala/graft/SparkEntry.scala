@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   * Queries are registered per operator module; each Q carries its DuckDB
-  * oracle SQL when the semantics are SQL-expressible.
+  * oracle SQL.
   */
 object SparkEntry {
 
@@ -40,8 +40,8 @@ object SparkEntry {
     registry.map(q => q.name -> q.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops.
+    * the same parquet tables.
     */
   def oracleSql: Map[String, String] =
-    registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
+    registry.map(q => q.name -> q.oracle).toMap
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch-bounded certification runner for the registry's two exact
   * all-pairs-flavored rows, whose one-shot shuffle scratch outgrows a
   * single host's free disk at sf100 (the registry plans are the right
@@ -17,21 +15,9 @@ object VerifySliced {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, name) = (args(0), args(1), args(2))
     val slices = if (args.length > 3) args(3).toInt else 8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // surrendered slice scratch must actually leave the disk between
-      // slices — compress what does hit it
-      .config("spark.shuffle.compress", "true")
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Sessions.requireAqe(spark)
+    // surrendered slice scratch must actually leave the disk between
+    // slices — compress what does hit it
+    val spark = Sessions.local(Sessions.cpus, "spark.io.compression.codec" -> "zstd")
     val scratch = s"$outDir/_scratch_$name"
     val df = name match {
       case "dedup_shingle_cosine" =>

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *
   * {{{
   * spark.sql.extensions=graft.functions.GraftExtensions   // spark-defaults
-  * // or: SparkSession.builder().withExtensions(new GraftExtensions()(_))
+  * // or, on a session builder: .withExtensions(new GraftExtensions()(_))
   *
   * SELECT graft_dot(emb_a, emb_b, 64)       -- native codegen dot product
   * SELECT graft_simhash(token_hashes)       -- 60-bit simhash signature

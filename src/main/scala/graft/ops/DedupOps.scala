@@ -23,8 +23,8 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongTyp
   */
 object DedupOps {
 
-  /** Runtime registration of the graft_shingles UDTF. Verify/Bench/
-    * Scratch sessions load GraftExtensions via spark.sql.extensions
+  /** Runtime registration of the graft_shingles UDTF. Sessions built
+    * by Sessions.local load GraftExtensions via spark.sql.extensions
     * (the real deployment path); this is the fallback for plain
     * library sessions and reuses the SAME builder so the paths cannot
     * drift. Shared by dedup_shingle_udtf and text_boilerplate.
@@ -957,6 +957,24 @@ object DedupOps {
   // union-distinct). Invoked by graft.VerifySliced, never registered —
   // the oracle replayed against the output is the registry row's own.
 
+  /** The sliced-execution loop: runs `perSlice` over each of `slices`
+    * disjoint hash slices of `rel` (every `keyCol` value lands in
+    * exactly one), lands each slice's output in the `scratch` parquet,
+    * and reads the union back. The GC nudge after each slice lets
+    * ContextCleaner drop the finished slice's shuffle files — without
+    * it the slices' files accumulate and re-create the very peak this
+    * loop exists to avoid.
+    */
+  private[graft] def sliced(rel: DataFrame, keyCol: String, slices: Int, scratch: String)(
+      perSlice: DataFrame => DataFrame): DataFrame = {
+    (0 until slices).foreach { i =>
+      perSlice(rel.filter(pmod(xxhash64(col(keyCol)), lit(slices)) === lit(i)))
+        .write.mode(if (i == 0) "overwrite" else "append").parquet(scratch)
+      System.gc()
+    }
+    rel.sparkSession.read.parquet(scratch)
+  }
+
   /** [[Q dedup_shingle_cosine]]'s exact relation via `slices`
     * shingle-hash slices. Identity: the per-pair co-occurrence count
     * c = Σ_i c_i over slices (each shared shingle lives in exactly one
@@ -964,10 +982,8 @@ object DedupOps {
     * not disk, backs the reuse: the capped postings are persisted once
     * and every slice filters the cache; each slice's only shuffles are
     * its own 1/K-volume pair join + partial agg, and the scratch the
-    * slice leaves behind is surrendered before the next starts (the
-    * GC nudge lets ContextCleaner drop the finished slice's shuffle
-    * files — without it the K slices' files accumulate and re-create
-    * the very peak this method exists to avoid).
+    * slice leaves behind is surrendered before the next starts (see
+    * [[sliced]]).
     */
   private[graft] def shingleCosineSliced(
       s: SparkSession, dir: String, slices: Int, scratch: String): DataFrame = {
@@ -983,19 +999,15 @@ object DedupOps {
       .persist()
     shc.count()
     sh.unpersist()
-    (0 until slices).foreach { i =>
-      val sl = shc.filter(pmod(xxhash64(col("s")), lit(slices)) === lit(i))
+    val partials = sliced(shc, "s", slices, scratch) { sl =>
       sl.as("a")
         .join(sl.as("b"),
           col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
         .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
         .agg(count(lit(1)).as("c"))
-        .write.mode(if (i == 0) "overwrite" else "append").parquet(scratch)
-      System.gc()
     }
     shc.unpersist()
-    val common = s.read.parquet(scratch)
-      .groupBy("doc_a", "doc_b").agg(sum(col("c")).as("c"))
+    val common = partials.groupBy("doc_a", "doc_b").agg(sum(col("c")).as("c"))
     common
       .join(nsq.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
       .join(nsq.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
@@ -1043,8 +1055,7 @@ object DedupOps {
         (col("pi") + 1).cast(LongType).as("pos"), col("n"))
       .persist()
     pre.count()
-    (0 until slices).foreach { i =>
-      val sl = pre.filter(pmod(xxhash64(col("tok")), lit(slices)) === lit(i))
+    val partials = sliced(pre, "tok", slices, scratch) { sl =>
       sl.select(col("doc_id").as("doc_a"), col("tok"),
           col("pos").as("pos_a"), col("n").as("n_a"))
         .join(sl.select(col("doc_id").as("doc_b"), col("tok"),
@@ -1056,11 +1067,9 @@ object DedupOps {
             expr(s"($p * (n_a + n_b) + ${p + q - 1}) div ${p + q}"))
         .select("doc_a", "doc_b", "n_a", "n_b")
         .distinct()
-        .write.mode(if (i == 0) "overwrite" else "append").parquet(scratch)
-      System.gc()
     }
     pre.unpersist()
-    val cand = s.read.parquet(scratch).distinct()
+    val cand = partials.distinct()
     val iv = cand
       .join(ss.select(col("doc_id").as("doc_a"),
         sort_array(col("shingles")).as("st_a")), Seq("doc_a"))

@@ -78,23 +78,15 @@ object MergeOps {
   /** O7+O8+O9+O12 in one plan: schema union, first-match left-outer
     * join, per-cell coalesce with primary precedence, ordered projection.
     * Primary row count is preserved by construction (left-outer against
-    * a key-unique build side).
-    *
-    * @param broadcastSecondary hint Catalyst to broadcast the deduped
-    *   secondary (the reference's secondary is a dimension table; at
-    *   scale this turns the merge into a map-side join, zero shuffle of
-    *   the fact side).
+    * a key-unique build side). The deduped secondary is broadcast: the
+    * reference's secondary is a dimension table, and at scale this turns
+    * the merge into a map-side join, zero shuffle of the fact side.
     */
-  def coalesceMerge(
-      primary: DataFrame,
-      secondary: DataFrame,
-      key: String,
-      broadcastSecondary: Boolean = true): DataFrame = {
+  def coalesceMerge(primary: DataFrame, secondary: DataFrame, key: String): DataFrame = {
     requireKey(primary, key, "S3")
     requireKey(secondary, key, "RDS")
     val p = nanToNull(primary).alias("p")
-    val sDedup = firstMatch(nanToNull(secondary), key)
-    val s = (if (broadcastSecondary) broadcast(sDedup) else sDedup).alias("s")
+    val s = broadcast(firstMatch(nanToNull(secondary), key)).alias("s")
 
     val pCols = primary.schema.fieldNames.toIndexedSeq
     val sCols = secondary.schema.fieldNames.toIndexedSeq

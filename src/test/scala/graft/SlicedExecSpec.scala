@@ -37,6 +37,20 @@ class SlicedExecSpec extends AnyFunSuite with SparkSessionTestWrapper {
     } finally spark.catalog.clearCache()
   }
 
+  test("sliced with an identity perSlice returns exactly its input") {
+    // every key in exactly one slice: the union of the slices is the
+    // input multiset — duplicates (k % 50 repeats keys) included
+    val input = spark.range(0, 1000)
+      .selectExpr("id % 50 AS k", "id AS v")
+    def multiset(df: org.apache.spark.sql.DataFrame): Map[String, Int] =
+      df.collect().map(_.mkString("|")).groupBy(identity).map { case (r, rs) => r -> rs.length }
+    Seq(1, 7).foreach { slices =>
+      val scratch = tmpScratch(s"id$slices")
+      val out = ops.DedupOps.sliced(input, "k", slices, s"$scratch/p")(identity)
+      assert(multiset(out.select("k", "v")) === multiset(input), s"slices=$slices")
+    }
+  }
+
   test("allPairsSliced reproduces allPairsOver bit-for-bit") {
     val docs = Tables.load(spark, dir, "documents")
     val full = ops.DedupOps.allPairsOver(docs, 3, 5)

@@ -2,24 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole forked test JVM. */
+/** One shared local session for the whole forked test JVM: the
+  * factory-built session the mains run in, so tests exercise the same
+  * extensions and planner settings.
+  */
 trait SparkSessionTestWrapper {
   lazy val spark: SparkSession = SparkSessionTestWrapper.shared
 }
 
 object SparkSessionTestWrapper {
-  lazy val shared: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // match the production mains: AQE may re-coalesce cached-plan
-    // output partitioning (see Bench) — tests must exercise the same
-    // planner behavior the benched/verified paths run under
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    .config("spark.ui.enabled", "false")
-    // the production registration path for the graft SQL functions —
-    // tests exercise exactly what spark.sql.extensions deploys
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .getOrCreate()
+  lazy val shared: SparkSession = Sessions.local(4)
 }
