@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Notification sink (SURVEY.md §2 O17). The reference POSTs JSON
   * `{"text": ...}` to a Slack webhook at every stage boundary
   * (`gule_test_job.py:77,102,110,188,198,215,220`). The engine keeps
@@ -14,14 +16,23 @@ trait Notifier {
   def notify(text: String): Unit
 
   /** Notification failures are logged, not propagated (O17's
-    * "Slack-failure warning is non-fatal" branch).
+    * "Slack-failure warning is non-fatal" branch). Fatal VM errors and
+    * interrupts (a cancelled [[HttpNotifier]] send) still propagate.
     */
   final def notifySafe(text: String): Unit =
     try notify(text)
     catch {
-      case e: Throwable =>
-        System.err.println(s"[notifier] delivery failed (non-fatal): ${e.getMessage}")
+      case NonFatal(e) =>
+        System.err.println(s"[notifier] delivery failed (non-fatal): ${Notifier.describe(e)}")
     }
+}
+
+object Notifier {
+  /** `Class: message` — a bare getMessage can be as unhelpful as
+    * "org.mariadb.jdbc.Driver" (ClassNotFound), or null.
+    */
+  def describe(e: Throwable): String =
+    s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}"
 }
 
 /** Default implementation: one line per message on stdout. */

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.nio.file.Path
 import scala.util.{Failure, Success, Try}
+import scala.util.control.NonFatal
 
 /** The reference pipeline end-to-end (SURVEY.md §3.1), as one
   * distributed job with the reference's fail-fast control flow
@@ -21,8 +22,12 @@ import scala.util.{Failure, Success, Try}
   *
   * Unlike the reference — whose merge is a single-threaded pandas loop
   * over rows collected to the driver (`gule_test_job.py:94,125-156`) —
-  * every data-plane step here is a Spark plan; the only driver-side
-  * work is the ≤10-row report sample and the final part-file rename.
+  * every data-plane step here is a Spark plan. The driver-side work is
+  * folding the JSON reader's per-split lexer summaries (a few numbers
+  * per split, [[graft.io.JsonArraySplits]]), the ≤10-row report sample
+  * and the final part-file rename. The primary is parsed once per run
+  * and cached for the run's two consumers, the unmatched report and
+  * the CSV write.
   */
 object Pipeline {
 
@@ -49,50 +54,56 @@ object Pipeline {
       Try(body) match {
         case Success(a) => Right(a)
         case Failure(e) =>
-          // include the exception class: a bare getMessage can be as
-          // unhelpful as "org.mariadb.jdbc.Driver" (ClassNotFound)
-          val msg = s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}"
+          val msg = Notifier.describe(e)
           notifier.notifySafe(errorText(msg))
           Left(PipelineError(name, msg))
       }
 
-    for {
-      primary <- stage("read-primary",
-        m => s"Error: failed to read ${spec.primary.describe}: $m") {
-        spec.primary.load(spark)
+    def fromPrimary(primary: DataFrame): Either[PipelineError, PipelineResult] =
+      for {
+        secondary <- stage("read-secondary",
+          m => s"Error: failed to read ${spec.secondary.describe}: $m") {
+          spec.secondary.load(spark)
+        }
+        _ <- stage("validate-key",
+          m => s"Error: '${spec.key}' column not found: $m") {
+          MergeOps.requireKey(primary, spec.key, spec.primary.describe)
+          MergeOps.requireKey(secondary, spec.key, spec.secondary.describe)
+        }
+        // inside a stage: Spark analyzes transformations eagerly, so an
+        // incompatible shared-column type raises AnalysisException at
+        // PLAN time — it must follow the same notify+Left routing, not
+        // escape the fan-out loop
+        merged <- stage("plan-merge",
+          m => s"Error: failed to plan merge: $m") {
+          MergeOps.coalesceMerge(primary, secondary, spec.key)
+        }
+        // Unmatched report (O13/O14/O17): failures here are non-fatal —
+        // the reference continues to the CSV write when the Slack report
+        // errors (gule_test_job.py:195-199).
+        unmatchedCount = reportUnmatched(secondary, primary, spec, notifier)
+        // the row count for the success report is observed DURING the
+        // write (CsvSink Observation) — no re-read of the output artifact
+        csvAndRows <- stage("write-csv",
+          m => s"Error: failed to write CSV ${spec.destFile}: $m") {
+          CsvSink.writeSingleCsv(merged, spec.destDir, spec.destFile)
+        }
+      } yield {
+        val (csv, rows) = csvAndRows
+        notifier.notifySafe(
+          s"Success: wrote $rows rows to ${spec.destDir}/${spec.destFile}")
+        PipelineResult(rows, unmatchedCount, csv)
       }
-      secondary <- stage("read-secondary",
-        m => s"Error: failed to read ${spec.secondary.describe}: $m") {
-        spec.secondary.load(spark)
-      }
-      _ <- stage("validate-key",
-        m => s"Error: '${spec.key}' column not found: $m") {
-        MergeOps.requireKey(primary, spec.key, spec.primary.describe)
-        MergeOps.requireKey(secondary, spec.key, spec.secondary.describe)
-      }
-      // inside a stage: Spark analyzes transformations eagerly, so an
-      // incompatible shared-column type raises AnalysisException at
-      // PLAN time — it must follow the same notify+Left routing, not
-      // escape the fan-out loop
-      merged <- stage("plan-merge",
-        m => s"Error: failed to plan merge: $m") {
-        MergeOps.coalesceMerge(primary, secondary, spec.key)
-      }
-      // Unmatched report (O13/O14/O17): failures here are non-fatal —
-      // the reference continues to the CSV write when the Slack report
-      // errors (gule_test_job.py:195-199).
-      unmatchedCount = reportUnmatched(secondary, primary, spec, notifier)
-      // the row count for the success report is observed DURING the
-      // write (CsvSink Observation) — no re-read of the output artifact
-      csvAndRows <- stage("write-csv",
-        m => s"Error: failed to write CSV ${spec.destFile}: $m") {
-        CsvSink.writeSingleCsv(merged, spec.destDir, spec.destFile)
-      }
-    } yield {
-      val (csv, rows) = csvAndRows
-      notifier.notifySafe(
-        s"Success: wrote $rows rows to ${spec.destDir}/${spec.destFile}")
-      PipelineResult(rows, unmatchedCount, csv)
+
+    // The primary is parsed once per run: the unmatched report builds
+    // this cache and the CSV write reads it, instead of each parsing the
+    // file again. Released on every exit path.
+    stage("read-primary",
+      m => s"Error: failed to read ${spec.primary.describe}: $m") {
+      spec.primary.load(spark).persist()
+    }.flatMap { primary =>
+      try fromPrimary(primary)
+      finally primary.unpersist()
     }
   }
 
@@ -113,9 +124,9 @@ object Pipeline {
       }
       total
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         notifier.notifySafe(
-          s"Warning: unmatched-record report failed (non-fatal): ${e.getMessage}")
+          s"Warning: unmatched-record report failed (non-fatal): ${Notifier.describe(e)}")
         -1L
     }
 

@@ -33,8 +33,11 @@ trait RelationSource {
 
 /** A single JSON file containing one top-level ARRAY of objects — the
   * reference's S3 payload shape (pandas `orient='records'`,
-  * `gule_test_job.py:61`). A JSON array spanning lines requires Spark's
-  * `multiLine` mode (each file parsed as one value, not line-per-record).
+  * `gule_test_job.py:61`). A file larger than one of Spark's file splits
+  * is parsed split by split in parallel ([[JsonArraySplits]]); a
+  * one-split file, and any input the split reader does not take as-is,
+  * goes through Spark's `multiLine` mode (the file parsed as one value,
+  * in one task). Both give the same columns, types and rows.
   *
   * @param schema optional explicit schema. The reference preserves the
   *   JSON file's own column order (`gule_test_job.py:64-67`); Spark's
@@ -45,10 +48,11 @@ trait RelationSource {
   */
 final case class JsonArraySource(path: String, schema: Option[StructType] = None)
     extends RelationSource {
-  def load(spark: SparkSession): DataFrame = {
-    val r = spark.read.option("multiLine", value = true)
-    schema.fold(r)(r.schema).json(path)
-  }
+  def load(spark: SparkSession): DataFrame =
+    JsonArraySplits.read(spark, path, schema).getOrElse {
+      val r = spark.read.option("multiLine", value = true)
+      schema.fold(r)(r.schema).json(path)
+    }
   def describe: String = s"JSON $path"
 }
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, FloatType}
@@ -109,12 +109,23 @@ object MergeOps {
     secondary.join(primary.select(key), Seq(key), "left_anti")
 
   /** O14+O15: head-N sample plus total count for the unmatched report
-    * (`gule_test_job.py:173-185`). One action for the sample, one count.
+    * (`gule_test_job.py:173-185`), in one action: the count is observed
+    * on the sample's own pass. The top-N runs as per-partition top-N
+    * inside the action's result stage, so the observation sits in a
+    * result stage and counts each row exactly once under task retries.
+    *
+    * `explode(array(key))` passes each row through unchanged but hides
+    * the input's row count from AQE: knowing the input fits the limit,
+    * AQE would drop the limit and plan a global sort, whose range
+    * partitioner runs the observed plan a second time to sample it.
     */
   def reportSample(df: DataFrame, key: String, n: Int = 10): (Seq[Any], Long) = {
-    val total = df.count()
-    val sample = df.select(col(key)).orderBy(col(key)).limit(n)
+    val obs = Observation()
+    val sample = df.select(col(key))
+      .observe(obs, count(lit(1)).as("rows"))
+      .select(explode(array(col(key))).as(key))
+      .orderBy(col(key)).limit(n)
       .collect().map(_.get(0)).toIndexedSeq
-    (sample, total)
+    (sample, obs.get("rows").asInstanceOf[Long])
   }
 }

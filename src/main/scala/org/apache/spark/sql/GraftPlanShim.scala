@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Bridge between graft's custom logical plans and the public Dataset
   * API — the whole-operator sibling of [[GraftColumnShim]]. Spark 4
@@ -9,7 +10,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * [[graft.plans]] operators need: wrap a custom LogicalPlan as a
   * DataFrame, and read a DataFrame's analyzed plan to compose it into
   * one. Same technique and same footprint discipline as
-  * GraftColumnShim: nothing else internal is touched.
+  * GraftColumnShim: nothing else internal is touched, apart from the
+  * size estimate [[withSizeInBytes]] gives a plan over an RDD.
   */
 object GraftPlanShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -17,4 +19,15 @@ object GraftPlanShim {
 
   def analyzed(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed
+
+  /** `df`, when it reads one RDD (`LogicalRDD`), with a size estimate
+    * for join planning: Spark gives such a plan the largest size, so a
+    * join never broadcasts it. Any other `df` is returned as it is.
+    */
+  def withSizeInBytes(df: DataFrame, bytes: Long): DataFrame = analyzed(df) match {
+    case r: LogicalRDD =>
+      val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
+      ofRows(spark, r.copy()(spark, Some(Statistics(BigInt(bytes))), None))
+    case _ => df
+  }
 }

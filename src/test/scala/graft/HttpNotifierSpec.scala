@@ -51,6 +51,23 @@ class HttpNotifierSpec extends AnyFunSuite {
     }
   }
 
+  test("notifySafe lets an interrupt through (a cancelled send)") {
+    val interrupting = new Notifier {
+      def notify(text: String): Unit = throw new InterruptedException("send cancelled")
+    }
+    intercept[InterruptedException](interrupting.notifySafe("lost"))
+  }
+
+  test("a failing notifier stays non-fatal and warns as Class: message") {
+    val err = new java.io.ByteArrayOutputStream
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true, StandardCharsets.UTF_8))
+    try new FailingNotifier().notifySafe("lost")
+    finally System.setErr(saved)
+    assert(err.toString(StandardCharsets.UTF_8).trim ===
+      "[notifier] delivery failed (non-fatal): RuntimeException: notification endpoint unreachable")
+  }
+
   test("unreachable endpoint is non-fatal through notifySafe") {
     // port 1 on loopback: connection refused immediately
     new HttpNotifier("http://127.0.0.1:1/hook").notifySafe("lost")

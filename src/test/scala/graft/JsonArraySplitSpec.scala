@@ -1,0 +1,127 @@
+package graft
+
+import graft.io.{JsonArraySource, JsonArraySplits}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.StructType
+import org.scalatest.funsuite.AnyFunSuite
+
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+import java.util.zip.GZIPOutputStream
+
+/** The split JSON-array reader against Spark's own `multiLine` read of
+  * the same file. Split sizes are forced down to a few bytes, and the
+  * 1-byte size makes every byte offset a split boundary, so every entry
+  * state (inside a string, after a backslash, mid-escape, inside a
+  * multi-byte character, deep in a nested object) starts some split.
+  */
+class JsonArraySplitSpec extends AnyFunSuite with SparkSessionTestWrapper {
+
+  private val root = Files.createTempDirectory("graft-json-split-spec")
+
+  private def file(name: String, content: String): String = {
+    val p = root.resolve(name)
+    Files.write(p, content.getBytes(UTF_8))
+    p.toString
+  }
+
+  private def multiLine(path: String, schema: Option[StructType]): DataFrame = {
+    val r = spark.read.option("multiLine", value = true)
+    schema.fold(r)(r.schema).json(path)
+  }
+
+  private def rows(df: DataFrame): Map[String, Int] =
+    df.collect().toSeq.map(_.toString).groupBy(identity).map { case (k, v) => k -> v.size }
+
+  private val wellFormed: Seq[(String, String)] = Seq(
+    "pandas one-line" ->
+      """[{"id":1,"name":"a","score":1.5,"tags":["x","y"]},{"id":2,"name":null,"score":2.0,"tags":[]},{"id":3,"name":"c","score":null}]""",
+    "pretty-printed" ->
+      """[
+        |    {
+        |        "id": 1,
+        |        "name": "a",
+        |        "score": 1.5
+        |    },
+        |    {
+        |        "id": 2,
+        |        "name": "b b",
+        |        "score": -0.25
+        |    }
+        |]
+        |""".stripMargin,
+    "escaped quotes and backslash runs" ->
+      """[{"id":1,"s":"a\"b"},{"id":2,"s":"\\"},{"id":3,"s":"\\\""},{"id":4,"s":"\\\\\\"},{"id":5,"s":"x\\\\\"}{\""}]""",
+    "structure inside strings" ->
+      """[{"id":1,"s":"},{"},{"id":2,"s":"[{\"id\":9}]"},{"id":3,"s":"]]]}}}"},{"id":4,"s":"{{{[[["}]""",
+    "nested arrays of objects" ->
+      """[{"id":1,"items":[{"a":1,"b":[{"c":2}]},{"a":3}]},{"id":2,"items":[]},{"id":3,"items":[{"a":4,"b":[]}]}]""",
+    "unicode escapes and multi-byte characters" ->
+      ("[{\"id\":1,\"s\":\"caf\\u00e9 \u00e9\u2603\u65e5\u672c \ud83d\ude00\"}," +
+        "{\"id\":2,\"s\":\"\\ud83d\\ude00\\u2603\"},{\"id\":3,\"s\":\"q\\u0022\\u005c\"}]"),
+    "CRLF, tabs and whitespace runs" ->
+      "[\r\n\t{\"id\" :\t1 ,  \"s\":\"a\\tb\"}\r\n  ,\r\n\t\t{ \"id\":2,\"s\" : \"c\" }  \r\n\t]\r\n  \t",
+    "bare NaN and infinities" ->
+      """[{"id":1,"x":NaN},{"id":2,"x":1.5},{"id":3,"x":Infinity},{"id":4,"x":-Infinity}]""",
+    "one object larger than several splits" ->
+      s"""[{"id":1,"s":"a"},{"id":2,"big":"${"0123456789" * 12}","nest":{"k":[1,2,3]}},{"id":3,"s":"b"}]""")
+
+  private val splitSizes = Seq(1L, 2L, 7L, 16L)
+
+  wellFormed.zipWithIndex.foreach { case ((name, content), i) =>
+    test(s"split read equals multiLine: $name") {
+      val path = file(s"ok-$i.json", content)
+      val inferred = multiLine(path, None).schema
+      // an explicit schema in a column order inference would not give
+      val schemas = Seq(None, Some(StructType(inferred.fields.reverse)))
+      for (bytes <- splitSizes; schema <- schemas) withSplitBytes(bytes) {
+        val clue = s"split size $bytes, schema $schema"
+        val split = JsonArraySplits.read(spark, path, schema)
+        assert(split.isDefined, s"fell back to multiLine at $clue")
+        val expected = multiLine(path, schema)
+        assert(split.get.schema === expected.schema, clue)
+        assert(rows(split.get) === rows(expected), clue)
+      }
+    }
+  }
+
+  test("malformed or unsupported inputs fall back to multiLine") {
+    val malformed = Seq(
+      "[]", "[ ]", """{"id":1}""", """[{"id":1},{"id":2}""", """[{"id":1},{"id":tru}]""",
+      """[1,2,3]""", """[{"id":1},2]""", """[{"id":1}{"id":2}]""", """[{"id":1},,{"id":2}]""",
+      """[,{"id":1}]""", """[{"id":1},]""", """[{"id":1}] x""", """[{"id":1}][{"id":2}]""",
+      """x[{"id":1}]""", """[{"id":1}]]""", """[{"id":1,"s":'a}'},{"id":2}]""",
+      """[{"id":1,"s":"a"}}""", "\uFEFF[{\"id\":1},{\"id\":2}]",
+      "[{\"id\":1,\"s\":\"raw\ttab\"},{\"id\":2}]")
+    withSplitBytes(2) {
+      malformed.zipWithIndex.foreach { case (content, i) =>
+        val path = file(s"bad-$i.json", content)
+        assert(JsonArraySplits.read(spark, path, None).isEmpty, content)
+        assert(JsonArraySource(path).load(spark).schema === multiLine(path, None).schema, content)
+      }
+      val latin1 = root.resolve("latin1.json")
+      Files.write(latin1, "[{\"id\":1,\"s\":\"café\"},{\"id\":2}]".getBytes("ISO-8859-1"))
+      assert(JsonArraySplits.read(spark, latin1.toString, None).isEmpty, "not UTF-8")
+      val gz = root.resolve("arr.json.gz")
+      val out = new GZIPOutputStream(Files.newOutputStream(gz))
+      try out.write("""[{"id":1},{"id":2},{"id":3}]""".getBytes(UTF_8)) finally out.close()
+      assert(JsonArraySplits.read(spark, gz.toString, None).isEmpty, "compressed")
+      assert(JsonArraySource(gz.toString).load(spark).count() === 3)
+    }
+    // default sizes: a small file is one split and keeps the multiLine read
+    assert(JsonArraySplits.read(spark, file("one-split.json", """[{"id":1},{"id":2}]"""), None).isEmpty)
+  }
+
+  test("JsonArraySource reads a multi-split file through the split path") {
+    val path = file("source.json", wellFormed.head._2)
+    withSplitBytes(8) {
+      val got = JsonArraySource(path).load(spark)
+      assert(got.queryExecution.logical.toString.contains("LogicalRDD"), "split path not taken")
+      // sized like Spark's scan of the file, so joins can still broadcast it
+      assert(got.queryExecution.optimizedPlan.stats.sizeInBytes ===
+        multiLine(path, None).queryExecution.optimizedPlan.stats.sizeInBytes)
+      assert(rows(got) === rows(multiLine(path, None)))
+    }
+    assert(Paths.get(path).toFile.length() > 8)
+  }
+}

@@ -1,7 +1,8 @@
 package graft
 
 import graft.ops.MergeOps
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
@@ -93,6 +94,26 @@ class MergeOpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val (sample, total) = MergeOps.reportSample(many, "id", 10)
     assert(total === 21L)
     assert(sample === (100L to 109L))
+  }
+
+  test("reportSample's one action gives what a count plus a sample gave") {
+    def twoActions(d: DataFrame, key: String, n: Int): (Seq[Any], Long) =
+      (d.select(col(key)).orderBy(col(key)).limit(n).collect().map(_.get(0)).toIndexedSeq,
+        d.count())
+    val strSchema = StructType(Seq(StructField("k", StringType), StructField("v", IntegerType)))
+    val many = df(sSchema, (120L to 100L by -1L).map(i => Row(i, 1.0, "x")): _*).repartition(3)
+    val inputs: Seq[(String, DataFrame, String)] = Seq(
+      ("empty relation", df(sSchema), "id"),
+      ("empty after a filter", many.filter(col("id") < 0), "id"),
+      ("fewer than n rows", many.filter(col("id") < 104), "id"),
+      ("more than n rows", many, "id"),
+      ("null keys", df(sSchema, Row(null, 1.0, "a"), Row(5L, 2.0, "b"), Row(null, 3.0, "c"),
+        Row(3L, 4.0, "d")), "id"),
+      ("string keys", df(strSchema, Seq("b", "a", "é", "B", "aa", null).zipWithIndex
+        .map { case (k, i) => Row(k, i) }: _*).repartition(2), "k"),
+      ("an unmatched anti-join", MergeOps.unmatched(secondary, primary, "id"), "id"))
+    for ((name, d, key) <- inputs; n <- Seq(1, 10))
+      assert(MergeOps.reportSample(d, key, n) === twoActions(d, key, n), s"$name, n=$n")
   }
 
   test("nanToNull leaves non-float columns untouched and nulls NaNs") {

@@ -5,7 +5,9 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
+import java.util.zip.GZIPOutputStream
 import scala.jdk.CollectionConverters._
 
 /** End-to-end tests of the reference pipeline's control flow
@@ -48,9 +50,17 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     destDir = s"$root/out",
     destFile = destFile)
 
+  /** Runs on an empty cache; the run must leave no cached relation behind. */
+  private def runChecked(s: Pipeline.PipelineSpec, notifier: Notifier) = {
+    spark.catalog.clearCache()
+    val result = Pipeline.run(spark, s, notifier)
+    assert(spark.sharedState.cacheManager.isEmpty, s"run left a cached relation: $result")
+    result
+  }
+
   test("happy path: merge, exact-name single CSV, success + unmatched notifications") {
     val notifier = new RecordingNotifier
-    val result = Pipeline.run(spark, spec("merged.csv"), notifier)
+    val result = runChecked(spec("merged.csv"), notifier)
     assert(result.isRight)
     val r = result.toOption.get
     assert(r.mergedRows === 3)
@@ -79,7 +89,7 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
   test("fail-fast: unreadable primary -> Left(read-primary) + error notification") {
     val notifier = new RecordingNotifier
     val bad = spec("x.csv").copy(primary = JsonArraySource(s"$root/nope.json"))
-    val result = Pipeline.run(spark, bad, notifier)
+    val result = runChecked(bad, notifier)
     assert(result.left.toOption.map(_.stage).contains("read-primary"))
     assert(notifier.messages.exists(_.startsWith("Error: failed to read JSON")))
   }
@@ -87,15 +97,89 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
   test("fail-fast: missing key column -> Left(validate-key) + error notification") {
     val noId = writeJson("noid.json", """[{"name": "x"}]""")
     val notifier = new RecordingNotifier
-    val result = Pipeline.run(spark, spec("y.csv").copy(primary = JsonArraySource(noId)), notifier)
+    val result = runChecked(spec("y.csv").copy(primary = JsonArraySource(noId)), notifier)
     assert(result.left.toOption.map(_.stage).contains("validate-key"))
     assert(notifier.messages.exists(_.contains("'id' column not found")))
   }
 
   test("a failing notifier is non-fatal (reference gule_test_job.py:195-199)") {
-    val result = Pipeline.run(spark, spec("nofail.csv"), new FailingNotifier)
+    val result = runChecked(spec("nofail.csv"), new FailingNotifier)
     assert(result.isRight)
     assert(Files.exists(Paths.get(s"$root/out/nofail.csv")))
+  }
+
+  test("fail-fast: blocked destination -> Left(write-csv), cache released") {
+    val blocked = writeJson("blocked", "a plain file where the destination directory goes")
+    val notifier = new RecordingNotifier
+    val result = runChecked(spec("z.csv").copy(destDir = blocked), notifier)
+    assert(result.left.toOption.map(_.stage).contains("write-csv"))
+    assert(notifier.messages.exists(_.startsWith("Error: failed to write CSV z.csv")))
+  }
+
+  test("back-to-back runs (the tenant fan-out shape) leave no cache behind") {
+    spark.catalog.clearCache()
+    val first = Pipeline.run(spark, spec("fan1.csv"), new RecordingNotifier)
+    val second = Pipeline.run(spark, spec("fan2.csv"), new RecordingNotifier)
+    assert(first.map(_.mergedRows) === Right(3L))
+    assert(second.map(_.mergedRows) === Right(3L))
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("an interrupt inside a notification is not swallowed, and the cache is released") {
+    val interrupting = new Notifier {
+      def notify(text: String): Unit = throw new InterruptedException("cancelled")
+    }
+    spark.catalog.clearCache()
+    intercept[InterruptedException](Pipeline.run(spark, spec("int.csv"), interrupting))
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  // Malformed and unusual primaries, with file splits forced to 4 bytes
+  // so that the split reader, and its fallback to multiLine, is what runs.
+  private def runSmallSplits(name: String, content: Array[Byte]) = {
+    val p = Paths.get(root, name)
+    Files.write(p, content)
+    val notifier = new RecordingNotifier
+    val result = withSplitBytes(4) {
+      runChecked(spec(s"$name.csv").copy(primary = JsonArraySource(p.toString)), notifier)
+    }
+    (p.toString, result, notifier.messages)
+  }
+
+  private def missingId(path: String) = Left(Pipeline.PipelineError("validate-key",
+    s"IllegalArgumentException: requirement failed: Error: 'id' column not found in JSON $path data"))
+
+  test("malformed primary with small splits: empty array, truncated array, bad literal") {
+    for ((name, content) <- Seq(
+        "empty.json" -> "[   \n\n   ]\n",
+        "truncated.json" -> """[{"id": 1, "qty": 1.0}, {"id": 2, "qty": 2""",
+        "literal.json" -> """[{"id": 1, "ok": true}, {"id": 2, "ok": tru}]""")) {
+      val (path, result, messages) = runSmallSplits(name, content.getBytes(UTF_8))
+      assert(result === missingId(path), name)
+      assert(messages.exists(_.contains("'id' column not found")), name)
+    }
+  }
+
+  test("a primary read in small splits lands the same CSV as a one-split read") {
+    val (_, split, _) = runSmallSplits("split.json", Files.readAllBytes(Paths.get(primaryJson)))
+    val whole = runChecked(spec("whole.csv"), new RecordingNotifier)
+    assert(split.map(r => (r.mergedRows, r.unmatchedRows)) === Right((3L, 2L)))
+    def lines(f: String) = Files.readAllLines(Paths.get(s"$root/out/$f")).asScala.sorted
+    assert(lines("split.json.csv") === lines("whole.csv"))
+  }
+
+  test("top-level object or gzip primary with small splits reads as multiLine does") {
+    val (_, obj, _) = runSmallSplits("object.json",
+      """{"id": 2, "qty": 3.0, "note": "top-level object"}""".getBytes(UTF_8))
+    assert(obj.map(r => (r.mergedRows, r.unmatchedRows)) === Right((1L, 3L)))
+    val lines = Files.readAllLines(Paths.get(s"$root/out/object.json.csv")).asScala
+    assert(lines === Seq("id,note,qty,region", "2,top-level object,3.0,west"))
+
+    val gz = new java.io.ByteArrayOutputStream
+    val zip = new GZIPOutputStream(gz)
+    try zip.write(Files.readAllBytes(Paths.get(primaryJson))) finally zip.close()
+    val (_, gzipped, _) = runSmallSplits("primary.json.gz", gz.toByteArray)
+    assert(gzipped.map(r => (r.mergedRows, r.unmatchedRows)) === Right((3L, 2L)))
   }
 
   test("quoted embedded newlines survive the CSV round trip and don't inflate counts") {

@@ -8,6 +8,18 @@ import org.apache.spark.sql.SparkSession
   */
 trait SparkSessionTestWrapper {
   lazy val spark: SparkSession = SparkSessionTestWrapper.shared
+
+  /** Runs `body` with Spark's file splits forced down to `bytes` bytes. */
+  def withSplitBytes[A](bytes: Long)(body: => A): A = {
+    val keys = Seq("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    val before = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(spark.conf.set(_, bytes))
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
 
 object SparkSessionTestWrapper {
