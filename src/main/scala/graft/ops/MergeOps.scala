@@ -28,10 +28,12 @@ import org.apache.spark.sql.types.{DoubleType, FloatType}
   *
   * The reference executes all of this as a single-threaded pandas row
   * loop on the driver (O(N*M) nested loop). Here it is one left-outer
-  * join that Catalyst/AQE plans as broadcast-hash or sort-merge: at
-  * 100 TB the dimension side is deduped (one shuffle of the SMALL side
-  * only, or none when broadcast), and the fact side streams through
-  * without collecting anything to the driver.
+  * join with a broadcast dimension side: the secondary is deduped (one
+  * shuffle of the secondary side) and broadcast, and the fact side
+  * streams through without collecting anything to the driver. When the
+  * secondary is the larger input it is first cut down to the keys the
+  * primary holds (a semi-join reduction), so the dedup shuffle and the
+  * broadcast carry only rows that can match.
   */
 object MergeOps {
 
@@ -62,7 +64,8 @@ object MergeOps {
     * default ASC is NULLS FIRST while the DuckDB oracle's ASC is NULLS
     * LAST, so the explicit direction keeps the chosen row identical in
     * both engines when an ordering column is NULL. The window shuffles
-    * only the (small) secondary side.
+    * the secondary side only; in the merge, when the secondary is the
+    * larger input, only its rows whose key the primary holds.
     */
   def firstMatch(secondary: DataFrame, key: String): DataFrame = {
     val ord: Seq[Column] =
@@ -81,12 +84,27 @@ object MergeOps {
     * a key-unique build side). The deduped secondary is broadcast: the
     * reference's secondary is a dimension table, and at scale this turns
     * the merge into a map-side join, zero shuffle of the fact side.
+    *
+    * When the planner's size estimate of the secondary exceeds the
+    * primary's, the secondary is first semi-joined to the primary's keys
+    * ([[byPrimaryKey]]), so the first-match window and the broadcast see
+    * only rows that can match. The result is the same: first match is
+    * decided per key, so dropping all of a key's rows changes no other
+    * key's pick, and a key the primary lacks adds nothing to a left-outer
+    * join. When the primary is the larger input, broadcasting its keys
+    * costs more than the smaller secondary saves, so the plan is left as
+    * it is; it is also left for a streaming primary, whose keys are not
+    * known when the stream-static plan is built.
     */
   def coalesceMerge(primary: DataFrame, secondary: DataFrame, key: String): DataFrame = {
     requireKey(primary, key, "S3")
     requireKey(secondary, key, "RDS")
+    val candidates =
+      if (!primary.isStreaming && sizeInBytes(secondary) > sizeInBytes(primary))
+        byPrimaryKey(secondary, primary, key, matched = true)
+      else secondary
     val p = nanToNull(primary).alias("p")
-    val s = broadcast(firstMatch(nanToNull(secondary), key)).alias("s")
+    val s = broadcast(firstMatch(nanToNull(candidates), key)).alias("s")
 
     val pCols = primary.schema.fieldNames.toIndexedSeq
     val sCols = secondary.schema.fieldNames.toIndexedSeq
@@ -102,11 +120,27 @@ object MergeOps {
     p.join(s, col(s"p.$key") === col(s"s.$key"), "left_outer").select(out: _*)
   }
 
+  /** The planner's size estimate of `df`, the number join planning
+    * compares with the broadcast threshold.
+    */
+  private def sizeInBytes(df: DataFrame): BigInt =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes
+
+  /** One half of the split of `secondary` by "key appears in the
+    * primary": the rows whose key does (`matched`, a semi-join) or does
+    * not (an anti-join) equal some primary key, under the left-outer
+    * join's equality and type coercion. The two halves are disjoint and
+    * together hold every secondary row; the key column comes first.
+    */
+  def byPrimaryKey(
+      secondary: DataFrame, primary: DataFrame, key: String, matched: Boolean): DataFrame =
+    secondary.join(primary.select(key), Seq(key), if (matched) "left_semi" else "left_anti")
+
   /** O13: secondary rows whose key never appears in the primary
     * (`~isin`, `gule_test_job.py:166-167`) as a distributed anti-join.
     */
   def unmatched(secondary: DataFrame, primary: DataFrame, key: String): DataFrame =
-    secondary.join(primary.select(key), Seq(key), "left_anti")
+    byPrimaryKey(secondary, primary, key, matched = false)
 
   /** O14+O15: head-N sample plus total count for the unmatched report
     * (`gule_test_job.py:173-185`), in one action: the count is observed

@@ -9,7 +9,8 @@ import org.apache.spark.sql.types.DoubleType
   * (SURVEY.md §7.2): `orders` plays the primary ("S3 JSON") source,
   * `customer` the secondary ("RDS") source, joined on custkey renamed to
   * `id`, with an overlapping `balance` column to exercise the cell-level
-  * precedence of `gule_test_job.py:135-152`.
+  * precedence of `gule_test_job.py:135-152`. `merge_enrich` swaps the
+  * roles, so the secondary is the larger input.
   */
 object MergeQueries {
 
@@ -61,28 +62,68 @@ object MergeQueries {
        |UNION ALL
        |SELECT c_custkey AS id, upper(c_name) AS cname, c_acctbal + 1.0 AS balance, c_mktsegment AS segment FROM customer""".stripMargin
 
-  private def mergeOracle(secSql: String) =
-    s"""WITH p AS ($primarySql),
+  /** The merge's oracle shape: the first match per `id` (ascending by the
+    * secondary's other columns `sCols.tail`, DuckDB's NULLS LAST), left
+    * joined to the primary and projected by `select`.
+    */
+  private def mergeOracle(pSql: String, secSql: String, sCols: Seq[String], select: String) =
+    s"""WITH p AS ($pSql),
        |s0 AS ($secSql),
-       |s AS (SELECT id, cname, balance, segment FROM (
-       |        SELECT s0.*, row_number() OVER (PARTITION BY id ORDER BY cname, balance, segment) AS rn
+       |s AS (SELECT ${sCols.mkString(", ")} FROM (
+       |        SELECT s0.*, row_number() OVER (PARTITION BY id ORDER BY ${sCols.tail.mkString(", ")}) AS rn
        |        FROM s0) t
        |      WHERE rn = 1)
-       |SELECT p.id, p.o_orderkey, COALESCE(p.balance, s.balance) AS balance,
-       |       p.priority, s.cname, s.segment
+       |SELECT $select
        |FROM p LEFT JOIN s ON p.id = s.id""".stripMargin
+
+  /** Orders enriched from a customer-shaped secondary. */
+  private def ordersOracle(secSql: String) =
+    mergeOracle(primarySql, secSql, Seq("id", "cname", "balance", "segment"),
+      """p.id, p.o_orderkey, COALESCE(p.balance, s.balance) AS balance,
+        |       p.priority, s.cname, s.segment""".stripMargin)
 
   /** The merge oracle over the duplicate-free secondary — shared with
     * pipeline_e2e, whose CSV round-trip must reproduce these values.
     */
-  def coalesceOracle: String = mergeOracle(secondarySql)
+  def coalesceOracle: String = ordersOracle(secondarySql)
+
+  /** The merge with the larger input as its secondary: every second
+    * customer (the primary, with the balance of BUILDING customers
+    * missing) enriched from orders, whose keys repeat. The primary holds
+    * customers without orders, and orders of customers it lacks, so
+    * MergeOps.coalesceMerge's semi-join reduction drops rows here.
+    */
+  private def enrichPrimary(spark: SparkSession, dir: String): DataFrame =
+    Tables.load(spark, dir, "customer").filter(col("c_custkey") % 2 === 0).select(
+      col("c_custkey").as("id"),
+      col("c_name").as("cname"),
+      when(col("c_mktsegment") === "BUILDING", lit(null).cast(DoubleType))
+        .otherwise(col("c_acctbal")).as("balance"))
+
+  private def enrichSecondary(spark: SparkSession, dir: String): DataFrame =
+    Tables.load(spark, dir, "orders").select(
+      col("o_custkey").as("id"),
+      col("o_orderkey"),
+      col("o_totalprice").as("balance"),
+      col("o_orderpriority").as("priority"))
+
+  private val enrichOracle = mergeOracle(
+    """SELECT c_custkey AS id, c_name AS cname,
+      |       CASE WHEN c_mktsegment = 'BUILDING' THEN NULL ELSE c_acctbal END AS balance
+      |FROM customer WHERE c_custkey % 2 = 0""".stripMargin,
+    "SELECT o_custkey AS id, o_orderkey, o_totalprice AS balance, o_orderpriority AS priority FROM orders",
+    Seq("id", "o_orderkey", "balance", "priority"),
+    "p.id, p.cname, COALESCE(p.balance, s.balance) AS balance, s.o_orderkey, s.priority")
 
   val queries: Seq[Q] = Seq(
-    Q("merge_coalesce", mergeOracle(secondarySql)) { (s, dir) =>
+    Q("merge_coalesce", coalesceOracle) { (s, dir) =>
       MergeOps.coalesceMerge(primary(s, dir), secondary(s, dir), "id")
     },
-    Q("merge_firstmatch", mergeOracle(secondaryDupSql)) { (s, dir) =>
+    Q("merge_firstmatch", ordersOracle(secondaryDupSql)) { (s, dir) =>
       MergeOps.coalesceMerge(primary(s, dir), secondaryDup(s, dir), "id")
+    },
+    Q("merge_enrich", enrichOracle) { (s, dir) =>
+      MergeOps.coalesceMerge(enrichPrimary(s, dir), enrichSecondary(s, dir), "id")
     },
     Q("merge_unmatched",
       s"""WITH p AS ($primarySql), s AS ($secondarySql)

@@ -1,6 +1,7 @@
 package graft
 
 import graft.io.{JsonArraySource, ParquetSource}
+import graft.ops.MergeOps
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -32,17 +33,18 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       |  {"id": 5, "qty": 50.0, "note": "unmatched-primary"}
       |]""".stripMargin)
 
-  private val secondaryPath = {
+  private def writeSecondary(name: String, rows: Seq[Row]): String = {
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("qty", DoubleType),
       StructField("region", StringType)))
-    val df = spark.createDataFrame(Seq(
-      Row(1L, 111.0, "east"), Row(2L, 222.0, "west"),
-      Row(7L, 777.0, "north"), Row(8L, 888.0, "south")).asJava, schema)
-    val p = s"$root/secondary.parquet"
-    df.write.mode("overwrite").parquet(p)
+    val p = s"$root/$name.parquet"
+    spark.createDataFrame(rows.asJava, schema).write.mode("overwrite").parquet(p)
     p
   }
+
+  private val secondaryPath = writeSecondary("secondary", Seq(
+    Row(1L, 111.0, "east"), Row(2L, 222.0, "west"),
+    Row(7L, 777.0, "north"), Row(8L, 888.0, "south")))
 
   private def spec(destFile: String) = Pipeline.PipelineSpec(
     primary = JsonArraySource(primaryJson),
@@ -180,6 +182,105 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     try zip.write(Files.readAllBytes(Paths.get(primaryJson))) finally zip.close()
     val (_, gzipped, _) = runSmallSplits("primary.json.gz", gz.toByteArray)
     assert(gzipped.map(r => (r.mergedRows, r.unmatchedRows)) === Right((3L, 2L)))
+  }
+
+  // Failure matrix of the merge's inputs. Each secondary outweighs its
+  // primary in the planner's estimate, so the merge's semi-join
+  // reduction is what runs.
+  private def matrixSpec(name: String, primary: String, secondary: Seq[Row]) = {
+    val s = spec("merged.csv").copy(
+      primary = JsonArraySource(writeJson(s"$name.json", primary)),
+      secondary = ParquetSource(writeSecondary(s"$name-secondary", secondary)),
+      destDir = s"$root/matrix-$name")
+    def size(df: org.apache.spark.sql.DataFrame) = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val (p, sec) = (s.primary.load(spark), s.secondary.load(spark))
+    assert(size(sec) > size(p), s"$name: the secondary must be the larger input")
+    s
+  }
+
+  /** The destination holds exactly `files`: nothing half-written, no staging left. */
+  private def assertDest(s: Pipeline.PipelineSpec, files: Seq[String]) = {
+    val dir = Paths.get(s.destDir)
+    val found =
+      if (!Files.exists(dir)) Nil
+      else {
+        val l = Files.list(dir)
+        try l.iterator.asScala.map(_.getFileName.toString).toSeq.sorted finally l.close()
+      }
+    assert(found === files, s"destination ${s.destDir}")
+  }
+
+  private def csvLines(s: Pipeline.PipelineSpec) =
+    Files.readAllLines(Paths.get(s.destDir, s.destFile)).asScala.toSeq
+
+  private def ranReduced(s: Pipeline.PipelineSpec) = MergeReductionSpec.ranReduced(
+    MergeOps.coalesceMerge(s.primary.load(spark), s.secondary.load(spark), s.key))
+
+  test("failure matrix: an empty secondary lands every primary row unfilled") {
+    val s = matrixSpec("empty-secondary", """[{"id": 1, "qty": 1.5}, {"id": 2}]""", Nil)
+    assert(ranReduced(s))
+    val notifier = new RecordingNotifier
+    val result = runChecked(s, notifier)
+    assert(result.map(r => (r.mergedRows, r.unmatchedRows)) === Right((2L, 0L)))
+    assert(csvLines(s) === Seq("id,qty,region", "1,1.5,", "2,,"))
+    assert(notifier.messages.size === 1 && notifier.messages.head.startsWith("Success"))
+    assertDest(s, Seq("merged.csv"))
+  }
+
+  test("failure matrix: duplicate primary and secondary keys keep primary rows and the first match") {
+    val s = matrixSpec("duplicate-keys",
+      """[{"id": 1, "qty": null, "note": "a"}, {"id": 1, "qty": 5.0, "note": "b"},
+        | {"id": 2, "note": "c"}, {"id": 2, "note": "c"}, {"id": 3, "note": "d"}]""".stripMargin,
+      Seq(Row(1L, 30.0, "z"), Row(1L, 10.0, "y"), Row(1L, null, "a"),
+        Row(2L, 7.0, "w"), Row(2L, 7.0, "v")) ++
+        (10L to 60L).map(i => Row(i, i.toDouble, s"r$i")))
+    assert(ranReduced(s))
+    val notifier = new RecordingNotifier
+    val result = runChecked(s, notifier)
+    assert(result.map(r => (r.mergedRows, r.unmatchedRows)) === Right((5L, 51L)))
+    assert(csvLines(s).head === "id,note,qty,region")
+    assert(csvLines(s).tail.sorted ===
+      Seq("1,a,10.0,y", "1,b,5.0,y", "2,c,7.0,v", "2,c,7.0,v", "3,d,,"))
+    assert(notifier.messages.map(_.takeWhile(_ != ' ')) === Seq("Unmatched", "Success:"))
+    assertDest(s, Seq("merged.csv"))
+  }
+
+  private val clashSecondary =
+    Seq(Row(1L, 111.0, "east"), Row(2L, 222.0, "west")) ++
+      (10L to 40L).map(i => Row(i, i.toDouble, s"r$i"))
+
+  test("failure matrix: a string column meeting a double one is cast to double") {
+    val s = matrixSpec("clash-numeric", """[{"id": 1, "qty": "10.5"}, {"id": 2, "qty": null}]""",
+      clashSecondary)
+    assert(ranReduced(s))
+    val result = runChecked(s, new RecordingNotifier)
+    assert(result.map(_.mergedRows) === Right(2L))
+    assert(csvLines(s) === Seq("id,qty,region", "1,10.5,east", "2,222.0,west"))
+    assertDest(s, Seq("merged.csv"))
+  }
+
+  test("failure matrix: a non-numeric string meeting a double column fails the write, nothing lands") {
+    val s = matrixSpec("clash-text", """[{"id": 1, "qty": "n/a"}, {"id": 2, "qty": "2.0"}]""",
+      clashSecondary)
+    assert(ranReduced(s))
+    val notifier = new RecordingNotifier
+    val result = runChecked(s, notifier)
+    assert(result.left.toOption.map(_.stage).contains("write-csv"))
+    assert(result.left.toOption.exists(_.message.contains("CAST_INVALID_INPUT")))
+    assert(notifier.messages.count(_.startsWith("Error")) === 1)
+    assert(notifier.messages.last.startsWith("Error: failed to write CSV merged.csv"))
+    assertDest(s, Nil)
+  }
+
+  test("failure matrix: a shared column with no common type fails at plan-merge") {
+    val s = matrixSpec("clash-boolean", """[{"id": 1, "qty": true}, {"id": 2, "qty": false}]""",
+      clashSecondary)
+    val notifier = new RecordingNotifier
+    val result = runChecked(s, notifier)
+    assert(result.left.toOption.map(_.stage).contains("plan-merge"))
+    assert(notifier.messages.size === 1)
+    assert(notifier.messages.head.startsWith("Error: failed to plan merge"))
+    assertDest(s, Nil)
   }
 
   test("quoted embedded newlines survive the CSV round trip and don't inflate counts") {

@@ -197,6 +197,19 @@ class PlanSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(plan.contains("LeftOuter"), "merge must stay a left-outer join")
   }
 
+  test("the merge semi-joins a larger secondary to the primary's keys, and only then") {
+    import MergeReductionSpec.{hasBroadcastLeftOuter, hasSemiJoin, ranReduced}
+    def merge(name: String) = SparkEntry.queries(name)(spark, dir)
+    val enrich = merge("merge_enrich")
+    val plan = enrich.queryExecution.executedPlan.toString
+    assert(ranReduced(enrich), s"merge_enrich has no LeftSemi below its window:\n$plan")
+    assert(hasBroadcastLeftOuter(enrich), s"merge_enrich lost its broadcast left-outer join:\n$plan")
+    Seq("merge_coalesce", "merge_firstmatch").foreach { name =>
+      assert(!hasSemiJoin(merge(name)), s"$name, whose secondary is the smaller input, plans a LeftSemi")
+    }
+    spark.catalog.clearCache()
+  }
+
   test("column pruning reaches the scans through projections and conversions") {
     // events: the wide props column must not be read by window aggs
     // (the nanos->timestamp conversion in Tables.load must not block
