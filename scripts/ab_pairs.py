@@ -13,13 +13,17 @@ read from the JSON object on the last line of its stdout.
 
 For every metric it prints each side's median and quartiles, the
 parent's interquartile range, the change's relative difference, how many
-pairs the change won (ties count for neither side) and whether a gain
-claim holds: the change wins at least nine tenths of the pairs and the
-medians differ, in the better direction, by more than the parent's
-interquartile range. Metrics that BENCHMARK.json bounds also show
-whether the change's median is worse than the parent's by more than the
-bound. Runs with failed operations are reported, and their pair is left
-out of the statistics.
+of all the pairs run the change won (ties count for neither side) and
+whether a gain claim holds: the change wins at least nine tenths of the
+pairs run, the medians differ, in the better direction, by more than the
+parent's interquartile range, and the change failed no more operations
+than the parent. A change run that errored or failed operations counts
+as a lost pair; medians and quartiles are taken over each side's clean
+runs. Metrics that BENCHMARK.json bounds also show whether the change's
+median is worse than the parent's by more than the bound; where the
+parent's interquartile range, relative to its median, is wider than the
+bound, the bound reads `unresolved` unless every change run beats every
+parent run.
 """
 import argparse
 import json
@@ -54,6 +58,8 @@ def run_once(checkout, workload, seed, seconds, trace):
 
 
 def quartiles(xs):
+    if not xs:
+        return (float("nan"),) * 3
     if len(xs) < 2:
         return xs[0], xs[0], xs[0]
     q1, med, q3 = statistics.quantiles(xs, n=4, method="inclusive")
@@ -66,16 +72,22 @@ def metric_specs(bench):
             for m in bench.get("end_to_end", []) + bench.get("per_layer", [])}
 
 
-def summarize(name, better, bound, pairs):
-    par = [p for p, _ in pairs]
-    chg = [c for _, c in pairs]
+def summarize(name, better, bound, pairs, more_failures):
+    """`pairs`: (parent value, change value) for every pair run, None for
+    a side whose run errored, failed operations or lacks the metric.
+    `more_failures`: the change failed more operations than the parent."""
+    par = [p for p, _ in pairs if p is not None]
+    chg = [c for _, c in pairs if c is not None]
     pq1, pmed, pq3 = quartiles(par)
     cq1, cmed, cq3 = quartiles(chg)
     iqr = pq3 - pq1
     sign = -1.0 if better == "lower" else 1.0
-    wins = sum(1 for p, c in pairs if sign * (c - p) > 0)
+    # a change run without a value loses its pair; a parent run without
+    # one leaves the pair won by neither side
+    wins = sum(1 for p, c in pairs
+               if p is not None and c is not None and sign * (c - p) > 0)
     gain = sign * (cmed - pmed)
-    claim = wins >= 0.9 * len(pairs) and gain > iqr
+    claim = wins >= 0.9 * len(pairs) and gain > iqr and not more_failures
     rel = (cmed - pmed) / pmed if pmed else float("nan")
     row = {"metric": name, "better": better, "pairs": len(pairs),
            "parent": {"median": pmed, "q1": pq1, "q3": pq3, "runs": par},
@@ -83,8 +95,18 @@ def summarize(name, better, bound, pairs):
            "parent_iqr": iqr, "relative": rel, "change_wins": wins,
            "claim_holds": claim}
     if bound is not None:
+        separated = bool(par) and len(chg) == len(pairs) and all(
+            sign * (c - p) > 0 for c in chg for p in par)
+        if not par or not chg:
+            verdict = "unresolved"
+        elif separated:
+            verdict = "ok"
+        elif not pmed or iqr / abs(pmed) > bound:
+            verdict = "unresolved"
+        else:
+            verdict = "WORSE" if -sign * rel > bound else "ok"
         row["bound"] = bound
-        row["within_bound"] = not (-sign * rel > bound)
+        row["bound_verdict"] = verdict
     return row
 
 
@@ -96,7 +118,7 @@ def print_table(summary):
     rows = []
     for s in summary:
         bound = ("" if "bound" not in s else
-                 ("ok" if s["within_bound"] else "WORSE") + f" ({s['bound']:g})")
+                 f"{s['bound_verdict']} ({s['bound']:g})")
         rows.append((s["metric"], side(s["parent"]), side(s["change"]),
                      f"{s['parent_iqr']:.4g}", f"{100 * s['relative']:+.1f}%",
                      f"{s['change_wins']}/{s['pairs']}",
@@ -137,20 +159,32 @@ def main():
             print(f"seed {seed} {side:6s} {status}", flush=True)
         runs.append(pair)
 
-    def usable(res):
+    def clean(res):
         return "metrics" in res and res["failed"] == 0
-    good = [r for r in runs if usable(r["parent"]) and usable(r["change"])]
-    bad = len(runs) - len(good)
-    names = [n for n in specs if good and n in good[0]["parent"]["metrics"]
-             and n in good[0]["change"]["metrics"]]
-    summary = []
-    for n in names:
-        pairs = [(r["parent"]["metrics"][n], r["change"]["metrics"][n]) for r in good
-                 if n in r["parent"]["metrics"] and n in r["change"]["metrics"]]
-        summary.append(summarize(n, *specs[n], pairs))
 
-    print(f"\n{a.workload}: {len(good)} usable pairs of {len(runs)}"
-          + (f" ({bad} left out: a run errored or had failed operations)" if bad else ""))
+    def failures(side):
+        # an errored run counts as one failure, whatever it attempted
+        return sum(r[side].get("failed", 1) for r in runs)
+
+    par_failed, chg_failed = failures("parent"), failures("change")
+    seen = [r[side]["metrics"] for r in runs for side in ("parent", "change")
+            if clean(r[side])]
+    names = [n for n in specs if any(n in m for m in seen)]
+
+    def value(res, n):
+        return res["metrics"].get(n) if clean(res) else None
+
+    summary = [summarize(n, *specs[n],
+                         [(value(r["parent"], n), value(r["change"], n)) for r in runs],
+                         chg_failed > par_failed)
+               for n in names]
+
+    unclean = {side: sum(1 for r in runs if not clean(r[side]))
+               for side in ("parent", "change")}
+    print(f"\n{a.workload}: {len(runs)} pairs; runs errored or with failed operations:"
+          f" parent {unclean['parent']}, change {unclean['change']};"
+          f" failed operations (an errored run counts one): parent {par_failed},"
+          f" change {chg_failed}")
     print_table(summary)
     if a.out:
         Path(a.out).write_text(json.dumps(

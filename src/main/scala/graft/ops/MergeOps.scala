@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DoubleType, FloatType}
 
 /** The reference pipeline's relational core, re-expressed as distributed
@@ -87,21 +88,24 @@ object MergeOps {
     *
     * When the planner's size estimate of the secondary exceeds the
     * primary's, the secondary is first semi-joined to the primary's keys
-    * ([[byPrimaryKey]]), so the first-match window and the broadcast see
+    * (the same equality and coercion as the left-outer join and as
+    * [[unmatched]]), so the first-match window and the broadcast see
     * only rows that can match. The result is the same: first match is
     * decided per key, so dropping all of a key's rows changes no other
     * key's pick, and a key the primary lacks adds nothing to a left-outer
     * join. When the primary is the larger input, broadcasting its keys
     * costs more than the smaller secondary saves, so the plan is left as
-    * it is; it is also left for a streaming primary, whose keys are not
-    * known when the stream-static plan is built.
+    * it is. It is also left when the secondary's size is unknown (a JDBC
+    * table, an RDD: the planner's placeholder `spark.sql.defaultSizeInBytes`
+    * says nothing of the real size), and for a streaming primary, whose
+    * keys are not known when the stream-static plan is built.
     */
   def coalesceMerge(primary: DataFrame, secondary: DataFrame, key: String): DataFrame = {
     requireKey(primary, key, "S3")
     requireKey(secondary, key, "RDS")
     val candidates =
-      if (!primary.isStreaming && sizeInBytes(secondary) > sizeInBytes(primary))
-        byPrimaryKey(secondary, primary, key, matched = true)
+      if (!primary.isStreaming && knownLarger(secondary, primary))
+        secondary.join(primary.select(key), Seq(key), "left_semi")
       else secondary
     val p = nanToNull(primary).alias("p")
     val s = broadcast(firstMatch(nanToNull(candidates), key)).alias("s")
@@ -120,27 +124,24 @@ object MergeOps {
     p.join(s, col(s"p.$key") === col(s"s.$key"), "left_outer").select(out: _*)
   }
 
-  /** The planner's size estimate of `df`, the number join planning
-    * compares with the broadcast threshold.
+  /** Whether the planner's size estimate of `secondary`, the number join
+    * planning compares with the broadcast threshold, is known and exceeds
+    * `primary`'s. A plan with a leaf Spark cannot size (JDBC, an RDD)
+    * gets the placeholder `spark.sql.defaultSizeInBytes`, which is unknown.
     */
-  private def sizeInBytes(df: DataFrame): BigInt =
-    df.queryExecution.optimizedPlan.stats.sizeInBytes
-
-  /** One half of the split of `secondary` by "key appears in the
-    * primary": the rows whose key does (`matched`, a semi-join) or does
-    * not (an anti-join) equal some primary key, under the left-outer
-    * join's equality and type coercion. The two halves are disjoint and
-    * together hold every secondary row; the key column comes first.
-    */
-  def byPrimaryKey(
-      secondary: DataFrame, primary: DataFrame, key: String, matched: Boolean): DataFrame =
-    secondary.join(primary.select(key), Seq(key), if (matched) "left_semi" else "left_anti")
+  private def knownLarger(secondary: DataFrame, primary: DataFrame): Boolean = {
+    val unknown = SQLConf.get.defaultSizeInBytes
+    val plan = secondary.queryExecution.optimizedPlan
+    val size = plan.stats.sizeInBytes
+    size < unknown && plan.collectLeaves().forall(_.stats.sizeInBytes < unknown) &&
+      size > primary.queryExecution.optimizedPlan.stats.sizeInBytes
+  }
 
   /** O13: secondary rows whose key never appears in the primary
     * (`~isin`, `gule_test_job.py:166-167`) as a distributed anti-join.
     */
   def unmatched(secondary: DataFrame, primary: DataFrame, key: String): DataFrame =
-    byPrimaryKey(secondary, primary, key, matched = false)
+    secondary.join(primary.select(key), Seq(key), "left_anti")
 
   /** O14+O15: head-N sample plus total count for the unmatched report
     * (`gule_test_job.py:173-185`), in one action: the count is observed

@@ -1,5 +1,6 @@
 package graft
 
+import graft.io.{JdbcOptions, JdbcSource}
 import graft.ops.MergeOps
 import org.apache.spark.sql.{Column, DataFrame, GraftPlanShim, Row}
 import org.apache.spark.sql.catalyst.plans.{LeftOuter, LeftSemi}
@@ -179,17 +180,40 @@ class MergeReductionSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(!hasSemiJoin(MergeOps.coalesceMerge(largeP, smallS, "id")))
   }
 
-  test("byPrimaryKey splits the secondary into two disjoint halves") {
-    for (k <- kinds) {
-      val r = new Random(13)
-      val (p, s) = frames(k, genP(r, k, 8), genS(r, k, 20), reduce = true)
-      val in = MergeOps.byPrimaryKey(s, p, "id", matched = true)
-      val out = MergeOps.byPrimaryKey(s, p, "id", matched = false)
-      withClue(k.name) {
-        assert((rows(in) ++ rows(out)).sorted === rows(s))
-        assert(rows(out) === rows(MergeOps.unmatched(s, p, "id")))
-      }
+  test("a secondary of unknown size keeps the unreduced plan") {
+    // A JDBC table (the reference's RDS secondary) or an RDD has no
+    // statistics: its estimate is the placeholder spark.sql.defaultSizeInBytes,
+    // which says nothing of the real size, so it never picks the reduction.
+    val k = kinds.head
+    val r = new Random(19)
+    val ps = genP(r, k, 40)
+    // a database column holds no NaN
+    val ss = genS(r, k, 6).map { case (id, v, w) => (id, v.filterNot(_.isNaN), w) }
+    System.setProperty("derby.system.home", "target/staging/derby")
+    val jdbc = JdbcOptions(
+      url = "jdbc:derby:memory:graft_merge_reduction;create=true",
+      dbtable = "small_secondary", user = "app", password = "app",
+      driver = "org.apache.derby.jdbc.EmbeddedDriver")
+    spark.createDataFrame(
+      ss.map { case (id, v, w) => Row(id, v.orNull, w.orNull) }.asJava, sSchema(k))
+      .write.format("jdbc").options(jdbc.asMap).mode("overwrite").save()
+    val fromJdbc = JdbcSource(jdbc).load(spark)
+    val fromRdd = spark.createDataFrame(spark.sparkContext.parallelize(
+      ss.map { case (id, v, w) => Row(id, v.orNull, w.orNull) }, 2), sSchema(k))
+    val large = spark.createDataFrame(
+      ps.map { case (id, v) => Row(id, v.orNull) }.asJava, pSchema(k))
+    val small = large.limit(1)
+    // a projection scales the placeholder down, but its leaf stays unknown
+    val projected = fromJdbc.select("id", "w")
+    for ((sName, s) <- Seq("jdbc" -> fromJdbc, "projected jdbc" -> projected, "rdd" -> fromRdd);
+         (pName, p) <- Seq("larger" -> large, "smaller" -> small)) {
+      val merged = MergeOps.coalesceMerge(p, s, "id")
+      val clue = s"$sName secondary, $pName primary"
+      assert(!hasSemiJoin(merged), s"$clue: planned a LeftSemi")
+      assert(hasBroadcastLeftOuter(merged), s"$clue: lost its broadcast left-outer join")
+      assert(rows(merged) === rows(unreduced(p, s, "id")), clue)
     }
+    assert(rows(MergeOps.coalesceMerge(large, fromJdbc, "id")) === oracle(k, ps, ss))
   }
 
   test("a streaming primary against a larger secondary keeps the plan and equals batch") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.io.{JsonArraySource, ParquetSource}
+import graft.io.{JdbcOptions, JdbcSource, JsonArraySource, ParquetSource}
 import graft.ops.MergeOps
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
@@ -281,6 +281,30 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(notifier.messages.size === 1)
     assert(notifier.messages.head.startsWith("Error: failed to plan merge"))
     assertDest(s, Nil)
+  }
+
+  test("a JDBC secondary, whose size the planner cannot estimate, keeps the unreduced merge") {
+    // The reference's RDS table: a JDBC relation has no statistics, so
+    // its estimate is a placeholder and the semi-join reduction never runs.
+    System.setProperty("derby.system.home", "target/staging/derby")
+    val jdbc = JdbcOptions(
+      url = "jdbc:derby:memory:graft_pipeline_spec;create=true",
+      dbtable = "rds_secondary", user = "app", password = "app",
+      driver = "org.apache.derby.jdbc.EmbeddedDriver")
+    spark.read.parquet(secondaryPath).write.format("jdbc").options(jdbc.asMap)
+      .mode("overwrite").save()
+    val viaParquet = spec("merged.csv").copy(destDir = s"$root/jdbc-parquet")
+    val viaJdbc = viaParquet.copy(secondary = JdbcSource(jdbc), destDir = s"$root/jdbc")
+    assert(!MergeReductionSpec.hasSemiJoin(MergeOps.coalesceMerge(
+      viaJdbc.primary.load(spark), viaJdbc.secondary.load(spark), viaJdbc.key)))
+    val notifier = new RecordingNotifier
+    val result = runChecked(viaJdbc, notifier)
+    assert(result.map(r => (r.mergedRows, r.unmatchedRows)) === Right((3L, 2L)))
+    assert(runChecked(viaParquet, new RecordingNotifier).isRight)
+    assert(csvLines(viaJdbc).head === csvLines(viaParquet).head)
+    assert(csvLines(viaJdbc).tail.sorted === csvLines(viaParquet).tail.sorted)
+    assert(notifier.messages.exists(_.startsWith("Success")))
+    assertDest(viaJdbc, Seq("merged.csv"))
   }
 
   test("quoted embedded newlines survive the CSV round trip and don't inflate counts") {
