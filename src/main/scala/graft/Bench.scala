@@ -66,8 +66,16 @@ object Bench {
     // session init.
     val warmDir =
       sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
+    // Every job of a row's timed runs carries the row's name as its
+    // description, and every job of its warm-up "warm-up <name>", so a
+    // Spark event log of the run (scripts/profile.py) groups jobs and
+    // stages by registry row.
+    def described[A](name: String)(body: => A): A = {
+      spark.sparkContext.setJobDescription(name)
+      try body finally spark.sparkContext.setJobDescription(null)
+    }
     selected.foreach { case (name, fn) =>
-      try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
+      try described(s"warm-up $name")(fn(spark, warmDir).write.format("noop").mode("overwrite").save())
       catch { case e: Throwable =>
         System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
       }
@@ -103,7 +111,7 @@ object Bench {
         pass: Int): Option[Double] = {
       val t0 = System.nanoTime()
       val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+        try { described(name)(fn(spark, sfDir).write.format("noop").mode("overwrite").save()); true }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name pass $pass failed: ${e.getMessage}")
           false

@@ -61,21 +61,6 @@ object Config {
       webhook.map(u => new HttpNotifier(u): Notifier).getOrElse(default)
   }
 
-  def loadFile(
-      path: String,
-      secrets: SecretsProvider = NoSecretsProvider): Seq[TenantConfig] =
-    parse(new String(Files.readAllBytes(Paths.get(path)), "UTF-8"), secrets)
-
-  /** Strict parse: the first invalid tenant throws. */
-  def parse(
-      json: String,
-      secrets: SecretsProvider = NoSecretsProvider): Seq[TenantConfig] =
-    parseTenants(json, secrets).map {
-      case Right(t) => t
-      case Left((name, err)) =>
-        throw new IllegalArgumentException(s"config error at $name: $err")
-    }
-
   /** Per-tenant parse: one tenant's bad config (missing field, unknown
     * secret) yields a Left for THAT tenant only, so the multi-tenant
     * fan-out can still run every valid tenant — the reference isolates
@@ -107,7 +92,7 @@ object Config {
     }
   }
 
-  /** Per-tenant variant of [[loadFile]]. */
+  /** [[parseTenants]] over the UTF-8 file at `path`. */
   def loadFileTenants(
       path: String,
       secrets: SecretsProvider = NoSecretsProvider): Seq[Either[(String, String), TenantConfig]] =

@@ -57,7 +57,7 @@ final class FailingNotifier extends Notifier {
 
 /** Production implementation: POSTs `{"text": ...}` to a webhook URL —
   * the reference's Slack-shaped delivery (`gule_test_job.py:77,188`).
-  * Pure JDK (`java.net.http`), no extra dependency; never constructed
+  * JDK `java.net.http` and Spark's Jackson, no extra dependency; never constructed
   * by default (the pipeline defaults to [[StdoutNotifier]]), so no
   * egress is attempted unless a deployment explicitly configures a URL.
   * Failures propagate as exceptions; callers go through
@@ -70,27 +70,15 @@ final class HttpNotifier(
   private val client = java.net.http.HttpClient.newBuilder()
     .connectTimeout(timeout).build()
 
-  /** Minimal JSON string escaping (quotes, backslash, control chars) —
-    * the payload is one text field, not a JSON library's worth of
-    * structure.
-    */
-  private def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"'           => "\\\""
-      case '\\'          => "\\\\"
-      case '\n'          => "\\n"
-      case '\r'          => "\\r"
-      case '\t'          => "\\t"
-      case c if c < ' '  => f"\\u${c.toInt}%04x"
-      case c             => c.toString
-    }
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
 
   def notify(text: String): Unit = {
     val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
       .timeout(timeout)
       .header("Content-Type", "application/json")
       .POST(java.net.http.HttpRequest.BodyPublishers.ofString(
-        s"""{"text": "${jsonEscape(text)}"}""", java.nio.charset.StandardCharsets.UTF_8))
+        s"""{"text": ${json.writeValueAsString(text)}}""",
+        java.nio.charset.StandardCharsets.UTF_8))
       .build()
     val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
     // the reference treats any non-2xx webhook response as a delivery

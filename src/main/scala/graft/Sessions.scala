@@ -11,7 +11,7 @@ object Sessions {
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)
 
   /** The session every entry point runs in (Pipeline, Bench, Verify,
-    * VerifySliced, the dev tools and the tests): `local[cpus]` with the
+    * VerifySliced and the tests): `local[cpus]` with the
     * graft SQL functions loaded through `spark.sql.extensions` (the
     * deployment path), one shuffle partition per core, UTC so
     * timestamp-bearing fixtures decode identically to the oracle on any

@@ -99,20 +99,6 @@ final case class OrcSource(path: String) extends RelationSource {
   def describe: String = s"orc $path"
 }
 
-/** Raw text ingestion — the shape a crawled corpus lands in before any
-  * structure exists. Line mode yields one (value) row per line;
-  * `wholeFile` yields one row per FILE (a document-per-file corpus),
-  * via Spark's `wholetext` option. Both stay fully distributed: line
-  * mode splits large files across tasks; whole-file mode's parallelism
-  * is the file count (the natural unit for document-per-file layouts).
-  */
-final case class TextLinesSource(pathGlob: String, wholeFile: Boolean = false)
-    extends RelationSource {
-  def load(spark: SparkSession): DataFrame =
-    spark.read.option("wholetext", wholeFile.toString).text(pathGlob)
-  def describe: String = s"text $pathGlob"
-}
-
 /** Opaque media files (images/audio/video) as rows — the ingestion
   * face of the multimodal tier ([[graft.ops.MultimodalOps]]): each
   * matched file becomes one row of (path, length, content BINARY),

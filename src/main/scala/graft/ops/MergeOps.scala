@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{DoubleType, FloatType}
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, StringType}
 
 /** The reference pipeline's relational core, re-expressed as distributed
   * DataFrame operations (SURVEY.md §2 O6–O15).
@@ -88,7 +88,7 @@ object MergeOps {
     *
     * When the planner's size estimate of the secondary exceeds the
     * primary's, the secondary is first semi-joined to the primary's keys
-    * (the same equality and coercion as the left-outer join and as
+    * (the same [[keyEquals]] as the left-outer join and as
     * [[unmatched]]), so the first-match window and the broadcast see
     * only rows that can match. The result is the same: first match is
     * decided per key, so dropping all of a key's rows changes no other
@@ -103,10 +103,15 @@ object MergeOps {
   def coalesceMerge(primary: DataFrame, secondary: DataFrame, key: String): DataFrame = {
     requireKey(primary, key, "S3")
     requireKey(secondary, key, "RDS")
+    // a string secondary key is compared as the primary's type, so the
+    // first match is picked per compared key: "3" and "003" are one key
+    val sec = comparedAs(secondary, primary, key)
+      .fold(secondary)(t => secondary.withColumn(key, col(key).try_cast(t)))
     val candidates =
-      if (!primary.isStreaming && knownLarger(secondary, primary))
-        secondary.join(primary.select(key), Seq(key), "left_semi")
-      else secondary
+      if (!primary.isStreaming && knownLarger(sec, primary))
+        sec.join(primary.select(col(key).as(PrimaryKey)),
+          keyEquals(sec, primary, key)(col(key), col(PrimaryKey)), "left_semi")
+      else sec
     val p = nanToNull(primary).alias("p")
     val s = broadcast(firstMatch(nanToNull(candidates), key)).alias("s")
 
@@ -121,8 +126,41 @@ object MergeOps {
         case c => col(s"p.$c")
       } ++ sCols.filter(c => c != key && !shared(c)).map(c => col(s"s.$c"))
 
-    p.join(s, col(s"p.$key") === col(s"s.$key"), "left_outer").select(out: _*)
+    p.join(s, keyEquals(sec, primary, key)(col(s"s.$key"), col(s"p.$key")), "left_outer")
+      .select(out: _*)
   }
+
+  /** The primary's key column, renamed for the semi- and anti-joins so
+    * that an unqualified `key` in their condition names the secondary's.
+    */
+  private val PrimaryKey = "__graft_pk"
+
+  /** The merge key's one equality, shared by the left-outer join, the
+    * semi-join reduction and [[unmatched]]: the reduction drops exactly
+    * the rows the join would not match only if all three compare keys
+    * the same way. When exactly one side's key is a string, that side is
+    * compared through `try_cast` to the other side's type. Spark's own
+    * coercion would cast it with an ANSI cast, and one non-numeric key
+    * ("x") would fail the run; the reference's `==` and `isin`
+    * (`gule_test_job.py:132,166`) leave such a row unmatched. A numeric
+    * string ("003", " 2") still matches its number.
+    */
+  private def keyEquals(secondary: DataFrame, primary: DataFrame, key: String)(
+      sKey: Column, pKey: Column): Column = {
+    def aligned(c: Column, t: Option[DataType]) = t.fold(c)(c.try_cast)
+    aligned(sKey, comparedAs(secondary, primary, key)) ===
+      aligned(pKey, comparedAs(primary, secondary, key))
+  }
+
+  /** The type `df`'s key is cast to when compared with `other`'s: the
+    * other side's type when only `df`'s key is a string.
+    */
+  private def comparedAs(df: DataFrame, other: DataFrame, key: String): Option[DataType] =
+    (df.schema(key).dataType, other.schema(key).dataType) match {
+      case (_: StringType, _: StringType) => None
+      case (_: StringType, t) => Some(t)
+      case _ => None
+    }
 
   /** Whether the planner's size estimate of `secondary`, the number join
     * planning compares with the broadcast threshold, is known and exceeds
@@ -138,10 +176,12 @@ object MergeOps {
   }
 
   /** O13: secondary rows whose key never appears in the primary
-    * (`~isin`, `gule_test_job.py:166-167`) as a distributed anti-join.
+    * (`~isin`, `gule_test_job.py:166-167`) as a distributed anti-join,
+    * under the merge's [[keyEquals]].
     */
   def unmatched(secondary: DataFrame, primary: DataFrame, key: String): DataFrame =
-    secondary.join(primary.select(key), Seq(key), "left_anti")
+    secondary.join(primary.select(col(key).as(PrimaryKey)),
+      keyEquals(secondary, primary, key)(col(key), col(PrimaryKey)), "left_anti")
 
   /** O14+O15: head-N sample plus total count for the unmatched report
     * (`gule_test_job.py:173-185`), in one action: the count is observed

@@ -27,8 +27,24 @@ class ConfigSpec extends AnyFunSuite {
       |  }
       |}""".stripMargin
 
+  /** Every tenant of `json`, each asserted to parse. */
+  private def valid(json: String,
+      secrets: graft.io.SecretsProvider = graft.io.NoSecretsProvider) =
+    Config.parseTenants(json, secrets).map { t =>
+      assert(t.isRight, s"expected a valid tenant, got $t")
+      t.toOption.get
+    }
+
+  /** The one tenant of `json`, asserted to fail; its error message. */
+  private def invalid(json: String,
+      secrets: graft.io.SecretsProvider = graft.io.NoSecretsProvider): String =
+    Config.parseTenants(json, secrets) match {
+      case Seq(Left((_, msg))) => msg
+      case other => fail(s"expected one invalid tenant, got $other")
+    }
+
   test("parses every tenant deterministically (sorted by name)") {
-    val ts = Config.parse(twoTenants)
+    val ts = valid(twoTenants)
     assert(ts.map(_.name) === Seq("tenant_a", "tenant_b"))
     val a = ts.head
     assert(a.primary === JsonArraySource("/data/a/in.json"))
@@ -56,45 +72,42 @@ class ConfigSpec extends AnyFunSuite {
         |  "webhook":     "http://127.0.0.1:9/hook"
         |}}}""".stripMargin
     val default = new RecordingNotifier
-    val t = Config.parse(withHook).head
+    val t = valid(withHook).head
     assert(t.webhook === Some("http://127.0.0.1:9/hook"))
     assert(t.notifier(default).isInstanceOf[HttpNotifier])
     // no webhook -> the caller's default instance, untouched
-    val plain = Config.parse(twoTenants).head
+    val plain = valid(twoTenants).head
     assert(plain.webhook === None)
     assert(plain.notifier(default) eq default)
   }
 
   test("each tenant resolves to a runnable pipeline spec") {
-    val specs = Config.parse(twoTenants).map(_.toSpec)
+    val specs = valid(twoTenants).map(_.toSpec)
     assert(specs.map(_.destDir) === Seq("/data/a/out", "/data/b/out"))
     assert(specs.head.key === "customer_id")
   }
 
   test("missing required fields fail with the field named") {
-    val e = intercept[IllegalArgumentException] {
-      Config.parse(
-        """{"configs": {"t": {
-          |  "source": {"type": "json"},
-          |  "secondary": {"type": "parquet", "path": "/y"},
-          |  "destination": {"dir": "/z"}}}}""".stripMargin)
-    }
-    assert(e.getMessage.contains("'path'"))
+    val e = invalid(
+      """{"configs": {"t": {
+        |  "source": {"type": "json"},
+        |  "secondary": {"type": "parquet", "path": "/y"},
+        |  "destination": {"dir": "/z"}}}}""".stripMargin)
+    assert(e.contains("'path'"))
+    // no tenant can be isolated without the root object: the whole file fails
     val e2 = intercept[IllegalArgumentException] {
-      Config.parse("""{"noconfigs": {}}""")
+      Config.parseTenants("""{"noconfigs": {}}""")
     }
     assert(e2.getMessage.contains("'configs'"))
   }
 
   test("unknown source type is rejected") {
-    val e = intercept[IllegalArgumentException] {
-      Config.parse(
-        """{"configs": {"t": {
-          |  "source": {"type": "avro", "path": "/x"},
-          |  "secondary": {"type": "parquet", "path": "/y"},
-          |  "destination": {"dir": "/z"}}}}""".stripMargin)
-    }
-    assert(e.getMessage.contains("unknown source type 'avro'"))
+    val e = invalid(
+      """{"configs": {"t": {
+        |  "source": {"type": "avro", "path": "/x"},
+        |  "secondary": {"type": "parquet", "path": "/y"},
+        |  "destination": {"dir": "/z"}}}}""".stripMargin)
+    assert(e.contains("unknown source type 'avro'"))
   }
 
   test("secret-based JDBC tenant resolves credentials through the provider") {
@@ -108,7 +121,7 @@ class ConfigSpec extends AnyFunSuite {
         |  "secondary": {"type": "jdbc", "secret": "tenant-c-secret",
         |                "endpoint": "db.example", "port": "3307"},
         |  "destination": {"dir": "/data/c/out"}}}}""".stripMargin
-    Config.parse(cfg, secrets).head.secondary match {
+    valid(cfg, secrets).head.secondary match {
       case JdbcSource(o) =>
         // permitMysqlScheme rides along because the default driver is
         // MariaDB Connector/J, whose 3.x rejects the mysql scheme bare
@@ -116,19 +129,13 @@ class ConfigSpec extends AnyFunSuite {
         assert(o.dbtable === "c_data" && o.user === "svc" && o.password === "pw")
       case other => fail(s"expected JdbcSource, got $other")
     }
-    // unknown secret name -> named error in strict parse; no provider
-    // -> explicit error (both wrapped per-tenant)
-    val eUnknown = intercept[IllegalArgumentException] {
-      Config.parse(cfg, graft.io.MapSecretsProvider(Map.empty))
-    }
-    assert(eUnknown.getMessage.contains("not found"))
-    intercept[IllegalArgumentException] { Config.parse(cfg) }
+    // unknown secret name -> named error; no provider -> explicit error
+    // (both confined to the tenant)
+    assert(invalid(cfg, graft.io.MapSecretsProvider(Map.empty)).contains("not found"))
+    assert(invalid(cfg).contains("no secrets provider"))
     // incomplete secret blob -> the missing key is named
-    val e = intercept[IllegalArgumentException] {
-      Config.parse(cfg, graft.io.MapSecretsProvider(Map(
-        "tenant-c-secret" -> Map("username" -> "svc"))))
-    }
-    assert(e.getMessage.contains("'db_name'"))
+    assert(invalid(cfg, graft.io.MapSecretsProvider(Map(
+      "tenant-c-secret" -> Map("username" -> "svc")))).contains("'db_name'"))
   }
 
   test("per-tenant parse isolates one tenant's bad secret from the rest") {

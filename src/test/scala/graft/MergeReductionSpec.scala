@@ -42,10 +42,10 @@ class MergeReductionSpec extends AnyFunSuite with SparkSessionTestWrapper {
       joinClass: Any => Option[Any],
       outKey: Any => Any = identity)
 
-  private def asLong(k: Any): Option[Any] = Option(k).map {
-    case i: Int => i.toLong
-    case s: String => s.trim.toLong
-    case l: Long => l
+  private def asLong(k: Any): Option[Any] = Option(k).flatMap {
+    case i: Int => Some(i.toLong)
+    case s: String => s.trim.toLongOption
+    case l: Long => Some(l)
   }
 
   private val kinds = Seq(
@@ -54,9 +54,14 @@ class MergeReductionSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // 1L << 33 equals no int
     KeyKind("int vs long", IntegerType, Vector(null, 0, 1, 2, 3, 4),
       LongType, Vector(null, 1L << 33, 1L, 2L, 3L, 5L), asLong),
-    // the string side is cast to bigint: "003" and " 2" are 3 and 2
-    KeyKind("string vs long", StringType, Vector(null, "0", "1", " 2", "003", "4"),
+    // the string side is compared as a bigint: "003" and " 2" are 3 and
+    // 2, and "x" matches nothing
+    KeyKind("string vs long", StringType, Vector(null, "0", "1", " 2", "003", "4", "x"),
       LongType, Vector(null, 0L, 1L, 2L, 3L, 5L), asLong),
+    // and the other way round: "3" and "003" are one secondary key, with
+    // one first match
+    KeyKind("long vs string", LongType, Vector(null, 0L, 1L, 2L, 3L, 4L),
+      StringType, Vector(null, "0", "1", " 2", "003", "3", "x"), asLong),
     KeyKind("double", DoubleType, Vector(null, 0.0, -0.0, 1.5, Double.NaN, 2.5),
       DoubleType, Vector(null, 0.0, -0.0, 1.5, Double.NaN, 3.5),
       {
@@ -244,11 +249,17 @@ class MergeReductionSpec extends AnyFunSuite with SparkSessionTestWrapper {
   }
 
   /** The merge before the reduction: first match and broadcast over the
-    * whole secondary.
+    * whole secondary. A string key meeting a non-string one is compared
+    * as the other side's type, a non-numeric one matching nothing.
     */
   private def unreduced(primary: DataFrame, secondary: DataFrame, key: String): DataFrame = {
+    val (pType, sType) = (primary.schema(key).dataType, secondary.schema(key).dataType)
+    val sec =
+      if (sType == StringType && pType != StringType)
+        secondary.withColumn(key, col(key).try_cast(pType))
+      else secondary
     val p = MergeOps.nanToNull(primary).alias("p")
-    val s = broadcast(MergeOps.firstMatch(MergeOps.nanToNull(secondary), key)).alias("s")
+    val s = broadcast(MergeOps.firstMatch(MergeOps.nanToNull(sec), key)).alias("s")
     val pCols = primary.schema.fieldNames.toIndexedSeq
     val sCols = secondary.schema.fieldNames.toIndexedSeq
     val shared = pCols.toSet.intersect(sCols.toSet)
@@ -258,7 +269,10 @@ class MergeReductionSpec extends AnyFunSuite with SparkSessionTestWrapper {
         case c if shared(c) => coalesce(col(s"p.$c"), col(s"s.$c")).as(c)
         case c => col(s"p.$c")
       } ++ sCols.filter(c => c != key && !shared(c)).map(c => col(s"s.$c"))
-    p.join(s, col(s"p.$key") === col(s"s.$key"), "left_outer").select(out: _*)
+    val pKey =
+      if (pType == StringType && sType != StringType) col(s"p.$key").try_cast(sType)
+      else col(s"p.$key")
+    p.join(s, pKey === col(s"s.$key"), "left_outer").select(out: _*)
   }
 }
 

@@ -272,6 +272,20 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assertDest(s, Nil)
   }
 
+  test("failure matrix: a non-numeric string key meeting a numeric one is left unmatched") {
+    val s = matrixSpec("key-text", """[{"id": "1", "qty": 1.5}, {"id": "x"}, {"id": "002"}]""",
+      clashSecondary)
+    assert(ranReduced(s))
+    val notifier = new RecordingNotifier
+    val result = runChecked(s, notifier)
+    assert(result.map(r => (r.mergedRows, r.unmatchedRows)) === Right((3L, 31L)))
+    assert(csvLines(s).head === "id,qty,region")
+    assert(csvLines(s).tail.sorted === Seq("002,222.0,west", "1,1.5,east", "x,,"))
+    assert(notifier.messages.map(_.takeWhile(_ != ' ')) === Seq("Unmatched", "Success:"))
+    assert(notifier.messages.head.contains("records: 31; sample ids: 10, 11,"))
+    assertDest(s, Seq("merged.csv"))
+  }
+
   test("failure matrix: a shared column with no common type fails at plan-merge") {
     val s = matrixSpec("clash-boolean", """[{"id": 1, "qty": true}, {"id": 2, "qty": false}]""",
       clashSecondary)

@@ -36,18 +36,6 @@ class SourcesSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(got.collect().map(_.toString).sorted === sample.collect().map(_.toString).sorted)
   }
 
-  test("text source reads lines per row, and whole files per row in wholeFile mode") {
-    Files.createDirectories(Paths.get(s"$root/txt"))
-    Files.writeString(Paths.get(s"$root/txt/a.txt"), "alpha\nbeta\n")
-    Files.writeString(Paths.get(s"$root/txt/b.txt"), "gamma\n")
-    val lines = TextLinesSource(s"$root/txt/*.txt").load(spark)
-      .collect().map(_.getString(0)).sorted
-    assert(lines.toSeq === Seq("alpha", "beta", "gamma"))
-    val whole = TextLinesSource(s"$root/txt/*.txt", wholeFile = true).load(spark)
-      .collect().map(_.getString(0)).sorted
-    assert(whole.toSeq === Seq("alpha\nbeta\n", "gamma\n"))
-  }
-
   test("JSON lines source round-trips Spark's own json writer output") {
     sample.write.mode("overwrite").json(s"$root/lines")
     val got = JsonLinesSource(s"$root/lines", Some(schema)).load(spark)
