@@ -26,7 +26,8 @@ import scala.util.Random
   * unreduced formula, kept below as the reference. Which branch ran is
   * read from the executed plan. Keys are adversarial: nulls on both
   * sides, NaN and -0.0/0.0, hot duplicates, an int or string primary key
-  * against a long secondary key, empty and disjoint inputs.
+  * against a long secondary key and a long one against a string one,
+  * non-numeric strings among them, empty and disjoint inputs.
   */
 class MergeReductionSpec extends AnyFunSuite with SparkSessionTestWrapper {
   import MergeReductionSpec._
