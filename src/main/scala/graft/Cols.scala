@@ -54,7 +54,7 @@ object Cols {
     ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
 
   /** Scalar JVM twin of [[hex60]] — THE single driver/executor-side
-    * implementation (VectorFns plane weights, streaming cmsBucket):
+    * implementation (VectorFns plane weights):
     * the md5 digest's first 15 hex chars are its first 8 bytes
     * big-endian with the lowest nibble dropped, computed numerically
     * (no hex-string round trip) on a thread-local digest.

@@ -119,9 +119,17 @@ object MergeOps {
     val sCols = secondary.schema.fieldNames.toIndexedSeq
     val shared = pCols.toSet.intersect(sCols.toSet)
 
+    // a shared column that is text on exactly one side is coalesced as
+    // text, as the reference's pandas object column holds either side's
+    // value (`gule_test_job.py:140-147`); coercing the text to the other
+    // side's type would fail the run on its first non-numeric cell. The
+    // cast sits after nanToNull, so a NaN stays missing, not "NaN".
+    def isText(df: DataFrame, c: String) = df.schema(c).dataType.isInstanceOf[StringType]
     val out: Seq[Column] =
       pCols.map {
         case `key` => col(s"p.$key").as(key)
+        case c if shared(c) && isText(primary, c) != isText(secondary, c) =>
+          coalesce(col(s"p.$c").cast(StringType), col(s"s.$c").cast(StringType)).as(c)
         case c if shared(c) => coalesce(col(s"p.$c"), col(s"s.$c")).as(c)
         case c => col(s"p.$c")
       } ++ sCols.filter(c => c != key && !shared(c)).map(c => col(s"s.$c"))

@@ -76,9 +76,11 @@ object PipelineQueries {
     }
 
     // Read the single CSV object back with the merge's own schema (CSV
-    // carries no types; the header row is skipped by header=true).
+    // carries no types; the header row is skipped by header=true). `p`
+    // has the schema the JSON source was given, so the schema is planned
+    // without reading the JSON primary again.
     val mergedSchema = MergeOps.coalesceMerge(
-      spec.primary.load(s), spec.secondary.load(s), spec.key).schema
+      p, spec.secondary.load(s), spec.key).schema
     s.read.schema(mergedSchema).option("header", value = true)
       .option("multiLine", value = true)
       .csv(result.csvPath.toString)

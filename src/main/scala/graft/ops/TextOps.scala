@@ -22,16 +22,14 @@ object TextOps {
   /** Fixed stopword list for quality scoring (shared with oracle SQL). */
   val stopwords: Seq[String] = Seq("the", "a", "of", "to", "and", "in", "is")
 
-  /** Curation quality floor shared by corpus_curate / curate_neardup
-    * and the streaming curation path (StreamingCurateSpec).
-    */
-  private[graft] val QualityMin = 0.44
+  /** Curation quality floor shared by corpus_curate / curate_neardup. */
+  private val QualityMin = 0.44
 
   /** The 80/10/10 split assignment as a pure function of the document
     * id — ONE definition (with its SQL twin) for q_split_train,
-    * corpus_curate, curate_neardup and the streaming curation path.
+    * corpus_curate and curate_neardup.
     */
-  private[graft] def splitCol(docId: Column): Column = {
+  private def splitCol(docId: Column): Column = {
     val u = graft.Cols.unitHash(docId.cast("string"))
     when(u < 0.8, "train").when(u < 0.9, "val").otherwise("test")
   }

@@ -310,371 +310,6 @@ object StatefulOps extends Serializable {
     }
   }
 
-  /** One live count-min cell snapshot: hash row j, bucket, running
-    * count.
-    */
-  final case class CmsCell(j: Int, bucket: Long, n: Long)
-
-  /** The batch CMS bucket hash (Cols.hex60 of "cms{j}|{token}" mod
-    * width) via the shared scalar twin [[graft.Cols.hex60Scalar]] —
-    * byte-identical md5 semantics, so the streaming grid lands tokens
-    * in exactly the cells the batch q_sketch_cms grid uses, at
-    * per-record cost (thread-local digest, no hex-string round trip).
-    */
-  def cmsBucket(token: String, j: Int, width: Int): Long =
-    graft.Cols.hex60Scalar(s"cms$j|$token") % width
-
-  /** Streaming count-min monitor — the ingestion-time face of the batch
-    * `q_sketch_cms` operator: each token increments its `depth` grid
-    * cells; every trigger re-emits the touched cells' running counts.
-    * State is one long per cell, bounded by depth x width FOREVER
-    * (3 x 1024 by default) regardless of stream volume — the defining
-    * property of a sketch, preserved verbatim in streaming form. A
-    * downstream consumer estimates any token's frequency as the min
-    * over its cells, identically to the batch probe
-    * (StreamingCmsSpec asserts grid equality).
-    */
-  def cmsMonitor(
-      tokens: Dataset[String], width: Int = 1024, depth: Int = 3): Dataset[CmsCell] = {
-    import tokens.sparkSession.implicits._
-    require(width > 0 && depth > 0, s"invalid grid ${depth}x$width")
-    tokens
-      .flatMap(t => (0 until depth).map(j => (j, cmsBucket(t, j, width))))
-      .groupByKey(identity)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (key: (Int, Long), it: Iterator[(Int, Long)], state: GroupState[Long]) =>
-          val n = state.getOption.getOrElse(0L) + it.size
-          state.update(n)
-          Iterator(CmsCell(key._1, key._2, n))
-      }
-  }
-
-  /** One packing-input document: its token count plus the (lang, shard)
-    * stream it packs into.
-    */
-  final case class DocTok(doc_id: Long, lang: String, shard: Long, n_tokens: Long)
-
-  /** A packed document: the bin its tokens start in and the offset
-    * there.
-    */
-  final case class PackedDoc(
-      doc_id: Long, lang: String, shard: Long,
-      n_tokens: Long, bin_id: Long, bin_off: Long)
-
-  /** Streaming sequence packing — the continuous-ingestion face of the
-    * batch `text_seq_pack` operator: documents are appended to their
-    * (lang, shard) token stream as they arrive and cut into
-    * `budget`-token bins (bin = cumulative-tokens-before / budget).
-    *
-    * State per key is ONE long — the stream's running token count — so
-    * total state is bounded by langs x shards FOREVER; no watermark or
-    * timeout is ever needed, unlike time-keyed state. In-batch disorder
-    * is handled by sorting each group's trigger slice on doc_id; across
-    * triggers the packing order is arrival order (the streaming
-    * contract — identical to the batch doc_id order whenever ingestion
-    * is id-ordered, which the equivalence spec drives).
-    */
-  def packStream(docs: Dataset[DocTok], budget: Long): Dataset[PackedDoc] = {
-    import docs.sparkSession.implicits._
-    require(budget > 0, s"budget must be positive, got $budget")
-    docs.groupByKey(d => (d.lang, d.shard)).flatMapGroupsWithState(
-      OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-      (_: (String, Long), it: Iterator[DocTok], state: GroupState[Long]) =>
-        var cum = state.getOption.getOrElse(0L)
-        val out = it.toIndexedSeq.sortBy(_.doc_id).map { d =>
-          val before = cum
-          cum += d.n_tokens
-          PackedDoc(d.doc_id, d.lang, d.shard, d.n_tokens,
-            before / budget, before % budget)
-        }
-        state.update(cum)
-        out.iterator
-    }
-  }
-
-  /** One mixture-monitor input: a document's language and token count. */
-  final case class LangTok(lang: String, n_tokens: Long)
-
-  /** A running per-language snapshot of the ingested corpus mixture. */
-  final case class MixSnapshot(lang: String, n_docs: Long, n_tokens: Long)
-
-  /** Streaming domain-mixture monitor — the ingestion-time face of the
-    * batch `q_mix_weights` operator: per language, the running document
-    * and token totals, re-emitted after every trigger that touches the
-    * language. Downstream alerting divides by the cross-language total
-    * to watch the mixture drift DURING ingestion instead of auditing it
-    * after. State is two longs per language — bounded by the domain
-    * vocabulary forever. The final snapshot per language equals the
-    * batch aggregation exactly (integer counts; StreamingMixtureSpec).
-    */
-  def mixtureMonitor(docs: Dataset[LangTok]): Dataset[MixSnapshot] = {
-    import docs.sparkSession.implicits._
-    docs.groupByKey(_.lang).flatMapGroupsWithState(
-      OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-      (lang: String, it: Iterator[LangTok], state: GroupState[(Long, Long)]) =>
-        var (d, t) = state.getOption.getOrElse((0L, 0L))
-        it.foreach { x => d += 1; t += x.n_tokens }
-        state.update((d, t))
-        Iterator(MixSnapshot(lang, d, t))
-    }
-  }
-
-  /** Arrival-order exact dedup over an UNBOUNDED horizon: the first
-    * record per key is emitted, every later arrival is dropped. State
-    * is one boolean per key EVER seen — use this when the dedup horizon
-    * really is "forever" (content-digest dedup of a curated corpus,
-    * where a duplicate a year later is still a duplicate); when a time
-    * horizon is acceptable, [[dedupWithinWatermark]] keeps state
-    * bounded instead. Within one trigger, "first" follows the group
-    * iterator; across triggers it is arrival order — the
-    * backfill-then-incremental ingestion contract
-    * (StreamingCurateSpec drives originals before copies and gets the
-    * batch min-id keeper exactly).
-    */
-  def keepFirstByKey[T, K](
-      docs: Dataset[T], key: T => K)(
-      implicit et: org.apache.spark.sql.Encoder[T],
-      ek: org.apache.spark.sql.Encoder[K]): Dataset[T] = {
-    import docs.sparkSession.implicits._
-    docs.groupByKey(key).flatMapGroupsWithState(
-      OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-      (_: K, it: Iterator[T], state: GroupState[Boolean]) =>
-        if (state.exists) Iterator.empty
-        else {
-          state.update(true)
-          it.take(1)
-        }
-    }
-  }
-
-  /** One live HLL register snapshot: group, register index, max rank. */
-  final case class HllRegister(group: String, bucket: Long, mj: Long)
-
-  /** The batch `q_sketch_hll` register function via the shared scalar
-    * md5 twin: 60-bit hash -> (low-8-bit register, leading-zero rank of
-    * the 52-bit remainder). Bit-identical to the SQL pair
-    * (hex60 % 256, 53 - length(bin(hex60 >> 8))).
-    */
-  def hllRegister(key: String): (Long, Long) = {
-    val h = graft.Cols.hex60Scalar(key)
-    val rem = h >>> 8
-    val rho = if (rem == 0L) 53L else 53L - (64 - java.lang.Long.numberOfLeadingZeros(rem))
-    (h % 256, rho)
-  }
-
-  /** Streaming HyperLogLog monitor — the ingestion-time face of the
-    * batch `q_sketch_hll` operator: each (group, key) arrival folds
-    * into its register via max(rho); every trigger re-emits the touched
-    * registers. State is one long per (group, register) — bounded by
-    * groups x 256 FOREVER, the defining sketch property — and max() is
-    * idempotent, so replays and duplicates cannot corrupt a register.
-    * A downstream consumer turns any snapshot into the estimate with
-    * the batch query's exact-integer harmonic sum; final registers
-    * equal the batch registers exactly (StreamingHllSpec).
-    */
-  def hllMonitor(keyed: Dataset[(String, String)]): Dataset[HllRegister] = {
-    import keyed.sparkSession.implicits._
-    keyed
-      .map { case (g, k) => val (b, r) = hllRegister(k); (g, b, r) }
-      .groupByKey { case (g, b, _) => (g, b) }
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (key: (String, Long), it: Iterator[(String, Long, Long)],
-         state: GroupState[Long]) =>
-          val mj = it.foldLeft(state.getOption.getOrElse(0L)) {
-            case (acc, (_, _, rho)) => math.max(acc, rho)
-          }
-          state.update(mj)
-          Iterator(HllRegister(key._1, key._2, mj))
-      }
-  }
-
-  /** One live KMV sketch snapshot: group, occupancy, kth-minimum hash. */
-  final case class KmvSketch(group: String, n_k: Long, kth: Long)
-
-  /** Streaming k-minimum-values monitor — the ingestion-time face of
-    * batch `q_sketch_kmv`: per group keep the k smallest DISTINCT
-    * member hashes (state bounded by k FOREVER, the sketch property);
-    * every trigger emits the refreshed (n_k, kth) snapshot, from which
-    * a consumer forms the identical (k-1)·M/kth estimate the batch
-    * query pins (StreamingKmvSpec). The fold is set-union + truncate —
-    * idempotent, so replays and duplicate members cannot corrupt the
-    * sketch. Snapshots collapse deterministically across triggers:
-    * n_k is monotone non-decreasing, and once the sketch is full kth
-    * only improves (decreases), so the final state is the max-n_k /
-    * then-min-kth emission.
-    */
-  def kmvMonitor(keyed: Dataset[(String, String)], k: Int = 64): Dataset[KmvSketch] = {
-    import keyed.sparkSession.implicits._
-    keyed
-      .map { case (g, key) => (g, graft.Cols.hex60Scalar(key), key) }
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (g: String, it: Iterator[(String, Long, String)],
-         state: GroupState[Seq[(Long, String)]]) =>
-          val merged = (state.getOption.getOrElse(Seq.empty) ++
-              it.map { case (_, hv, key) => (hv, key) })
-            .distinct.sorted.take(k)
-          state.update(merged)
-          if (merged.isEmpty) Iterator.empty
-          else Iterator(KmvSketch(g, merged.size.toLong, merged.last._1))
-      }
-  }
-
-  /** One embedding arrival for the drift monitor. */
-  final case class VecArrival(vec_id: Long, emb: Seq[Double])
-
-  /** Per-dimension drift snapshot: cohort counts, means, and the
-    * mean shift (new minus old).
-    */
-  final case class DimDrift(
-      dim: Long, n_a: Long, n_b: Long,
-      mean_a: Double, mean_b: Double, shift: Double)
-
-  /** Streaming twin of the batch `sim_dim_drift` monitor: per
-    * embedding dimension, the running mean under the old (vec_id
-    * even) vs new (odd) ingestion cohort and the shift between them,
-    * re-emitted as arrivals land. State per dimension is four longs —
-    * the cohort counts and the cohort sums of the SAME floor(x·1e9)
-    * int64 quantization the batch query aggregates — so the fold is
-    * integer addition: exactly commutative and associative, which is
-    * what makes the final snapshot equal the batch answer
-    * double-for-double regardless of arrival order or trigger
-    * splitting (StreamingDriftSpec pins both). A dimension stays
-    * silent until BOTH cohorts have arrivals — a drift number against
-    * an empty cohort is noise, not signal. Snapshots collapse
-    * deterministically: n_a + n_b is monotone non-decreasing, so the
-    * final state is the max-total emission per dimension.
-    */
-  def dimDriftMonitor(vecs: Dataset[VecArrival]): Dataset[DimDrift] = {
-    import vecs.sparkSession.implicits._
-    vecs
-      .flatMap { v =>
-        val cohort = v.vec_id % 2
-        v.emb.iterator.zipWithIndex.map { case (x, i) =>
-          (i + 1L, cohort, math.floor(x * 1000000000.0).toLong)
-        }
-      }
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (dim: Long, it: Iterator[(Long, Long, Long)],
-         state: GroupState[(Long, Long, Long, Long)]) =>
-          var (na, sa, nb, sb) = state.getOption.getOrElse((0L, 0L, 0L, 0L))
-          it.foreach { case (_, cohort, qx) =>
-            if (cohort == 0L) { na += 1; sa += qx } else { nb += 1; sb += qx }
-          }
-          state.update((na, sa, nb, sb))
-          if (na == 0 || nb == 0) Iterator.empty
-          else {
-            val meanA = sa.toDouble / (na * 1000000000.0)
-            val meanB = sb.toDouble / (nb * 1000000000.0)
-            Iterator(DimDrift(dim, na, nb, meanA, meanB, meanB - meanA))
-          }
-      }
-  }
-
-  /** One LSH-bucketed vector arrival: the bucket key and the vector id. */
-  final case class BucketedVec(bucket: Long, vec_id: Long)
-
-  /** One emitted near-dup candidate pair (a < b by construction). */
-  final case class CandidatePair(bucket: Long, a: Long, b: Long)
-
-  /** Streaming LSH candidate generation — the ingestion-time face of
-    * the batch embedding near-dup / sim_pair_hist pair join: each
-    * arriving vector pairs with every vector already seen in its
-    * bucket, then joins the bucket's member list. Downstream scores
-    * the candidates (cosine + threshold) exactly as the batch path
-    * does; emission here IS the batch bucket self-join, produced
-    * incrementally.
-    *
-    * State per bucket is the member-id list — the incremental-index
-    * pattern: it grows with the corpus (like [[keepFirstByKey]]'s
-    * forever horizon), because a near-dup a year later is still a
-    * near-dup. The LSH contract keeps individual buckets small
-    * (corpus / 2^planes on uniform data); a bucket that reaches
-    * `capPerBucket` stops ADMITTING members (existing members keep
-    * emitting against nothing new). Saturation is surfaced, not
-    * silent: the first admission that fills a bucket logs a WARN with
-    * the bucket key and cap — recall loss past that point is an
-    * operator-visible event, not something to infer from missing
-    * pairs. Each trigger slice is sorted on vec_id before admission
-    * (the transitionStream discipline): flatMapGroupsWithState's
-    * within-trigger group iterator order is unspecified, so an
-    * unsorted fold would make the admitted set near the cap
-    * nondeterministic across runs of the same input; with the sort
-    * the admitted set is a pure function of the trigger slices. A
-    * replayed vec_id is ignored (no self-pairs, no re-emission), so
-    * duplicate ingestion cannot corrupt the candidate set; below the
-    * cap the emitted pair SET equals the batch bucket self-join
-    * regardless of arrival order (the equivalence spec's contract).
-    */
-  def lshCandidates(
-      vecs: Dataset[BucketedVec],
-      capPerBucket: Int = 1024): Dataset[CandidatePair] = {
-    import vecs.sparkSession.implicits._
-    require(capPerBucket > 1, s"capPerBucket must be > 1, got $capPerBucket")
-    vecs.groupByKey(_.bucket).flatMapGroupsWithState(
-      OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-      (bucket: Long, it: Iterator[BucketedVec], state: GroupState[List[Long]]) =>
-        var members = state.getOption.getOrElse(Nil)
-        var count = members.size // once per trigger, then O(1) upkeep
-        val out = scala.collection.mutable.ArrayBuffer.empty[CandidatePair]
-        it.toIndexedSeq.sortBy(_.vec_id).foreach { v =>
-          if (count < capPerBucket && !members.contains(v.vec_id)) {
-            members.foreach { m =>
-              out += CandidatePair(bucket, math.min(m, v.vec_id), math.max(m, v.vec_id))
-            }
-            members = v.vec_id :: members
-            count += 1
-            if (count == capPerBucket)
-              org.slf4j.LoggerFactory.getLogger("graft.streaming.StatefulOps")
-                .warn(s"lshCandidates bucket $bucket reached capPerBucket=" +
-                  s"$capPerBucket — further arrivals in this bucket will " +
-                  "not generate candidate pairs (recall loss)")
-          }
-        }
-        state.update(members)
-        out.iterator
-    }
-  }
-
-  /** One transition-counting input event. */
-  final case class TypedEv(user_id: Long, ts: Timestamp, event_id: Long, event_type: String)
-
-  /** One observed (from -> to) transition in a user's event chain. */
-  final case class Transition(user_id: Long, from_type: String, to_type: String)
-
-  /** Streaming event-type transition extraction — the continuous face
-    * of the batch `q_events_markov` operator: per user, each arriving
-    * event pairs with that user's PREVIOUS event to emit one
-    * (from, to) transition; a downstream count by (from, to) is the
-    * running transition matrix.
-    *
-    * State per user is ONE string — the chain tail's event type — so
-    * state tracks the user population, never event history. In-batch
-    * disorder is handled by sorting the trigger slice on
-    * (ts, event_id), the same deterministic order the batch lead()
-    * window uses; across triggers the chain follows ARRIVAL order (no
-    * cross-trigger reordering or late-event guard — a late event
-    * chains after whatever arrived before it), which equals the batch
-    * order whenever ingestion is time-ordered per key — the
-    * equivalence spec's contract, as with packStream.
-    */
-  def transitionStream(events: Dataset[TypedEv]): Dataset[Transition] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id).flatMapGroupsWithState(
-      OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-      (user: Long, it: Iterator[TypedEv], state: GroupState[String]) =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[Transition]
-        var prev = state.getOption
-        it.toIndexedSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-          prev.foreach(t => out += Transition(user, t, e.event_type))
-          prev = Some(e.event_type)
-        }
-        prev.foreach(state.update)
-        out.iterator
-    }
-  }
-
   /** One LSH band arrival of the streaming near-dup screen: a document
     * observed under one of its minhash band keys.
     */
@@ -704,11 +339,11 @@ object StatefulOps extends Serializable {
     * seen — a document arriving after its bucket's eviction re-admits
     * as "first", the same within-horizon trade dedupWithinWatermark
     * documents. Determinism: each trigger slice is sorted on doc_id
-    * (the transitionStream discipline), and the verdict is
-    * `doc_id == min-after-folding` — idempotent under replay (a
-    * re-delivered document re-derives its own verdict rather than
-    * demoting itself), so at-least-once delivery cannot corrupt the
-    * kept set. With time-monotone (doc_id-ordered) arrival and no
+    * (the group iterator's order within a trigger is unspecified), and
+    * the verdict is `doc_id == min-after-folding` — idempotent under
+    * replay (a re-delivered document re-derives its own verdict rather
+    * than demoting itself), so at-least-once delivery cannot corrupt
+    * the kept set. With time-monotone (doc_id-ordered) arrival and no
     * eviction mid-run, the kept set equals the batch rule "doc is the
     * minimum of every band bucket it occupies" — the DuckDB oracle of
     * q_stream_neardup.

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The scalar JVM digest (Cols.hex60Scalar) must stay bit-identical to
-  * the hex60 Column chain it twins — the contract every consumer
-  * (VectorFns plane weights, streaming cmsBucket) depends on.
+  * the hex60 Column chain it twins — the contract its consumer
+  * (VectorFns plane weights) depends on.
   */
 class ColsSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
@@ -22,25 +22,6 @@ class ColsSpec extends AnyFunSuite with SparkSessionTestWrapper {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     all.foreach { s =>
       assert(Cols.hex60Scalar(s) === viaColumn(s), s"hex60 twins diverge on '$s'")
-    }
-  }
-
-  test("hllRegister scalar twin equals the SQL register formula on arbitrary keys") {
-    import spark.implicits._
-    // the q_sketch_hll SQL register pair: (hex60 % 256, leading-zero
-    // rank of the 52-bit remainder via minimal-binary length)
-    val keys = ((0 until 300).map(_.toString) ++
-      Seq("", "a", " ", "héllo", "10000000", "-1")).distinct
-    val viaSql = keys.toDF("s")
-      .select(col("s"),
-        (Cols.hex60(col("s")) % 256).as("bucket"),
-        when(shiftright(Cols.hex60(col("s")), 8) === 0, lit(53))
-          .otherwise(lit(53) - length(bin(shiftright(Cols.hex60(col("s")), 8))))
-          .as("rho"))
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getAs[Number]("rho").longValue)).toMap
-    keys.foreach { s =>
-      assert(graft.streaming.StatefulOps.hllRegister(s) === viaSql(s),
-        s"hllRegister twins diverge on '$s'")
     }
   }
 }

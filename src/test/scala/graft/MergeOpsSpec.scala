@@ -116,6 +116,25 @@ class MergeOpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
       assert(MergeOps.reportSample(d, key, n) === twoActions(d, key, n), s"$name, n=$n")
   }
 
+  test("a shared column that is text on one side only is coalesced as text, either way round") {
+    def schema(t: DataType) = StructType(Seq(StructField("id", LongType), StructField("v", t)))
+    def merged(p: DataFrame, s: DataFrame) = {
+      val out = MergeOps.coalesceMerge(p, s, "id")
+      assert(out.schema("v").dataType === StringType)
+      out.collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
+    }
+    // string primary against a double secondary holding a NaN and a value
+    assert(merged(
+      df(schema(StringType), Row(1L, null), Row(2L, null), Row(3L, "n/a")),
+      df(schema(DoubleType), Row(1L, Double.NaN), Row(2L, 222.0), Row(3L, 333.0))) ===
+      Map(1L -> None, 2L -> Some("222.0"), 3L -> Some("n/a")))
+    // a double primary holding a NaN against a string secondary
+    assert(merged(
+      df(schema(DoubleType), Row(1L, Double.NaN), Row(2L, Double.NaN), Row(3L, 10.5)),
+      df(schema(StringType), Row(1L, null), Row(2L, "n/a"), Row(3L, "x"))) ===
+      Map(1L -> None, 2L -> Some("n/a"), 3L -> Some("10.5")))
+  }
+
   test("nanToNull leaves non-float columns untouched and nulls NaNs") {
     val out = MergeOps.nanToNull(primary).collect()
       .map(r => (r.getLong(0), r.getString(2)) -> r).toMap

@@ -249,7 +249,7 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     Seq(Row(1L, 111.0, "east"), Row(2L, 222.0, "west")) ++
       (10L to 40L).map(i => Row(i, i.toDouble, s"r$i"))
 
-  test("failure matrix: a string column meeting a double one is cast to double") {
+  test("failure matrix: a string column meeting a double one is coalesced as text") {
     val s = matrixSpec("clash-numeric", """[{"id": 1, "qty": "10.5"}, {"id": 2, "qty": null}]""",
       clashSecondary)
     assert(ranReduced(s))
@@ -259,17 +259,16 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assertDest(s, Seq("merged.csv"))
   }
 
-  test("failure matrix: a non-numeric string meeting a double column fails the write, nothing lands") {
+  test("failure matrix: a non-numeric string meeting a double column lands as text") {
     val s = matrixSpec("clash-text", """[{"id": 1, "qty": "n/a"}, {"id": 2, "qty": "2.0"}]""",
       clashSecondary)
     assert(ranReduced(s))
     val notifier = new RecordingNotifier
     val result = runChecked(s, notifier)
-    assert(result.left.toOption.map(_.stage).contains("write-csv"))
-    assert(result.left.toOption.exists(_.message.contains("CAST_INVALID_INPUT")))
-    assert(notifier.messages.count(_.startsWith("Error")) === 1)
-    assert(notifier.messages.last.startsWith("Error: failed to write CSV merged.csv"))
-    assertDest(s, Nil)
+    assert(result.map(r => (r.mergedRows, r.unmatchedRows)) === Right((2L, 31L)))
+    assert(csvLines(s) === Seq("id,qty,region", "1,n/a,east", "2,2.0,west"))
+    assert(notifier.messages.map(_.takeWhile(_ != ' ')) === Seq("Unmatched", "Success:"))
+    assertDest(s, Seq("merged.csv"))
   }
 
   test("failure matrix: a non-numeric string key meeting a numeric one is left unmatched") {

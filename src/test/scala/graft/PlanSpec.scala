@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - no CartesianProduct / BroadcastNestedLoopJoin anywhere (every
   *     candidate-generation step must be key-bucketed, never all-pairs);
   *   - dimension filters reach the parquet scans (PushedFilters);
-  *   - the merge joins broadcast their deduped dimension side.
+  *   - the merge joins broadcast their deduped dimension side;
+  *   - a dim-filtered join prunes the partitioned fact's scan at runtime.
   *
   * These run at sf0.001: plan SHAPE is scale-invariant, which is the
   * point — a plan that is bucket-joined and pushed-down here is the
@@ -208,6 +209,34 @@ class PlanSpec extends AnyFunSuite with SparkSessionTestWrapper {
       assert(!hasSemiJoin(merge(name)), s"$name, whose secondary is the smaller input, plans a LeftSemi")
     }
     spark.catalog.clearCache()
+  }
+
+  test("dynamic partition pruning fires on a dim-filtered join against the partitioned fact") {
+    // the 100 TB join pattern: fact partitioned on the join key, dim
+    // filtered at runtime — Spark must inject a dynamic pruning
+    // subquery into the fact scan so only the dim's surviving
+    // partitions are read (static PartitionFilters can't see through
+    // the join). The dim must be FILE-backed: a local relation's
+    // filter constant-folds away (ConvertToLocalRelation) before the
+    // pruning rule looks for a selective predicate, silently
+    // disabling DPP — the same trap a notebook-built dim hits in
+    // production.
+    import org.apache.spark.sql.functions.{broadcast, col}
+    import spark.implicits._
+    val factDir = java.nio.file.Files.createTempDirectory("graft-dpp-fact").toString
+    val dimDir = java.nio.file.Files.createTempDirectory("graft-dpp-dim").toString
+    (1 to 200).map(i => (s"t${i % 4}", i.toLong)).toDF("etype", "id")
+      .write.mode("overwrite").partitionBy("etype").parquet(factDir)
+    Seq(("t1", "keep"), ("t2", "drop")).toDF("d_etype", "label")
+      .write.mode("overwrite").parquet(dimDir)
+    val dim = spark.read.parquet(dimDir)
+    val joined = spark.read.parquet(factDir)
+      .join(broadcast(dim.filter(col("label") === "keep")),
+        col("etype") === col("d_etype"))
+    val plan = joined.queryExecution.executedPlan.toString
+    assert(plan.toLowerCase.contains("dynamicpruning"),
+      s"no dynamic pruning subquery in the fact scan:\n$plan")
+    assert(joined.count() === 50)
   }
 
   test("column pruning reaches the scans through projections and conversions") {

@@ -90,267 +90,6 @@ class StatefulStreamingSpec extends AnyFunSuite with SparkSessionTestWrapper {
     } finally q.stop()
   }
 
-  test("streaming packer == batch text_seq_pack across multiple triggers") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StatefulOps.DocTok
-    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = "/root/testdata/sf0.001"
-    val input = Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), col("lang"),
-        (col("doc_id") % ops.TextOps.PackShards).as("shard"),
-        size(split(col("text"), " ")).cast("long").as("n_tokens"))
-      .as[DocTok].collect().sortBy(_.doc_id)
-    val ms = MemoryStream[DocTok]
-    val q = StatefulOps.packStream(ms.toDS(), ops.TextOps.PackBudget)
-      .writeStream.format("memory").queryName("stream_pack")
-      .outputMode("append")
-      .start()
-    try {
-      // id-ordered ingestion split over several triggers: bins must
-      // carry the cumulative state across trigger boundaries
-      input.grouped(120).foreach { chunk =>
-        ms.addData(chunk.toSeq)
-        q.processAllAvailable()
-      }
-      val got = spark.table("stream_pack").collect().map(_.toString).sorted
-      val want = SparkEntry.queries("text_seq_pack")(spark, dir)
-        .select("doc_id", "lang", "shard", "n_tokens", "bin_id", "bin_off")
-        .collect().map(_.toString).sorted
-      assert(got.nonEmpty)
-      assert(got === want)
-    } finally q.stop()
-  }
-
-  test("transitionStream counts == batch q_events_markov transition matrix") {
-    // stage the four TypedEv columns; the single-file available-now
-    // batch sorts each user's slice on (ts, event_id) — the identical
-    // deterministic order the batch lead() window uses
-    val dir = Files.createTempDirectory("graft-transitions-staged").toString
-    Tables.load(spark, "/root/testdata/sf0.001", "events")
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .write.mode("overwrite").parquet(dir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(dir).schema).parquet(dir)
-      .as[StatefulOps.TypedEv]
-    val q = StatefulOps.transitionStream(stream)
-      .writeStream.format("memory").queryName("stateful_transitions")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    assert(q.awaitTermination(120000), "streaming query timed out")
-    val got = spark.table("stateful_transitions")
-      .groupBy(col("from_type").as("event_type"), col("to_type").as("next_type"))
-      .agg(count(lit(1)).as("n"))
-      .collect().map(_.toString).sorted
-    val want = SparkEntry.queries("q_events_markov")(spark, "/root/testdata/sf0.001")
-      .select("event_type", "next_type", "n")
-      .collect().map(_.toString).sorted
-    assert(got.nonEmpty)
-    assert(got === want)
-  }
-
-  test("transitionStream carries the chain tail across trigger boundaries") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import java.sql.Timestamp
-    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def ev(id: Long, min: Int, t: String) =
-      StatefulOps.TypedEv(7L, Timestamp.valueOf(f"2024-01-01 10:$min%02d:00"), id, t)
-    val ms = MemoryStream[StatefulOps.TypedEv]
-    val q = StatefulOps.transitionStream(ms.toDS())
-      .writeStream.format("memory").queryName("split_transitions")
-      .outputMode("append").start()
-    try {
-      // trigger 1 ends on "view"; trigger 2 must chain FROM it
-      ms.addData(ev(1, 1, "click"), ev(2, 2, "view"))
-      q.processAllAvailable()
-      ms.addData(ev(3, 3, "purchase"))
-      q.processAllAvailable()
-      val got = spark.table("split_transitions")
-        .select("from_type", "to_type").collect()
-        .map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-      assert(got === Seq(("click", "view"), ("view", "purchase")))
-    } finally q.stop()
-  }
-
-  test("lshCandidates streams exactly the batch bucket self-join pair set") {
-    import graft.functions.VectorFns
-    val dir2 = Files.createTempDirectory("graft-lsh-staged").toString
-    val bucketed = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-      .select(VectorFns.lshBucket(VectorFns.toDouble(col("embedding"))).as("bucket"),
-        col("vec_id"))
-    bucketed.write.mode("overwrite").parquet(dir2)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(dir2).schema).parquet(dir2)
-      .as[StatefulOps.BucketedVec]
-    val q = StatefulOps.lshCandidates(stream)
-      .writeStream.format("memory").queryName("lsh_candidates")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    assert(q.awaitTermination(120000), "streaming query timed out")
-    val got = spark.table("lsh_candidates")
-      .select("bucket", "a", "b").collect().map(_.toString).sorted
-    val l = bucketed.select(col("bucket"), col("vec_id").as("a"))
-    val r = bucketed.select(col("bucket"), col("vec_id").as("b"))
-    val want = l.join(r, "bucket").filter(col("a") < col("b"))
-      .select("bucket", "a", "b").collect().map(_.toString).sorted
-    assert(got.nonEmpty, "no candidate pairs — vacuous fixture")
-    assert(got === want)
-  }
-
-  test("transitionStream state survives a checkpointed query RESTART") {
-    // The cross-trigger test above proves the chain tail carries across
-    // trigger boundaries within ONE query; this proves it carries across
-    // PROCESS restarts — GroupState must round-trip through the
-    // checkpoint (a state-encoder regression breaks recovery silently,
-    // not at compile time). File source + parquet sink: the memory sink
-    // cannot recover from a checkpoint.
-    import java.sql.Timestamp
-    val root = Files.createTempDirectory("graft-transition-restart").toString
-    val (src, ckpt, out) = (s"$root/src", s"$root/ckpt", s"$root/out")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-    def ev(id: Long, min: Int, t: String) =
-      StatefulOps.TypedEv(7L, Timestamp.valueOf(f"2024-01-01 10:$min%02d:00"), id, t)
-    def writeBatch(evs: StatefulOps.TypedEv*): Unit =
-      spark.createDataset(evs)(org.apache.spark.sql.Encoders.product)
-        .write.mode("append").parquet(src)
-    def run(): Unit = {
-      val q = StatefulOps.transitionStream(
-        spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-          .as[StatefulOps.TypedEv])
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      assert(q.awaitTermination(120000), "streaming query timed out")
-    }
-    // run 1 ends user 7's chain on "view"
-    writeBatch(ev(1, 1, "click"), ev(2, 2, "view"))
-    run()
-    // run 2 (fresh query instance, same checkpoint) must chain FROM it
-    writeBatch(ev(3, 3, "purchase"))
-    run()
-    val got = spark.read.parquet(out)
-      .select("from_type", "to_type").collect()
-      .map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-    assert(got === Seq(("click", "view"), ("view", "purchase")),
-      "restart lost the cross-run chain tail")
-  }
-
-  test("lshCandidates bucket state survives a checkpointed query RESTART") {
-    // Same recovery contract as the transition pin, for the OTHER state
-    // shape: the bucket member list is List[Long] (collection encoder,
-    // not a product), and a vector arriving after the restart must pair
-    // with members admitted before it.
-    val root = Files.createTempDirectory("graft-lsh-restart").toString
-    val (src, ckpt, out) = (s"$root/src", s"$root/ckpt", s"$root/out")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-    def writeBatch(vs: StatefulOps.BucketedVec*): Unit =
-      spark.createDataset(vs)(org.apache.spark.sql.Encoders.product)
-        .write.mode("append").parquet(src)
-    def run(): Unit = {
-      val q = StatefulOps.lshCandidates(
-        spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-          .as[StatefulOps.BucketedVec])
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      assert(q.awaitTermination(120000), "streaming query timed out")
-    }
-    writeBatch(StatefulOps.BucketedVec(5L, 10L), StatefulOps.BucketedVec(5L, 11L))
-    run()
-    writeBatch(StatefulOps.BucketedVec(5L, 12L))
-    run()
-    val got = spark.read.parquet(out).select("a", "b").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(got === Seq((10L, 11L), (10L, 12L), (11L, 12L)),
-      "restart lost the bucket member list")
-  }
-
-  test("lshCandidates admits an identical set across two runs at a saturating cap") {
-    // The determinism contract from the admission sort: with a cap SMALL
-    // enough that buckets saturate mid-stream and the input split across
-    // multiple triggers, the admitted member set (hence the emitted pair
-    // set) must be a pure function of the staged input — identical across
-    // independent runs, not dependent on group-iterator order.
-    import graft.functions.VectorFns
-    val staged = Files.createTempDirectory("graft-lsh-cap-staged").toString
-    Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-      .select(VectorFns.lshBucket(VectorFns.toDouble(col("embedding"))).as("bucket"),
-        col("vec_id"))
-      .repartition(4) // several files => several AvailableNow slices below
-      .write.mode("overwrite").parquet(staged)
-
-    def runOnce(tag: String): Seq[String] = {
-      val stream = spark.readStream
-        .schema(spark.read.parquet(staged).schema)
-        .option("maxFilesPerTrigger", 1) // force multi-trigger admission
-        .parquet(staged)
-        .as[StatefulOps.BucketedVec]
-      val q = StatefulOps.lshCandidates(stream, capPerBucket = 3)
-        .writeStream.format("memory").queryName(s"lsh_cap_$tag")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      assert(q.awaitTermination(120000), "streaming query timed out")
-      spark.table(s"lsh_cap_$tag").select("bucket", "a", "b")
-        .collect().map(_.toString).sorted.toSeq
-    }
-
-    val first = runOnce("r1")
-    val second = runOnce("r2")
-    assert(first.nonEmpty, "cap never exercised — vacuous fixture")
-    assert(first === second,
-      "admitted candidate set differs across runs of the same staged input")
-    // cap actually bit: emitted pairs per bucket never exceed C(3,2)=3
-    val perBucket = first.groupBy(_.split(",")(0)).view.mapValues(_.size)
-    assert(perBucket.values.max <= 3, s"cap violated: $perBucket")
-  }
-
-  test("streamed candidates + batch scoring == the oracle-gated dedup_embedding") {
-    // The full-circle pin: run the REGISTERED query's own augmented
-    // corpus through the streaming candidate generator, score the
-    // streamed pairs with the batch cosine expressions, and the result
-    // must equal the DuckDB-gated dedup_embedding output exactly —
-    // streaming ingestion is a drop-in for the batch self-join, not
-    // just similar to a hand-built fixture join.
-    import graft.functions.VectorFns
-    import graft.ops.DedupOps
-    val dir = "/root/testdata/sf0.001"
-    val e = Tables.load(spark, dir, "embeddings")
-    val embD = VectorFns.toDouble(col("embedding"))
-    val aug = e.select(col("vec_id"), embD.as("emb")).union(
-      e.filter(col("vec_id") % 10 === 0).select(
-        (col("vec_id") + lit(DedupOps.AugBase)).as("vec_id"),
-        transform(embD, (x, i) => when(i === 0, x + lit(0.01)).otherwise(x)).as("emb")))
-    val v = aug.select(col("vec_id"), col("emb"),
-      VectorFns.normSq(col("emb")).as("nsq"),
-      VectorFns.lshBucket(col("emb")).as("bucket")).persist()
-    val staged = Files.createTempDirectory("graft-lsh-embed-staged").toString
-    v.select(col("bucket"), col("vec_id")).write.mode("overwrite").parquet(staged)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(staged).schema).parquet(staged)
-      .as[StatefulOps.BucketedVec]
-    val q = StatefulOps.lshCandidates(stream)
-      .writeStream.format("memory").queryName("lsh_embed_candidates")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    assert(q.awaitTermination(120000), "streaming query timed out")
-    val got = spark.table("lsh_embed_candidates")
-      .join(v.select(col("vec_id").as("a"), col("emb").as("ea"), col("nsq").as("na")), "a")
-      .join(v.select(col("vec_id").as("b"), col("emb").as("eb"), col("nsq").as("nb")), "b")
-      .select(col("a").as("vec_a"), col("b").as("vec_b"),
-        VectorFns.cosine(VectorFns.dot(col("ea"), col("eb")),
-          col("na"), col("nb")).as("cos"))
-      .filter(col("cos") >= 0.99)
-      .collect().map(_.toString).sorted
-    val want = SparkEntry.queries("dedup_embedding")(spark, dir)
-      .collect().map(_.toString).sorted
-    v.unpersist()
-    assert(got.nonEmpty, "no scored near-dup pairs — vacuous fixture")
-    assert(got === want)
-  }
-
   test("dropDuplicatesWithinWatermark emits exactly the distinct key set") {
     val q = StatefulOps.dedupWithinWatermark(
       streamEvents, Seq("user_id"), "ts", "1 hour")
