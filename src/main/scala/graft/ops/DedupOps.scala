@@ -5,6 +5,7 @@ import graft.functions.VectorFns
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType}
+import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for a training-data pipeline: exact,
   * MinHash+LSH, SimHash, n-gram Jaccard with prefix blocking, and
@@ -859,14 +860,19 @@ object DedupOps {
     * verification is two hash joins against the compact per-doc set
     * arrays and a codegen array_intersect per pair.
     */
-  private[graft] def allPairsOver(corpus: DataFrame, p: Int, q: Int): DataFrame =
-    allPairsOverSets(shingleSets(corpus).persist(), p, q)
+  private[graft] def allPairsOver(corpus: DataFrame, p: Int, q: Int,
+      pairs: PairJoin = InPlan): DataFrame =
+    allPairsOverSets(shingleSets(corpus).persist(), p, q, pairs)
 
   /** [[allPairsOver]] over a prebuilt (doc_id, shingles) relation
     * (callers persist it — the exploded token side and the two
-    * verification joins all read it).
+    * verification joins all read it). `pairs` runs the candidate join;
+    * a sliced run's slices key on the prefix token, and a pair that
+    * several slices' tokens generate is distinct'd across them before
+    * the one verification pass.
     */
-  private[graft] def allPairsOverSets(ss: DataFrame, p: Int, q: Int): DataFrame = {
+  private[graft] def allPairsOverSets(ss: DataFrame, p: Int, q: Int,
+      pairs: PairJoin = InPlan): DataFrame = {
     val sh = ss.select(col("doc_id"), explode(col("shingles")).as("tok"))
     // PPJoin consumes only each doc's tokens in the global rarest-first
     // ORDER — never the rank VALUES — and (df, tok) is unique per
@@ -903,9 +909,9 @@ object DedupOps {
       .select(col("doc_id"), col("p.tok").as("tok"),
         (col("pi") + 1).cast(LongType).as("pos"), col("n"))
       .persist()
-    val cand = pre.select(col("doc_id").as("doc_a"), col("tok"),
+    val cand = pairs(pre, "tok")(r => r.select(col("doc_id").as("doc_a"), col("tok"),
         col("pos").as("pos_a"), col("n").as("n_a"))
-      .join(pre.select(col("doc_id").as("doc_b"), col("tok"),
+      .join(r.select(col("doc_id").as("doc_b"), col("tok"),
         col("pos").as("pos_b"), col("n").as("n_b")), Seq("tok"))
       .filter(col("doc_a") < col("doc_b") &&
         // PPJoin length filter: J >= p/q forces q*min(n) >= p*max(n)
@@ -921,7 +927,8 @@ object DedupOps {
       .select("doc_a", "doc_b", "n_a", "n_b")
       // plain distinct, for the same map-side-partial-dedup reason as
       // the band join's candidate set
-      .distinct()
+      .distinct(),
+      _.distinct())
     // shingle sets sorted in the per-DOC projection under the join
     // (once per document side, not once per candidate pair), so
     // n_inter is the codegen merge scan instead of a per-pair
@@ -940,164 +947,48 @@ object DedupOps {
           (col("n_a") + col("n_b") - col("n_inter"))).as("jaccard"))
   }
 
-  // ── disk-frugal sliced execution (scratch-bounded certification) ──
-  //
-  // The two exact all-pairs-flavored relations (dedup_shingle_cosine,
-  // dedup_allpairs) are the registry's only rows whose ONE-SHOT
-  // shuffle scratch outgrows a single host's free disk at sf100 (~45+
-  // GB for the postings self-join alone). On a real cluster the same
-  // shuffle spreads over every executor's local disks, so the registry
-  // plans are the right production shape — these sliced twins exist to
-  // CERTIFY those rows' results on a one-disk host: the pair-generating
-  // self-join keys on the shingle/prefix token, so restricting both
-  // sides to one deterministic hash-slice of the key space partitions
-  // the candidate work disjointly; each slice's bounded output lands in
-  // a scratch parquet and the slices' union reduces to the identical
-  // relation (co-occurrence counts sum across slices; candidate sets
-  // union-distinct). Invoked by graft.VerifySliced, never registered —
-  // the oracle replayed against the output is the registry row's own.
-
-  /** The sliced-execution loop: runs `perSlice` over each of `slices`
-    * disjoint hash slices of `rel` (every `keyCol` value lands in
-    * exactly one), lands each slice's output in the `scratch` parquet,
-    * and reads the union back. The GC nudge after each slice lets
-    * ContextCleaner drop the finished slice's shuffle files — without
-    * it the slices' files accumulate and re-create the very peak this
-    * loop exists to avoid.
+  /** DuckDB twin of [[lshRecallOver]] over any (doc_id, text) corpus
+    * SQL. It computes both sides independently, so a regression in the
+    * Spark side's subset argument would hash-mismatch, not silently
+    * pass.
     */
-  private[graft] def sliced(rel: DataFrame, keyCol: String, slices: Int, scratch: String)(
-      perSlice: DataFrame => DataFrame): DataFrame = {
-    (0 until slices).foreach { i =>
-      perSlice(rel.filter(pmod(xxhash64(col(keyCol)), lit(slices)) === lit(i)))
-        .write.mode(if (i == 0) "overwrite" else "append").parquet(scratch)
-      System.gc()
-    }
-    rel.sparkSession.read.parquet(scratch)
-  }
+  private def lshRecallSqlOver(corpusSql: String): String =
+    s"""WITH lsh AS (${minhashPairsSqlOver(corpusSql)}),
+       |truth AS (${allPairsSqlOver(corpusSql, 1, 2)}),
+       |m AS (
+       |  SELECT CASE WHEN t.doc_a IS NOT NULL THEN 1 ELSE 0 END AS in_t,
+       |         CASE WHEN l.doc_a IS NOT NULL THEN 1 ELSE 0 END AS in_l
+       |  FROM truth t FULL OUTER JOIN lsh l
+       |    ON l.doc_a = t.doc_a AND l.doc_b = t.doc_b)
+       |SELECT CAST(sum(in_t) AS BIGINT) AS n_truth,
+       |  CAST(sum(in_l) AS BIGINT) AS n_lsh,
+       |  CAST(sum(in_t * in_l) AS BIGINT) AS n_hit,
+       |  CAST(sum(in_t * in_l) AS DOUBLE) / sum(in_t) AS recall
+       |FROM m""".stripMargin
 
-  /** [[Q dedup_shingle_cosine]]'s exact relation via `slices`
-    * shingle-hash slices. Identity: the per-pair co-occurrence count
-    * c = Σ_i c_i over slices (each shared shingle lives in exactly one
-    * slice), and norms/df/threshold never touched the slicing. Memory,
-    * not disk, backs the reuse: the capped postings are persisted once
-    * and every slice filters the cache; each slice's only shuffles are
-    * its own 1/K-volume pair join + partial agg, and the scratch the
-    * slice leaves behind is surrendered before the next starts (see
-    * [[sliced]]).
+  /** [[Q dedup_lsh_recall]]'s body over any (doc_id, text) corpus
+    * (`dedup_lsh_recall_sampled` runs it over a 1/8 doc sample): the
+    * MinHash-band candidate generator's recall against the exact
+    * All-Pairs truth at J >= 1/2. `pairs` runs the truth side's
+    * candidate join; the band generator's shuffles are linear in docs +
+    * candidates and never need the scratch bound.
     */
-  private[graft] def shingleCosineSliced(
-      s: SparkSession, dir: String, slices: Int, scratch: String): DataFrame = {
-    val tok = docsAug(s, dir).select(col("doc_id"), split(col("text"), " ").as("tokens"))
-    val sh = tok.filter(size(col("tokens")) >= 3)
-      .select(col("doc_id"), explode(shingles3(col("tokens"))).as("ss"))
-      .select(col("doc_id"), Cols.hex60(col("ss")).as("s"))
-      .persist()
-    val nsq = sh.groupBy("doc_id").agg(count(lit(1)).as("n")).persist()
-    nsq.count() // materialize norms before sh is released below
-    val dfq = sh.groupBy("s").agg(count(lit(1)).as("df"))
-    val shc = sh.join(dfq.filter(col("df") <= CosineDfCap).select("s"), "s")
-      .persist()
-    shc.count()
-    sh.unpersist()
-    val partials = sliced(shc, "s", slices, scratch) { sl =>
-      sl.as("a")
-        .join(sl.as("b"),
-          col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .agg(count(lit(1)).as("c"))
-    }
-    shc.unpersist()
-    val common = partials.groupBy("doc_a", "doc_b").agg(sum(col("c")).as("c"))
-    common
-      .join(nsq.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
-      .join(nsq.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        (col("c").cast(DoubleType) /
-          sqrt((col("na") * col("nb")).cast(DoubleType))).as("cosine"))
-      .filter(col("cosine") >= 0.5)
-  }
-
-  /** [[allPairsOverSets]]' exact relation via `slices` prefix-token
-    * hash slices over any (doc_id, text) corpus. Identity: a candidate
-    * pair generated by prefix tokens in several slices appears in each
-    * of their outputs — the cross-slice union is DISTINCT'd before the
-    * one verification pass, which is the registry plan's own (two hash
-    * joins against the compact per-doc set arrays + the codegen merge
-    * intersect). Slicing bounds only the candidate join, the scratch
-    * hog; the verification's shuffle is the candidate list + the set
-    * arrays, linear in docs and pairs.
-    */
-  private[graft] def allPairsSliced(
-      s: SparkSession, corpus: DataFrame, p: Int, q: Int,
-      slices: Int, scratch: String): DataFrame =
-    allPairsSlicedOverSets(s, shingleSets(corpus).persist(), p, q, slices, scratch)
-
-  /** [[allPairsSliced]] over a prebuilt persisted (doc_id, shingles)
-    * relation — factored out so [[lshRecallSliced]] can run the sliced
-    * exact truth side over the SAME persisted sets its band generator
-    * reads (the dedup_lsh_recall one-scan discipline).
-    */
-  private[graft] def allPairsSlicedOverSets(
-      s: SparkSession, ss: DataFrame, p: Int, q: Int,
-      slices: Int, scratch: String): DataFrame = {
-    val sh = ss.select(col("doc_id"), explode(col("shingles")).as("tok"))
-    val tr = sh.select(col("tok"), col("doc_id"),
-      count(lit(1)).over(org.apache.spark.sql.expressions.Window
-        .partitionBy("tok")).as("df"))
-    val ranked = tr.groupBy("doc_id")
-      .agg(sort_array(collect_list(struct(col("df"), col("tok")))).as("rt"))
-      .withColumn("n", size(col("rt")).cast(LongType))
-    val pre = ranked
-      .select(col("doc_id"), col("n"),
-        posexplode(expr(s"slice(rt, 1, cast(n - ($p * n + ${q - 1}) div $q + 1 as int))"))
-          .as(Seq("pi", "p")))
-      .select(col("doc_id"), col("p.tok").as("tok"),
-        (col("pi") + 1).cast(LongType).as("pos"), col("n"))
-      .persist()
-    pre.count()
-    val partials = sliced(pre, "tok", slices, scratch) { sl =>
-      sl.select(col("doc_id").as("doc_a"), col("tok"),
-          col("pos").as("pos_a"), col("n").as("n_a"))
-        .join(sl.select(col("doc_id").as("doc_b"), col("tok"),
-          col("pos").as("pos_b"), col("n").as("n_b")), Seq("tok"))
-        .filter(col("doc_a") < col("doc_b") &&
-          lit(q) * col("n_a") >= lit(p) * col("n_b") &&
-          lit(q) * col("n_b") >= lit(p) * col("n_a") &&
-          lit(1) + least(col("n_a") - col("pos_a"), col("n_b") - col("pos_b")) >=
-            expr(s"($p * (n_a + n_b) + ${p + q - 1}) div ${p + q}"))
-        .select("doc_a", "doc_b", "n_a", "n_b")
-        .distinct()
-    }
-    pre.unpersist()
-    val cand = partials.distinct()
-    val iv = cand
-      .join(ss.select(col("doc_id").as("doc_a"),
-        sort_array(col("shingles")).as("st_a")), Seq("doc_a"))
-      .join(ss.select(col("doc_id").as("doc_b"),
-        sort_array(col("shingles")).as("st_b")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"), col("n_a"), col("n_b"),
-        sortedIntersectCount(col("st_a"), col("st_b")).as("n_inter"))
-    iv.filter(lit(q) * col("n_inter") >= lit(p) *
-        (col("n_a") + col("n_b") - col("n_inter")))
-      .select(col("doc_a"), col("doc_b"), col("n_a"), col("n_b"), col("n_inter"),
-        (col("n_inter").cast(DoubleType) /
-          (col("n_a") + col("n_b") - col("n_inter"))).as("jaccard"))
-  }
-
-  /** [[Q dedup_lsh_recall]]'s exact relation with its truth side — the
-    * registry's other disk-unbounded exact All-Pairs surface (J >= 1/2
-    * over the augmented corpus) — produced via [[allPairsSlicedOverSets]].
-    * The band generator under test is the registry row's own machinery
-    * (its shuffles are linear in docs + candidates and certified at
-    * sf100 by dedup_minhash_lsh); only the truth join needed the
-    * scratch bound. Identity: the truth RELATION is slice-invariant
-    * (SlicedExecSpec), and the summary aggregate reads only relation
-    * contents, so the row's one-line result is unchanged.
-    */
-  private[graft] def lshRecallSliced(
-      s: SparkSession, dir: String, slices: Int, scratch: String): DataFrame = {
-    val sets = shingleSets(docsAug(s, dir)).persist()
-    val truth = allPairsSlicedOverSets(s, sets, 1, 2, slices, scratch)
+  private[graft] def lshRecallOver(corpus: DataFrame, pairs: PairJoin = InPlan): DataFrame = {
+    // ONE persisted shingle-set scan feeds both sides: the banded
+    // generator under test and the exact ground truth read the same
+    // sets, so the corpus is tokenized/shingled once, not twice.
+    val sets = shingleSets(corpus).persist()
+    // A VERIFIED lsh pair (candidate with exact J >= 1/2) is BY
+    // DEFINITION a member of the exact truth set (all pairs with
+    // J >= 1/2 over the same shingle sets; the double >= 0.5 compare
+    // and the integer 2*inter >= union cross-multiply agree exactly
+    // for int operands < 2^53). So instead of re-running the exact
+    // Jaccard verification joins on the lsh side, intersect the RAW
+    // band candidates with the truth set: n_lsh = n_hit =
+    // |candidates ∩ truth| — identical numbers, one full verification
+    // pass instead of two (the lsh verification was ~40% of this
+    // query's sf10 cost).
+    val truth = allPairsOverSets(sets, 1, 2, pairs)
       .select(col("doc_a"), col("doc_b")).persist()
     val hits = minhashCandPairsOverSets(sets)
       .join(truth, Seq("doc_a", "doc_b"), "left_semi")
@@ -1105,6 +996,70 @@ object DedupOps {
       .crossJoin(hits.agg(count(lit(1)).cast(LongType).as("hit")))
       .select(col("n_truth"), col("hit").as("n_lsh"), col("hit").as("n_hit"),
         (col("hit").cast(DoubleType) / col("n_truth")).as("recall"))
+  }
+
+  // ── one pair-row body, two ways to run its self-join ──────────────
+  //
+  // dedup_shingle_cosine, dedup_allpairs and dedup_lsh_recall are the
+  // registry's only rows whose ONE-SHOT shuffle scratch outgrows a
+  // single host's free disk at sf100 (~45+ GB for the postings
+  // self-join alone). Each has one body, which hands that self-join to
+  // a [[PairJoin]]. The registry runs it [[InPlan]], the right shape on
+  // a cluster, whose executors' disks share the shuffle.
+  // graft.VerifySliced runs it [[Sliced]] to CERTIFY the same rows on a
+  // one-disk host: the join keys on the shingle/prefix token, so
+  // restricting both sides to one hash-slice of the key space
+  // partitions the candidate work disjointly, and the row's merge
+  // reduces the slices' union to the identical relation
+  // (co-occurrence counts sum; candidate sets union-distinct).
+
+  /** How a row runs its pair-generating self-join: `join` over `rel`,
+    * whose pairs share a `key` value. `merge` reduces the union of
+    * per-slice outputs to the one-shot relation; `keep` and `drop` are
+    * the body's other cached relations (see [[sliced]]).
+    */
+  private[graft] sealed trait PairJoin {
+    def apply(rel: DataFrame, key: String,
+        keep: Seq[DataFrame] = Nil, drop: Seq[DataFrame] = Nil)(
+        join: DataFrame => DataFrame, merge: DataFrame => DataFrame): DataFrame = this match {
+      case InPlan => join(rel)
+      case Sliced(slices, scratch) => merge(sliced(rel, key, slices, scratch, keep, drop)(join))
+    }
+  }
+
+  /** The registry's shape: the join is part of the row's one plan. */
+  private[graft] case object InPlan extends PairJoin
+
+  /** The join runs once per slice, landing under `scratch`. */
+  private[graft] final case class Sliced(slices: Int, scratch: String) extends PairJoin
+
+  /** The sliced-execution loop: runs `perSlice` over each of `slices`
+    * disjoint hash slices of `rel` (every `keyCol` value lands in
+    * exactly one), lands each slice's output in the `scratch` parquet,
+    * and reads the union back. Memory, not disk, backs the reuse:
+    * before the first slice `rel` and `keep` (what the caller reads
+    * after the loop) are cached and materialized, then `drop` (what
+    * they were built from) is released, so every slice filters the
+    * cache; `rel` is released after the last slice. The GC nudge after
+    * each slice lets ContextCleaner drop the finished slice's shuffle
+    * files — without it the slices' files accumulate and re-create the
+    * very peak this loop exists to avoid.
+    */
+  private[graft] def sliced(rel: DataFrame, keyCol: String, slices: Int, scratch: String,
+      keep: Seq[DataFrame] = Nil, drop: Seq[DataFrame] = Nil)(
+      perSlice: DataFrame => DataFrame): DataFrame = {
+    (rel +: keep).foreach { d =>
+      if (d.storageLevel == StorageLevel.NONE) d.persist()
+      d.count()
+    }
+    drop.foreach(_.unpersist())
+    (0 until slices).foreach { i =>
+      perSlice(rel.filter(pmod(xxhash64(col(keyCol)), lit(slices)) === lit(i)))
+        .write.mode(if (i == 0) "overwrite" else "append").parquet(scratch)
+      System.gc()
+    }
+    rel.unpersist()
+    rel.sparkSession.read.parquet(scratch)
   }
 
   /** Per-document cross-corpus duplicated-span fraction over any
@@ -1170,7 +1125,8 @@ object DedupOps {
     * na·nb, the only bound that keeps c a join-match count) prunes 5.0%
     * of join output at sf1 — under the noise floor, not taken.
     */
-  private[graft] def shingleCosineOver(corpus: DataFrame): DataFrame = {
+  private[graft] def shingleCosineOver(corpus: DataFrame,
+      pairs: PairJoin = InPlan): DataFrame = {
     val tok = corpus.select(col("doc_id"), split(col("text"), " ").as("tokens"))
     // persist: the exploded postings list feeds three consumers
     // (norms, df, the pair join)
@@ -1181,11 +1137,15 @@ object DedupOps {
     val nsq = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val dfq = sh.groupBy("s").agg(count(lit(1)).as("df"))
     val shc = sh.join(dfq.filter(col("df") <= CosineDfCap).select("s"), "s")
-    val common = shc.as("a")
-      .join(shc.as("b"),
+    // a sliced run sums the per-slice counts (each shared shingle lives
+    // in exactly one slice) and holds only shc and the norms across its
+    // slices, releasing the postings both were built from
+    val common = pairs(shc, "s", keep = Seq(nsq), drop = Seq(sh))(r => r.as("a")
+      .join(r.as("b"),
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("c"))
+      .agg(count(lit(1)).as("c")),
+      _.groupBy("doc_a", "doc_b").agg(sum(col("c")).as("c")))
     common
       .join(nsq.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
       .join(nsq.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
@@ -1448,44 +1408,8 @@ object DedupOps {
     // Scale shape: both sides are the already-bucketed pipelines; the
     // meet join keys on (doc_a, doc_b) and the summary is one hash agg
     // — no new all-pairs surface anywhere.
-    Q("dedup_lsh_recall",
-      s"""WITH lsh AS ($minhashPairsSql),
-         |truth AS (${allPairsSqlOver(docsAugSql, 1, 2)}),
-         |m AS (
-         |  SELECT CASE WHEN t.doc_a IS NOT NULL THEN 1 ELSE 0 END AS in_t,
-         |         CASE WHEN l.doc_a IS NOT NULL THEN 1 ELSE 0 END AS in_l
-         |  FROM truth t FULL OUTER JOIN lsh l
-         |    ON l.doc_a = t.doc_a AND l.doc_b = t.doc_b)
-         |SELECT CAST(sum(in_t) AS BIGINT) AS n_truth,
-         |  CAST(sum(in_l) AS BIGINT) AS n_lsh,
-         |  CAST(sum(in_t * in_l) AS BIGINT) AS n_hit,
-         |  CAST(sum(in_t * in_l) AS DOUBLE) / sum(in_t) AS recall
-         |FROM m""".stripMargin) {
-      (s, dir) =>
-      // ONE persisted shingle-set scan feeds both sides: the banded
-      // generator under test and the exact ground truth read the same
-      // sets, so the corpus is tokenized/shingled once, not twice.
-      val sets = shingleSets(docsAug(s, dir)).persist()
-      // A VERIFIED lsh pair (candidate with exact J >= 1/2) is BY
-      // DEFINITION a member of the exact truth set (all pairs with
-      // J >= 1/2 over the same shingle sets; the double >= 0.5 compare
-      // and the integer 2*inter >= union cross-multiply agree exactly
-      // for int operands < 2^53). So instead of re-running the exact
-      // Jaccard verification joins on the lsh side, intersect the RAW
-      // band candidates with the truth set: n_lsh = n_hit =
-      // |candidates ∩ truth| — identical numbers, one full verification
-      // pass instead of two (the lsh verification was ~40% of this
-      // query's sf10 cost). The oracle still computes both sides
-      // independently, so a regression in this subset argument would
-      // hash-mismatch, not silently pass.
-      val truth = allPairsOverSets(sets, 1, 2)
-        .select(col("doc_a"), col("doc_b")).persist()
-      val hits = minhashCandPairsOverSets(sets)
-        .join(truth, Seq("doc_a", "doc_b"), "left_semi")
-      truth.agg(count(lit(1)).cast(LongType).as("n_truth"))
-        .crossJoin(hits.agg(count(lit(1)).cast(LongType).as("hit")))
-        .select(col("n_truth"), col("hit").as("n_lsh"), col("hit").as("n_hit"),
-          (col("hit").cast(DoubleType) / col("n_truth")).as("recall"))
+    Q("dedup_lsh_recall", lshRecallSqlOver(docsAugSql)) { (s, dir) =>
+      lshRecallOver(docsAug(s, dir))
     },
 
     // ── sampled-truth recall: the AT-SCALE variant of dedup_lsh_recall
@@ -1504,36 +1428,11 @@ object DedupOps {
     // generator produces EXACTLY the full generator's candidates
     // restricted to sampled pairs (pair-locality again), which is
     // what AllPairsSpec-style exactness plus this row's oracle pin.
-    Q("dedup_lsh_recall_sampled", {
-      val sampledSql =
-        s"SELECT doc_id, text FROM ($docsAugSql) da WHERE doc_id % 8 = 0"
-      s"""WITH lsh AS (${minhashPairsSqlOver(sampledSql)}),
-         |truth AS (${allPairsSqlOver(sampledSql, 1, 2)}),
-         |m AS (
-         |  SELECT CASE WHEN t.doc_a IS NOT NULL THEN 1 ELSE 0 END AS in_t,
-         |         CASE WHEN l.doc_a IS NOT NULL THEN 1 ELSE 0 END AS in_l
-         |  FROM truth t FULL OUTER JOIN lsh l
-         |    ON l.doc_a = t.doc_a AND l.doc_b = t.doc_b)
-         |SELECT CAST(sum(in_t) AS BIGINT) AS n_truth,
-         |  CAST(sum(in_l) AS BIGINT) AS n_lsh,
-         |  CAST(sum(in_t * in_l) AS BIGINT) AS n_hit,
-         |  CAST(sum(in_t * in_l) AS DOUBLE) / sum(in_t) AS recall
-         |FROM m""".stripMargin
-    }) { (s, dir) =>
-      // one persisted SAMPLED shingle-set scan feeds generator and
-      // truth, the dedup_lsh_recall sharing argument at 1/8 the rows
-      val sets = shingleSets(
-        docsAug(s, dir).filter(col("doc_id") % 8 === 0)).persist()
-      val truth = allPairsOverSets(sets, 1, 2)
-        .select(col("doc_a"), col("doc_b")).persist()
-      // raw candidates ∩ truth = verified pairs ∩ truth (the
-      // dedup_lsh_recall subset argument, unchanged by sampling)
-      val hits = minhashCandPairsOverSets(sets)
-        .join(truth, Seq("doc_a", "doc_b"), "left_semi")
-      truth.agg(count(lit(1)).cast(LongType).as("n_truth"))
-        .crossJoin(hits.agg(count(lit(1)).cast(LongType).as("hit")))
-        .select(col("n_truth"), col("hit").as("n_lsh"), col("hit").as("n_hit"),
-          (col("hit").cast(DoubleType) / col("n_truth")).as("recall"))
+    Q("dedup_lsh_recall_sampled", lshRecallSqlOver(
+        s"SELECT doc_id, text FROM ($docsAugSql) da WHERE doc_id % 8 = 0")) { (s, dir) =>
+      // the dedup_lsh_recall body over the sample; its subset argument
+      // is unchanged by sampling
+      lshRecallOver(docsAug(s, dir).filter(col("doc_id") % 8 === 0))
     },
 
     // ── cross-document boilerplate detection ────────────────────────

@@ -2,12 +2,14 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The sliced certification twins must reproduce their registry rows
-  * EXACTLY — the whole point of the protocol is that the DuckDB oracle
-  * replayed against a sliced run certifies the registry relation. The
-  * slice count deliberately does not divide anything evenly here
-  * (3 slices over the fixture's key space) so partial-sum and
-  * union-distinct identities are exercised across ragged slices.
+/** A sliced run must reproduce its registry row EXACTLY — the whole
+  * point of the protocol is that the DuckDB oracle replayed against a
+  * sliced run certifies the registry relation. Each case runs the row
+  * exactly as graft.VerifySliced does and compares it with the
+  * registered query. The slice count deliberately does not divide
+  * anything evenly here (3 slices over the fixture's key space) so
+  * partial-sum and union-distinct identities are exercised across
+  * ragged slices.
   */
 class SlicedExecSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
@@ -19,22 +21,19 @@ class SlicedExecSpec extends AnyFunSuite with SparkSessionTestWrapper {
   private def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
     df.collect().map(_.mkString("|")).toSet
 
-  test("shingleCosineSliced reproduces dedup_shingle_cosine bit-for-bit") {
-    val full = SparkEntry.queries("dedup_shingle_cosine")(spark, dir)
-    val scratch = tmpScratch("cos")
-    try {
-      val sliced = ops.DedupOps.shingleCosineSliced(spark, dir, 3, s"$scratch/p")
-      assert(rows(sliced) === rows(full))
-    } finally spark.catalog.clearCache()
-  }
+  private def multiset(df: org.apache.spark.sql.DataFrame): Map[String, Int] =
+    df.collect().map(_.mkString("|")).groupBy(identity).map { case (r, rs) => r -> rs.length }
 
-  test("lshRecallSliced reproduces dedup_lsh_recall bit-for-bit") {
-    val full = SparkEntry.queries("dedup_lsh_recall")(spark, dir)
-    val scratch = tmpScratch("lshr")
-    try {
-      val sliced = ops.DedupOps.lshRecallSliced(spark, dir, 3, s"$scratch/p")
-      assert(rows(sliced) === rows(full))
-    } finally spark.catalog.clearCache()
+  Seq("dedup_shingle_cosine", "dedup_allpairs", "dedup_lsh_recall").foreach { name =>
+    test(s"VerifySliced's $name at 3 slices reproduces the registry row bit-for-bit") {
+      val full = rows(SparkEntry.queries(name)(spark, dir))
+      spark.catalog.clearCache()
+      val scratch = tmpScratch(name)
+      try {
+        val sliced = VerifySliced.row(spark, dir, name, ops.DedupOps.Sliced(3, s"$scratch/p"))
+        assert(rows(sliced) === full)
+      } finally spark.catalog.clearCache()
+    }
   }
 
   test("sliced with an identity perSlice returns exactly its input") {
@@ -42,8 +41,6 @@ class SlicedExecSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // input multiset — duplicates (k % 50 repeats keys) included
     val input = spark.range(0, 1000)
       .selectExpr("id % 50 AS k", "id AS v")
-    def multiset(df: org.apache.spark.sql.DataFrame): Map[String, Int] =
-      df.collect().map(_.mkString("|")).groupBy(identity).map { case (r, rs) => r -> rs.length }
     Seq(1, 7).foreach { slices =>
       val scratch = tmpScratch(s"id$slices")
       val out = ops.DedupOps.sliced(input, "k", slices, s"$scratch/p")(identity)
@@ -51,13 +48,13 @@ class SlicedExecSpec extends AnyFunSuite with SparkSessionTestWrapper {
     }
   }
 
-  test("allPairsSliced reproduces allPairsOver bit-for-bit") {
-    val docs = Tables.load(spark, dir, "documents")
-    val full = ops.DedupOps.allPairsOver(docs, 3, 5)
-    val scratch = tmpScratch("ap")
-    try {
-      val sliced = ops.DedupOps.allPairsSliced(spark, docs, 3, 5, 3, s"$scratch/p")
-      assert(rows(sliced) === rows(full))
-    } finally spark.catalog.clearCache()
+  test("sliced over more slices than keys, some slices yielding no rows, returns the exact multiset") {
+    // 64 slices over 50 keys leave at least 14 slices with no input, and
+    // the filter drops every odd key, so more slices write nothing
+    val input = spark.range(0, 1000)
+      .selectExpr("id % 50 AS k", "id AS v")
+    val scratch = tmpScratch("empty")
+    val out = ops.DedupOps.sliced(input, "k", 64, s"$scratch/p")(_.filter("k % 2 = 0"))
+    assert(multiset(out.select("k", "v")) === multiset(input.filter("k % 2 = 0")))
   }
 }
