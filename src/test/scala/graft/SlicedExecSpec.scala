@@ -24,16 +24,35 @@ class SlicedExecSpec extends AnyFunSuite with SparkSessionTestWrapper {
   private def multiset(df: org.apache.spark.sql.DataFrame): Map[String, Int] =
     df.collect().map(_.mkString("|")).groupBy(identity).map { case (r, rs) => r -> rs.length }
 
-  Seq("dedup_shingle_cosine", "dedup_allpairs", "dedup_lsh_recall").foreach { name =>
-    test(s"VerifySliced's $name at 3 slices reproduces the registry row bit-for-bit") {
-      val full = rows(SparkEntry.queries(name)(spark, dir))
-      spark.catalog.clearCache()
-      val scratch = tmpScratch(name)
-      try {
-        val sliced = VerifySliced.row(spark, dir, name, ops.DedupOps.Sliced(3, s"$scratch/p"))
-        assert(rows(sliced) === full)
-      } finally spark.catalog.clearCache()
-    }
+  /** Runs `name` as graft.VerifySliced does, at 3 slices, and returns
+    * its rows alongside the registered query's. */
+  private def slicedAndFull(name: String): (Set[String], Set[String]) = {
+    val full = rows(SparkEntry.queries(name)(spark, dir))
+    spark.catalog.clearCache()
+    val scratch = tmpScratch(name)
+    try (rows(VerifySliced.row(spark, dir, name, ops.DedupOps.Sliced(3, s"$scratch/p"))), full)
+    finally spark.catalog.clearCache()
+  }
+
+  // The case names keep the sliced runs' former function names
+  // (shingleCosineSliced, lshRecallSliced, allPairsSliced); each sliced
+  // run is now its row's own body with a DedupOps.Sliced pair join.
+
+  test("shingleCosineSliced reproduces dedup_shingle_cosine bit-for-bit") {
+    val (sliced, full) = slicedAndFull("dedup_shingle_cosine")
+    assert(sliced === full)
+  }
+
+  test("lshRecallSliced reproduces dedup_lsh_recall bit-for-bit") {
+    val (sliced, full) = slicedAndFull("dedup_lsh_recall")
+    assert(sliced === full)
+  }
+
+  test("allPairsSliced reproduces allPairsOver bit-for-bit") {
+    // the dedup_allpairs registry row is allPairsOver(documents, 3, 5)
+    // with its self-join in the plan
+    val (sliced, full) = slicedAndFull("dedup_allpairs")
+    assert(sliced === full)
   }
 
   test("sliced with an identity perSlice returns exactly its input") {
