@@ -31,13 +31,10 @@ object Cols {
   def rsum(price: Column, rate: Column): Column =
     sum(revenue(price, rate)).cast(DoubleType)
 
-  /** First 60 bits of md5(x) as a non-negative long. Twin:
-    * OracleSql.hex60. The 15-hex-char slice keeps the value positive and
-    * exactly representable in both engines' BIGINT. Native
-    * digest-to-long expression ([[graft.functions.Hex60Expr]]) — the
-    * previous `conv(substring(md5(c), 1, 15), 16, 10)` formulation
-    * paid four string allocations and two parses per hash; Hex60Spec
-    * pins value equivalence against that composed form.
+  /** First 60 bits of md5(x) as a non-negative long
+    * ([[graft.functions.Hex60Expr]]). Twin: OracleSql.hex60. The
+    * 15-hex-char slice keeps the value positive and exactly
+    * representable in both engines' BIGINT.
     */
   def hex60(c: Column): Column =
     org.apache.spark.sql.GraftColumnShim.column(
@@ -50,22 +47,12 @@ object Cols {
   /** hex60 scaled to a uniform double in [0, 1). 2^60 = 1152921504606846976. */
   def unitHash(c: Column): Column = hex60(c) / lit(1.152921504606846976e18)
 
-  private val md5Tl: ThreadLocal[java.security.MessageDigest] =
-    ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
-
-  /** Scalar JVM twin of [[hex60]] — THE single driver/executor-side
-    * implementation (VectorFns plane weights):
-    * the md5 digest's first 15 hex chars are its first 8 bytes
-    * big-endian with the lowest nibble dropped, computed numerically
-    * (no hex-string round trip) on a thread-local digest.
+  /** Scalar JVM twin of [[hex60]] for plan-build-time callers (VectorFns
+    * plane weights): the same [[graft.functions.Hex60Expr.hash]] the
+    * column expression evaluates.
     */
-  def hex60Scalar(s: String): Long = {
-    val d = md5Tl.get().digest(s.getBytes("UTF-8"))
-    var v = 0L
-    var i = 0
-    while (i < 8) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-    v >>> 4
-  }
+  def hex60Scalar(s: String): Long =
+    graft.functions.Hex60Expr.hash(org.apache.spark.unsafe.types.UTF8String.fromString(s))
 }
 
 /** DuckDB-dialect twins of [[Cols]], used to build `SparkEntry.oracleSql`.

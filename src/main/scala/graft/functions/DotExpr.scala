@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native dot product over exactly `dim` elements of two double-array
   * columns — the pair-scoring kernel of every similarity/dedup query.
-  * Generates a single loop in whole-stage codegen instead of the
+  * One loop ([[DotExpr.dot]]) on both evaluation paths instead of the
   * dim-term unrolled expression tree the foldLeft formulation produced.
   *
   * IEEE contract (must match the oracle SQL's chains): acc starts at
@@ -22,8 +22,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 final case class DotExpr(left: Expression, right: Expression, dim: Int)
     extends BinaryExpression {
 
-  // dim parameterizes generated code: dim < 1 would make the loop a
-  // silent no-op returning 0.0 for every row — reject at construction
+  // dim < 1 would make the loop a silent no-op returning 0.0 for
+  // every row — reject at construction
   require(dim >= 1, s"dim must be >= 1, got $dim")
 
   override def dataType: DataType = DoubleType
@@ -45,35 +45,29 @@ final case class DotExpr(left: Expression, right: Expression, dim: Int)
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
     if (x.numElements() < dim || y.numElements() < dim) null
-    else {
-      var acc = 0.0
-      var i = 0
-      while (i < dim) {
-        acc += x.getDouble(i) * y.getDouble(i)
-        i += 1
-      }
-      acc
-    }
+    else DotExpr.dot(x, y, dim)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val acc = ctx.freshName("acc")
-      val i = ctx.freshName("i")
-      s"""
-         |if ($x.numElements() < $dim || $y.numElements() < $dim) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $dim; $i++) {
-         |    $acc += $x.getDouble($i) * $y.getDouble($i);
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-         |""".stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (x, y) =>
+      s"""if ($x.numElements() < $dim || $y.numElements() < $dim) ${ev.isNull} = true;
+         |else ${ev.value} = graft.functions.DotExpr.dot($x, $y, $dim);""".stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotExpr =
     copy(left = newLeft, right = newRight)
+}
+
+object DotExpr {
+
+  /** The class doc's sum; both arrays hold at least `dim` elements. */
+  def dot(x: ArrayData, y: ArrayData, dim: Int): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < dim) {
+      acc += x.getDouble(i) * y.getDouble(i)
+      i += 1
+    }
+    acc
+  }
 }

@@ -2,8 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Conv, Divide, Expression, ExpressionInfo, Literal, Md5, Substring}
-import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Divide, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.types.{IntegerType, StringType}
 
 /** SQL-surface registration of the native graft expressions via the
   * public `SparkSessionExtensions` hook — the deployment story for
@@ -97,14 +97,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (args: Seq[Expression]) => GraftExtensions.shingleBuilder(args)))
     ext.injectFunction((
       FunctionIdentifier("graft_unit_hash"),
-      new ExpressionInfo(classOf[Md5].getName, "graft_unit_hash"),
+      new ExpressionInfo(classOf[Hex60Expr].getName, "graft_unit_hash"),
       (args: Seq[Expression]) => args match {
-        // the same built-in chain as Cols.unitHash — first 60 bits of
-        // md5 scaled to [0,1); implicit casts resolve string -> binary
-        case Seq(a) => Divide(
-          Cast(Conv(Substring(Md5(a), Literal(1), Literal(15)),
-            Literal(16), Literal(10)), LongType),
-          Literal(1.152921504606846976e18))
+        // the same expression as Cols.unitHash: hex60 scaled to [0,1)
+        case Seq(a) => Divide(Hex60Expr(Cast(a, StringType)), Literal(1.152921504606846976e18))
         case _ => throw new IllegalArgumentException(
           "graft_unit_hash(key) takes 1 argument")
       }))

@@ -56,9 +56,6 @@ final case class HashedShingleSetExpr(child: Expression, n: Int)
 
 object HashedShingleSetExpr {
 
-  private val md5Tl: ThreadLocal[java.security.MessageDigest] =
-    ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
-
   def compute(arr: ArrayData, n: Int): ArrayData = {
     val m = arr.numElements()
     if (m < n) return new GenericArrayData(Array.empty[Long])
@@ -71,7 +68,7 @@ object HashedShingleSetExpr {
       toks(i) = if (t == null) null else t.getBytes
       i += 1
     }
-    val md = md5Tl.get()
+    val md = Hex60Expr.md5.get()
     val out = new Array[Long](m - n + 1)
     var nOut = 0
     val seen = new java.util.HashSet[java.lang.Long](((m - n + 1) * 4) / 3 + 1)
@@ -90,11 +87,7 @@ object HashedShingleSetExpr {
           md.update(toks(i + j))
           j += 1
         }
-        val d = md.digest() // digest() resets the instance
-        var v = 0L
-        var k = 0
-        while (k < 8) { v = (v << 8) | (d(k) & 0xffL); k += 1 }
-        v >>>= 4
+        val v = Hex60Expr.fold(md.digest()) // digest() resets the instance
         if (seen.add(v)) { out(nOut) = v; nOut += 1 }
       } else md.reset()
       i += 1

@@ -15,16 +15,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * 16 bytes of actual hashing; at tens of millions of hashes per
   * dedup query that wrapper was a measurable slice of every scan
   * stage. Here the digest's first 8 bytes fold big-endian and drop
-  * the low nibble — identical math to [[graft.Cols.hex60Scalar]]
-  * (the first 15 hex chars ARE the first 7.5 bytes), so the value is
-  * bit-for-bit the composed formulation's and the DuckDB twin
-  * `('0x' || substr(md5(x), 1, 15))::BIGINT` is unaffected
-  * (Hex60Spec pins equivalence on both codegen paths).
+  * the low nibble (the first 15 hex chars ARE the first 7.5 bytes), so
+  * the value is bit-for-bit the composed formulation's and the DuckDB
+  * twin [[graft.OracleSql.hex60]] is unaffected (Hex60Spec pins
+  * equivalence on both evaluation paths). The companion's digest and
+  * fold are the engine's one md5-to-60-bit implementation:
+  * [[graft.Cols.hex60Scalar]] and [[HashedShingleSetExpr]] use them.
   */
 final case class Hex60Expr(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
   override def prettyName: String = "graft_hex60"
 
   // strict: non-string callers go through Cols.hex60, which inserts
@@ -51,18 +51,23 @@ final case class Hex60Expr(child: Expression) extends UnaryExpression {
 
 object Hex60Expr {
 
-  private val md5Tl: ThreadLocal[java.security.MessageDigest] =
+  /** Each thread's MD5 digest, shared by every hex60 in the engine. A
+    * caller that streams bytes in with `update` ends with `digest()`,
+    * which resets it for the next caller.
+    */
+  private[graft] val md5: ThreadLocal[java.security.MessageDigest] =
     ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
 
-  /** md5(utf8 bytes), first 8 bytes big-endian, low nibble dropped —
-    * `>>> 4` keeps the value in [0, 2^60), matching the non-negative
-    * 15-hex-char BIGINT both engines' composed formulations produce.
+  /** An md5 digest's first 15 hex chars as a value in [0, 2^60): its
+    * first 8 bytes big-endian with the low nibble dropped.
     */
-  def hash(s: UTF8String): Long = {
-    val d = md5Tl.get().digest(s.getBytes)
+  private[graft] def fold(d: Array[Byte]): Long = {
     var v = 0L
     var i = 0
     while (i < 8) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
     v >>> 4
   }
+
+  /** hex60 of a string's UTF-8 bytes. */
+  def hash(s: UTF8String): Long = fold(md5.get().digest(s.getBytes))
 }

@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * higher-order functions (transform/aggregate) evaluate interpreted,
   * and unrolling 16 planes x 64 dims into literal expression trees
   * produced multi-MiB task binaries in round 1. This expression carries
-  * the plane matrix as ONE referenced object and generates a two-level
-  * loop inside whole-stage codegen.
+  * the plane matrix as ONE referenced object for one two-level loop
+  * ([[LshBucketExpr.bucket]]) that both evaluation paths call.
   *
   * IEEE contract (must match the oracle SQL's unrolled chains and
   * VectorFns.lshBucket): per plane, acc starts at 0.0 and adds
@@ -33,7 +33,7 @@ final case class LshBucketExpr(
   // equality on arrays is reference-based, which would make two
   // semantically identical LshBucketExpr instances never compare equal
   // and silently defeat Catalyst canonicalization / subexpression
-  // elimination. The hot loops run over this materialized array form.
+  // elimination. The kernel runs over this materialized array form.
   @transient private lazy val planeArr: Array[Array[Double]] =
     planes.iterator.map(_.toArray).toArray
 
@@ -50,59 +50,46 @@ final case class LshBucketExpr(
         s"$prettyName requires array<double>, got ${other.catalogString}")
     }
 
-  private def dim: Int = if (planes.isEmpty) 0 else planes.head.length
+  private def dim: Int = planes.head.length
 
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
     // a vector shorter than the plane width yields NULL, matching the
     // oracle's out-of-range a[i] access (reading past numElements()
-    // would be an exception interpreted and silent garbage in codegen)
+    // throws on a GenericArrayData and reads garbage on an
+    // UnsafeArrayData)
     if (arr.numElements() < dim) null
-    else {
-      var bucket = 0L
-      var p = 0
-      while (p < planeArr.length) {
-        val w = planeArr(p)
-        var acc = 0.0
-        var i = 0
-        while (i < w.length) {
-          acc += w(i) * arr.getDouble(i)
-          i += 1
-        }
-        if (acc > 0.0) bucket |= 1L << p
-        p += 1
-      }
-      bucket
-    }
+    else LshBucketExpr.bucket(arr, planeArr)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val planesRef = ctx.addReferenceObj("lshPlanes", planeArr, "double[][]")
-    nullSafeCodeGen(ctx, ev, arr => {
-      val bucket = ctx.freshName("bucket")
-      val p = ctx.freshName("p")
-      val w = ctx.freshName("w")
-      val acc = ctx.freshName("acc")
-      val i = ctx.freshName("i")
-      s"""
-         |if ($arr.numElements() < $dim) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $bucket = 0L;
-         |  for (int $p = 0; $p < $planesRef.length; $p++) {
-         |    double[] $w = $planesRef[$p];
-         |    double $acc = 0.0;
-         |    for (int $i = 0; $i < $w.length; $i++) {
-         |      $acc += $w[$i] * $arr.getDouble($i);
-         |    }
-         |    if ($acc > 0.0) $bucket |= 1L << $p;
-         |  }
-         |  ${ev.value} = $bucket;
-         |}
-         |""".stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, arr =>
+      s"""if ($arr.numElements() < $dim) ${ev.isNull} = true;
+         |else ${ev.value} = graft.functions.LshBucketExpr.bucket($arr, $planesRef);""".stripMargin)
   }
 
   override protected def withNewChildInternal(newChild: Expression): LshBucketExpr =
     copy(child = newChild)
+}
+
+object LshBucketExpr {
+
+  /** Bit p set iff plane p's dot with `arr` is positive; `arr` is at least as wide as a plane. */
+  def bucket(arr: ArrayData, planes: Array[Array[Double]]): Long = {
+    var bucket = 0L
+    var p = 0
+    while (p < planes.length) {
+      val w = planes(p)
+      var acc = 0.0
+      var i = 0
+      while (i < w.length) {
+        acc += w(i) * arr.getDouble(i)
+        i += 1
+      }
+      if (acc > 0.0) bucket |= 1L << p
+      p += 1
+    }
+    bucket
+  }
 }

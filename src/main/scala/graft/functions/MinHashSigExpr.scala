@@ -16,9 +16,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * h -> (a_j*h + b_j) % p)) for j < k)` — the one the DuckDB oracle
   * still runs — but that shape costs k interpreted lambda passes and
   * k+1 intermediate arrays per row (Spark's higher-order functions do
-  * not participate in codegen). This is ONE generated loop inside
-  * whole-stage codegen: each element is reduced mod p once, then all k
-  * running minima update with two multiply-adds each.
+  * not participate in codegen). This is ONE loop on both evaluation
+  * paths ([[MinHashSigExpr.signature]]): each element is reduced mod p
+  * once, then all k running minima update with two multiply-adds each.
   *
   * Inputs are 60-bit md5-derived hashes (non-negative), so `h % p` and
   * `(a*h' + b) % p` never see a negative operand and Java `%` matches
@@ -40,7 +40,9 @@ final case class MinHashSigExpr(
   require(a.forall(x => x > 0 && x <= Long.MaxValue / p) && b.forall(_ >= 0),
     s"coefficients must satisfy 0 < a <= ${Long.MaxValue / p} and b >= 0 for overflow-free mod-$p arithmetic")
 
-  private def k: Int = a.length
+  // the kernel's array forms of the (structurally compared) Seq fields
+  @transient private lazy val aArr: Array[Long] = a.toArray
+  @transient private lazy val bArr: Array[Long] = b.toArray
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true // empty input → null signature
@@ -55,9 +57,30 @@ final case class MinHashSigExpr(
 
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
+    if (arr.numElements() == 0) null
+    else MinHashSigExpr.signature(arr, p, aArr, bArr)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val aRef = ctx.addReferenceObj("minhashA", aArr, "long[]")
+    val bRef = ctx.addReferenceObj("minhashB", bArr, "long[]")
+    nullSafeCodeGen(ctx, ev, arr =>
+      s"""if ($arr.numElements() == 0) ${ev.isNull} = true;
+         |else ${ev.value} = graft.functions.MinHashSigExpr.signature($arr, ${p}L, $aRef, $bRef);""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): MinHashSigExpr =
+    copy(child = newChild)
+}
+
+object MinHashSigExpr {
+
+  /** The class doc's signature of a non-empty `arr`. */
+  def signature(arr: ArrayData, p: Long, a: Array[Long], b: Array[Long]): UnsafeArrayData = {
+    val k = a.length
     val n = arr.numElements()
-    if (n == 0) return null
-    val mins = Array.fill(k)(Long.MaxValue)
+    val mins = new Array[Long](k)
+    java.util.Arrays.fill(mins, Long.MaxValue)
     var i = 0
     while (i < n) {
       val h = arr.getLong(i) % p
@@ -71,37 +94,4 @@ final case class MinHashSigExpr(
     }
     UnsafeArrayData.fromPrimitiveArray(mins)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val aRef = ctx.addReferenceObj("minhashA", a.toArray, "long[]")
-      val bRef = ctx.addReferenceObj("minhashB", b.toArray, "long[]")
-      val n = ctx.freshName("n")
-      val mins = ctx.freshName("mins")
-      val i = ctx.freshName("i")
-      val h = ctx.freshName("h")
-      val j = ctx.freshName("j")
-      val v = ctx.freshName("v")
-      s"""
-         |int $n = $arr.numElements();
-         |if ($n == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long[] $mins = new long[$k];
-         |  java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    long $h = $arr.getLong($i) % ${p}L;
-         |    for (int $j = 0; $j < $k; $j++) {
-         |      long $v = ($aRef[$j] * $h + $bRef[$j]) % ${p}L;
-         |      if ($v < $mins[$j]) $mins[$j] = $v;
-         |    }
-         |  }
-         |  ${ev.value} =
-         |    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($mins);
-         |}
-         |""".stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSigExpr =
-    copy(child = newChild)
 }

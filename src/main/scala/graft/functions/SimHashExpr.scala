@@ -11,22 +11,22 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * is positive. Pure integer arithmetic — trivially engine-identical —
   * but the per-bit higher-order-aggregate formulation evaluated `bits`
   * interpreted passes over the token array per row; this is one
-  * generated two-level loop inside whole-stage codegen.
+  * two-level loop ([[SimHashExpr.signature]]) on both evaluation paths.
   */
 final case class SimHashExpr(child: Expression, bits: Int)
     extends UnaryExpression {
 
-  // bits parameterizes generated code: out-of-range values would wrap
-  // the 1L << b shift (b >= 64) or blow up array allocation (b < 1) at
-  // RUNTIME per row — reject at construction instead. 63 keeps the
-  // signature positive-representable in an int64 sign bit away.
+  // out-of-range values would wrap the 1L << b shift (b >= 64) or
+  // blow up array allocation (b < 1) at RUNTIME per row — reject at
+  // construction instead. 63 keeps the signature
+  // positive-representable in an int64 sign bit away.
   require(bits >= 1 && bits <= 63, s"bits must be in [1, 63], got $bits")
 
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_simhash"
 
   // binding to a non-array / wrong-element-type column must fail at
-  // analysis, not as garbage values inside generated code
+  // analysis, not as garbage values inside the kernel
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
       case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
@@ -34,8 +34,20 @@ final case class SimHashExpr(child: Expression, bits: Int)
         s"$prettyName requires array<bigint>, got ${other.catalogString}")
     }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    SimHashExpr.signature(input.asInstanceOf[ArrayData], bits)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, arr =>
+      s"${ev.value} = graft.functions.SimHashExpr.signature($arr, $bits);")
+
+  override protected def withNewChildInternal(newChild: Expression): SimHashExpr =
+    copy(child = newChild)
+}
+
+object SimHashExpr {
+
+  def signature(arr: ArrayData, bits: Int): Long = {
     val n = arr.numElements()
     val counts = new Array[Long](bits)
     var i = 0
@@ -56,32 +68,4 @@ final case class SimHashExpr(child: Expression, bits: Int)
     }
     sig
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val n = ctx.freshName("n")
-      val counts = ctx.freshName("counts")
-      val i = ctx.freshName("i")
-      val h = ctx.freshName("h")
-      val b = ctx.freshName("b")
-      val sig = ctx.freshName("sig")
-      s"""
-         |int $n = $arr.numElements();
-         |long[] $counts = new long[$bits];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $h = $arr.getLong($i);
-         |  for (int $b = 0; $b < $bits; $b++) {
-         |    $counts[$b] += (($h >> $b) & 1L) * 2L - 1L;
-         |  }
-         |}
-         |long $sig = 0L;
-         |for (int $b = 0; $b < $bits; $b++) {
-         |  if ($counts[$b] > 0L) $sig |= 1L << $b;
-         |}
-         |${ev.value} = $sig;
-         |""".stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashExpr =
-    copy(child = newChild)
 }

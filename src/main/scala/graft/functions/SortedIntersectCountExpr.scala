@@ -13,8 +13,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * OpenHashSet build over one side plus a materialized result array
   * that only gets counted and thrown away; candidate-pair relations
   * run this millions of times per query, so the constant factor is the
-  * stage. The merge scan is two cursors over primitive longs — no
-  * allocation, no hashing — and inlines into whole-stage codegen.
+  * stage. The merge scan ([[SortedIntersectCountExpr.intersectCount]],
+  * on both evaluation paths) is two cursors over primitive longs — no
+  * allocation, no hashing.
   *
   * CONTRACT: both inputs ascending-sorted with distinct elements
   * (`sort_array` over an `array_distinct` output). On unsorted input
@@ -31,7 +32,6 @@ final case class SortedIntersectCountExpr(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = LongType
-  override def nullable: Boolean = left.nullable || right.nullable
   override def prettyName: String = "graft_sorted_intersect_count"
 
   override def checkInputDataTypes(): TypeCheckResult =
@@ -43,9 +43,21 @@ final case class SortedIntersectCountExpr(left: Expression, right: Expression)
           s"(${l.catalogString}, ${r.catalogString})")
     }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SortedIntersectCountExpr.intersectCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (x, y) =>
+      s"${ev.value} = graft.functions.SortedIntersectCountExpr.intersectCount($x, $y);")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SortedIntersectCountExpr =
+    copy(left = newLeft, right = newRight)
+}
+
+object SortedIntersectCountExpr {
+
+  def intersectCount(x: ArrayData, y: ArrayData): Long = {
     val nx = x.numElements()
     val ny = y.numElements()
     var i = 0
@@ -60,34 +72,4 @@ final case class SortedIntersectCountExpr(left: Expression, right: Expression)
     }
     n
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      val n = ctx.freshName("n")
-      s"""
-         |final int $nx = $x.numElements();
-         |final int $ny = $y.numElements();
-         |int $i = 0;
-         |int $j = 0;
-         |long $n = 0L;
-         |while ($i < $nx && $j < $ny) {
-         |  final long $xv = $x.getLong($i);
-         |  final long $yv = $y.getLong($j);
-         |  if ($xv == $yv) { $n++; $i++; $j++; }
-         |  else if ($xv < $yv) { $i++; }
-         |  else { $j++; }
-         |}
-         |${ev.value} = $n;
-         |""".stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedIntersectCountExpr =
-    copy(left = newLeft, right = newRight)
 }

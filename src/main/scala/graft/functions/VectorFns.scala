@@ -16,9 +16,10 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   *     ONCE in Scala and inlined as literals into both the Spark plan
   *     and the oracle SQL text.
   *
-  * The chains unroll to dim-64 expressions; they stay inside whole-stage
-  * codegen (pure arithmetic on array elements), so at scale this is a
-  * per-row map over the scan with no shuffle.
+  * The oracle SQL unrolls the chains to dim-64 expressions; the Spark
+  * side runs them as native kernels ([[DotExpr]], [[LshBucketExpr]])
+  * inside whole-stage codegen, so at scale this is a per-row map over
+  * the scan with no shuffle.
   */
 object VectorFns {
 
@@ -44,9 +45,10 @@ object VectorFns {
   def toDouble(emb: Column): Column =
     emb.cast(org.apache.spark.sql.types.ArrayType(DoubleType))
 
-  /** 0.0 + a[1]*b[1] + ... + a[64]*b[64], left-associated — a native
-    * codegen loop ([[DotExpr]]) evaluating the identical IEEE sequence
-    * the oracle's unrolled SQL chain does.
+  /** 0.0 + a[1]*b[1] + ... + a[64]*b[64], left-associated — one native
+    * loop ([[DotExpr.dot]], called by both Spark evaluation paths)
+    * evaluating the identical IEEE sequence the oracle's unrolled SQL
+    * chain does.
     */
   def dot(a: Column, b: Column): Column = dotN(a, b, Dim)
 
@@ -69,11 +71,11 @@ object VectorFns {
   /** 16-bit random-hyperplane LSH bucket id of a double-array embedding:
     * bit p set iff (0.0 + w(p,1)*a[1] + ...) > 0.
     *
-    * Implemented as a native Catalyst expression with whole-stage
-    * codegen ([[LshBucketExpr]]): the HOF formulation evaluates
-    * interpreted, and the r1 unrolled-literal formulation produced
-    * multi-MiB task binaries. Same IEEE operation sequence as the
-    * oracle's unrolled SQL chains.
+    * Implemented as a native Catalyst expression ([[LshBucketExpr]])
+    * whose one loop, [[LshBucketExpr.bucket]], both Spark evaluation
+    * paths call: the HOF formulation evaluates interpreted, and the r1
+    * unrolled-literal formulation produced multi-MiB task binaries.
+    * Same IEEE operation sequence as the oracle's unrolled SQL chains.
     */
   def lshBucket(a: Column): Column =
     org.apache.spark.sql.GraftColumnShim.column(

@@ -679,7 +679,7 @@ object DedupOps {
        |tok AS (SELECT doc_id, string_split(text, ' ') AS tokens FROM docs_aug),
        |sh AS (
        |  SELECT doc_id, list_distinct(list_transform($shingles3Sql,
-       |    s -> ('0x' || substr(md5(s), 1, 15))::BIGINT)) AS shingles
+       |    s -> ${graft.OracleSql.hex60("s")})) AS shingles
        |  FROM tok WHERE len(tokens) >= 3),
        |hs AS (
        |  SELECT doc_id,
@@ -821,7 +821,7 @@ object DedupOps {
     s"""WITH corpus AS ($corpusSql),
        |t AS (SELECT doc_id, string_split(text, ' ') AS tokens FROM corpus),
        |ss AS (SELECT doc_id, list_distinct(list_transform($shingles3Sql,
-       |         s -> ('0x' || substr(md5(s), 1, 15))::BIGINT)) AS st
+       |         s -> ${graft.OracleSql.hex60("s")})) AS st
        |       FROM t WHERE len(tokens) >= 3),
        |sh AS (SELECT doc_id, unnest(st) AS tok FROM ss),
        |df AS (SELECT tok, count(*) AS df FROM sh GROUP BY tok),
@@ -1165,7 +1165,7 @@ object DedupOps {
        |hs AS (
        |  SELECT doc_id,
        |    list_transform(list_distinct(string_split(text, ' ')),
-       |      t -> ('0x' || substr(md5(t), 1, 15))::BIGINT) AS hh
+       |      t -> ${graft.OracleSql.hex60("t")}) AS hh
        |  FROM docs_aug),
        |sim AS (SELECT doc_id, ${simhashSqlExpr("hh")} AS simhash FROM hs),
        |bands AS (
@@ -1193,9 +1193,9 @@ object DedupOps {
        |hs AS (
        |  SELECT doc_id,
        |    list_transform(list_distinct(string_split(text, ' ')),
-       |      t -> ('0x' || substr(md5(t), 1, 15))::BIGINT) AS hh1,
+       |      t -> ${graft.OracleSql.hex60("t")}) AS hh1,
        |    list_transform(list_distinct(string_split(text, ' ')),
-       |      t -> ('0x' || substr(md5('w2|' || t), 1, 15))::BIGINT) AS hh2
+       |      t -> ${graft.OracleSql.hex60("'w2|' || t")}) AS hh2
        |  FROM docs_aug),
        |sim AS (SELECT doc_id, ${simhashSqlExpr("hh1")} AS s1, ${simhashSqlExpr("hh2")} AS s2 FROM hs),
        |bands AS (

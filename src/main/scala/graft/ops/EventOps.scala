@@ -1083,7 +1083,7 @@ object EventOps {
       val k = 64
       s"""WITH du AS (SELECT DISTINCT event_type, user_id FROM events),
          |h AS (SELECT event_type, user_id,
-         |        ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS hv
+         |        ${O.hex60("CAST(user_id AS VARCHAR)")} AS hv
          |      FROM du),
          |r AS (SELECT event_type, hv,
          |        row_number() OVER (PARTITION BY event_type ORDER BY hv, user_id) AS rn
@@ -1134,7 +1134,7 @@ object EventOps {
          |    user_id * 100 + date_part('day', ts) AS member
          |  FROM events),
          |h AS (SELECT event_type AS et, member,
-         |        ('0x' || substr(md5(CAST(member AS VARCHAR)), 1, 15))::BIGINT AS hv
+         |        ${O.hex60("CAST(member AS VARCHAR)")} AS hv
          |      FROM du),
          |sk AS (SELECT et, member, hv FROM (
          |    SELECT et, member, hv,

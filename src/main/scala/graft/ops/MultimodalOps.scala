@@ -737,7 +737,7 @@ object MultimodalOps {
     Q("mm_features", {
       val dims = 0 until 8
       val fSql = dims.map(d =>
-        s"(('0x' || substr(md5(text || '|$d'), 1, 15))::BIGINT / 1152921504606846976.0)")
+        graft.OracleSql.unitHash(s"text || '|$d'"))
       val normSql = fSql.map(f => s"$f*$f").mkString("(0.0 + ", " + ", ")")
       s"""SELECT doc_id,
          |  ${fSql.zipWithIndex.map { case (f, d) => s"$f AS f$d" }.mkString(",\n   ")},

@@ -1025,7 +1025,7 @@ object TextOps {
       s"""SELECT doc_id,
          |  md5(text) AS fp_md5,
          |  CAST(list_sum(list_transform($toks,
-         |         (t, i) -> (((('0x' || substr(md5(t), 1, 15))::BIGINT % 1000003) * i) % 2147483648)))
+         |         (t, i) -> (((${graft.OracleSql.hex60("t")} % 1000003) * i) % 2147483648)))
          |       % 2147483648 AS BIGINT) AS fp_roll
          |FROM documents""".stripMargin
     }) { (s, dir) =>

@@ -45,6 +45,27 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(sig48 === (1L << 48) - 1) // bits arg respected
   }
 
+  test("graft_simhash equals the per-bit token vote, codegen and interpreted") {
+    import spark.implicits._
+    def vote(h: Seq[Long], bits: Int): Long =
+      (0 until bits).filter(b => h.map(x => ((x >> b) & 1L) * 2L - 1L).sum > 0L)
+        .map(1L << _).sum
+    val rnd = new scala.util.Random(7)
+    val inputs = Seq(Seq.empty[Long], Seq(-1L, 0L, Long.MinValue, Long.MaxValue)) ++
+      (0 until 60).map(i => Seq.fill(i % 9 + 1)(rnd.nextLong()))
+    inputs.toDF("h").createOrReplaceTempView("ext_simhash")
+    onBothEvalPaths { path =>
+      val rows = spark.sql(
+        "SELECT h, graft_simhash(h) AS s60, graft_simhash(h, 48) AS s48 FROM ext_simhash")
+        .collect()
+      assert(rows.length === inputs.size)
+      rows.foreach { r =>
+        val h = r.getSeq[Long](0)
+        assert(r.getLong(1) === vote(h, 60) && r.getLong(2) === vote(h, 48), s"$path h=$h")
+      }
+    }
+  }
+
   test("graft_unit_hash from SQL equals Cols.unitHash and lands in [0,1)") {
     val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .select(col("doc_id").cast("string").as("k"))

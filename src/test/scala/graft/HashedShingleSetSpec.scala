@@ -35,16 +35,12 @@ class HashedShingleSetSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val df = texts.toDF("text")
       .select(split(col("text"), " ").as("tokens"))
       .filter(size(col("tokens")) >= 3)
-    Seq("true", "false").foreach { ws =>
-      spark.conf.set("spark.sql.codegen.wholeStage", ws)
-      try {
-        val rows = df.select(
-          graft.ops.DedupOps.hashedShingles(col("tokens"), 3).as("fused"),
-          composed3(col("tokens")).as("ref")).collect()
-        rows.foreach { r =>
-          assert(r.getSeq[Long](0) === r.getSeq[Long](1), s"wholeStage=$ws row=$r")
-        }
-      } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    onBothEvalPaths { path =>
+      val rows = df.select(
+        graft.ops.DedupOps.hashedShingles(col("tokens"), 3).as("fused"),
+        composed3(col("tokens")).as("ref")).collect()
+      assert(rows.length === texts.size)
+      rows.foreach(r => assert(r.getSeq[Long](0) === r.getSeq[Long](1), s"$path row=$r"))
     }
   }
 

@@ -30,14 +30,11 @@ class Hex60Spec extends AnyFunSuite with SparkSessionTestWrapper {
       .select(concat(
         element_at(typedlit(samples), col("id").cast("int") + 1),
         col("id").cast("string")).as("s"))
-    Seq("true", "false").foreach { wholeStage =>
-      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
-      try {
-        val rows = df.select(Cols.hex60(col("s")).as("fast"),
-          composed(col("s")).as("ref")).collect()
-        rows.foreach(r => assert(r.getLong(0) === r.getLong(1),
-          s"wholeStage=$wholeStage row=$r"))
-      } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    onBothEvalPaths { path =>
+      val rows = df.select(Cols.hex60(col("s")).as("fast"),
+        composed(col("s")).as("ref")).collect()
+      assert(rows.length === samples.size)
+      rows.foreach(r => assert(r.getLong(0) === r.getLong(1), s"$path row=$r"))
     }
   }
 

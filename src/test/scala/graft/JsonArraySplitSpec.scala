@@ -112,6 +112,30 @@ class JsonArraySplitSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(JsonArraySplits.read(spark, file("one-split.json", """[{"id":1},{"id":2}]"""), None).isEmpty)
   }
 
+  test("malformed input with an explicit schema falls back to multiLine") {
+    // multiLine with a schema reads a malformed array as ONE all-null
+    // row, while the records parsed one by one with that schema keep
+    // the good ones (the last assert): the split read's inference
+    // pass, which finds the corrupt record, keeps the two reads equal
+    val schema = StructType.fromDDL("id BIGINT, ok BOOLEAN")
+    val malformed = Seq(
+      """[{"id": 1, "ok": true}, {"id": 2, "ok": tru}]""",
+      """[{"id": 1, "ok": true}, {"id": 2, "ok": true}""")
+    withSplitBytes(2) {
+      malformed.zipWithIndex.foreach { case (content, i) =>
+        val path = file(s"bad-schema-$i.json", content)
+        assert(JsonArraySplits.read(spark, path, Some(schema)).isEmpty, content)
+        val expected = multiLine(path, Some(schema))
+        assert(rows(expected) === Map("[null,null]" -> 1), content)
+        assert(rows(JsonArraySource(path, Some(schema)).load(spark)) === rows(expected), content)
+      }
+    }
+    import spark.implicits._
+    val perRecord = spark.read.schema(schema)
+      .json(Seq("""{"id": 1, "ok": true}""", """{"id": 2, "ok": tru}""").toDS())
+    assert(rows(perRecord) === Map("[1,true]" -> 1, "[null,null]" -> 1))
+  }
+
   test("JsonArraySource reads a multi-split file through the split path") {
     val path = file("source.json", wellFormed.head._2)
     withSplitBytes(8) {

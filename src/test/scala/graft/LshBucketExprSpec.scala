@@ -23,6 +23,31 @@ class LshBucketExprSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(both.select("native").distinct().count() > 1)
   }
 
+  test("lsh bucket and dot equal their reference formulations, codegen and interpreted") {
+    import spark.implicits._
+    val emb = col("emb")
+    val rnd = new scala.util.Random(11)
+    val vectors = Seq.fill(200)(Some(Seq.fill(VectorFns.Dim)(rnd.nextGaussian())))
+    // a short vector and a null take each kernel's null guard
+    val df = (vectors ++ Seq(Some(Seq(1.0, -2.0)), None)).toDF("emb")
+    // the left-associated chain DotExpr replaced; an out-of-range
+    // element is null, like the oracle's a[i]
+    val chain = (1 to VectorFns.Dim).foldLeft(lit(0.0)) { (acc, i) =>
+      acc + try_element_at(emb, lit(i)) * try_element_at(emb, lit(i)) }
+    onBothEvalPaths { path =>
+      val rows = df.select(VectorFns.lshBucket(emb), VectorFns.lshBucketHof(emb),
+        VectorFns.dot(emb, emb), chain, coalesce(size(emb), lit(-1))).collect()
+      val (wide, short) = rows.partition(_.getInt(4) >= VectorFns.Dim)
+      assert(wide.length === 200 && short.length === 2, path)
+      wide.foreach { r =>
+        assert(r.getLong(0) === r.getLong(1), s"$path lsh $r")
+        assert(r.getDouble(2) === r.getDouble(3), s"$path dot $r")
+      }
+      short.foreach(r =>
+        assert(r.isNullAt(0) && r.isNullAt(2) && r.isNullAt(3), s"$path short $r"))
+    }
+  }
+
   test("the expression participates in whole-stage codegen") {
     val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
       .select(VectorFns.lshBucket(VectorFns.toDouble(col("embedding"))).as("b"))

@@ -60,10 +60,13 @@ class MinHashSigSpec extends AnyFunSuite with SparkSessionTestWrapper {
       Seq((1L << 60) - 1L),
       Seq(0L, P - 1L, P, P + 1L, 123456789012345L, (1L << 60) - 1L)
     ).toDF("hh")
-    val rows = data
-      .select(native(col("hh")).as("fast"), hof(col("hh")).as("slow"))
-      .collect()
-    rows.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1)))
+    onBothEvalPaths { path =>
+      val rows = data
+        .select(native(col("hh")).as("fast"), hof(col("hh")).as("slow"))
+        .collect()
+      assert(rows.length === 5)
+      rows.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1), s"$path $r"))
+    }
   }
 
   test("null input → null; empty input → null (no band key either way)") {
@@ -73,15 +76,17 @@ class MinHashSigSpec extends AnyFunSuite with SparkSessionTestWrapper {
       (2L, Some(Seq.empty[Long])),
       (3L, None)
     ).toDF("id", "hh")
-    val rows = df.select(col("id"), native(col("hh")).as("sig"))
-      .orderBy("id").collect()
-    assert(!rows(0).isNullAt(1))
-    assert(rows(1).isNullAt(1), "empty array must yield a null signature")
-    assert(rows(2).isNullAt(1), "null input must yield a null signature")
+    onBothEvalPaths { path =>
+      val rows = df.select(col("id"), native(col("hh")).as("sig"))
+        .orderBy("id").collect()
+      assert(!rows(0).isNullAt(1), path)
+      assert(rows(1).isNullAt(1), s"$path: empty array must yield a null signature")
+      assert(rows(2).isNullAt(1), s"$path: null input must yield a null signature")
+    }
   }
 
   test("interpreted eval agrees with codegen (both paths exercised)") {
-    // force the interpreted path via a fresh eval() on literal input
+    // the expression's own eval() on a literal, against a plan on each path
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.util.GenericArrayData
     import org.apache.spark.sql.types.{ArrayType, LongType}
@@ -91,8 +96,10 @@ class MinHashSigSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val interpreted = e.eval(null)
       .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray().toSeq
     import spark.implicits._
-    val viaPlan = Seq(Seq(7L, 99999L, (1L << 59) + 17L)).toDF("hh")
-      .select(native(col("hh"))).collect()(0).getSeq[Long](0)
-    assert(interpreted == viaPlan)
+    val df = Seq(Seq(7L, 99999L, (1L << 59) + 17L)).toDF("hh")
+    onBothEvalPaths { path =>
+      val viaPlan = df.select(native(col("hh"))).collect()(0).getSeq[Long](0)
+      assert(interpreted == viaPlan, path)
+    }
   }
 }

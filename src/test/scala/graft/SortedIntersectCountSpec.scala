@@ -40,18 +40,15 @@ class SortedIntersectCountSpec extends AnyFunSuite with SparkSessionTestWrapper
       (Seq(1L, 2L, 3L), Seq(1L, 2L, 3L)),
       (Seq(Long.MinValue, 0L, Long.MaxValue), Seq(Long.MinValue, Long.MaxValue)))
     val df = cases.toDF("a", "b")
-    Seq("true", "false").foreach { wholeStage =>
-      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
-      try {
-        val got = df.select(
-          cnt(col("a"), col("b")).as("merge"),
-          size(array_intersect(col("a"), col("b"))).cast("long").as("ref"))
-          .collect()
-        got.zip(cases).foreach { case (r, (a, b)) =>
-          assert(r.getLong(0) === r.getLong(1),
-            s"wholeStage=$wholeStage a=$a b=$b")
-        }
-      } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    onBothEvalPaths { path =>
+      val got = df.select(
+        cnt(col("a"), col("b")).as("merge"),
+        size(array_intersect(col("a"), col("b"))).cast("long").as("ref"))
+        .collect()
+      assert(got.length === cases.size)
+      got.zip(cases).foreach { case (r, (a, b)) =>
+        assert(r.getLong(0) === r.getLong(1), s"$path a=$a b=$b")
+      }
     }
   }
 
