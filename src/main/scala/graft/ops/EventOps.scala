@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{OracleSql => O, Q, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType}
@@ -384,6 +384,80 @@ object EventOps {
        |       count(*) AS n_events, ${O.dsum("value")} AS total
        |FROM g GROUP BY user_id, sid""".stripMargin
 
+  // ── as-of join family ─────────────────────────────────────────────
+  // Nine rows certify one query — each click with its as-of purchase —
+  // through different operators and dials. They share the two sides,
+  // the oracle's relations and (for the six operator rows) one body.
+
+  /** The as-of oracle's relations: `p`, purchases deduped per
+    * (user_id, ts) to their max event_id, and `c`, the clicks.
+    */
+  private val asofSqlPrefix =
+    """WITH p AS (
+      |  SELECT user_id, ts, max(event_id) AS purchase_id
+      |  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts
+      |),
+      |c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click')""".stripMargin
+
+  /** DuckDB's native as-of join of the clicks to `p` under `cond`. */
+  private def asofFromSql(cond: String): String =
+    s"FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND $cond"
+
+  /** Each click with the purchase DuckDB's ASOF LEFT JOIN picks under
+    * `cond` (`p.ts <= c.ts` backward, `<` strict, `>=` forward).
+    */
+  private def asofSql(cond: String): String =
+    s"""$asofSqlPrefix
+       |SELECT c.event_id, c.user_id, c.ts, p.purchase_id, p.ts AS purchase_ts
+       |${asofFromSql(cond)}""".stripMargin
+
+  private val asofBackwardSql = asofSql("p.ts <= c.ts")
+
+  /** The Spark side of [[asofSqlPrefix]] over one events scan:
+    * (purchases deduped per (user_id, ts) to their max event_id, so a
+    * tie is one deterministic row; the click events). Each row projects
+    * them to its operator's shape.
+    */
+  private def asofSides(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val ev = events(s, dir)
+    (ev.filter(col("event_type") === "purchase")
+      .groupBy("user_id", "ts").agg(max("event_id").as("purchase_id")),
+      ev.filter(col("event_type") === "click"))
+  }
+
+  /** The six operator rows' body: clicks as-of joined to purchases by
+    * [[graft.plans.AsOfJoinOps.asof]] under the row's dials (the
+    * defaults are `asof`'s own), projected to the oracle's columns.
+    */
+  private def asofOperator(s: SparkSession, dir: String,
+      direction: String = "backward",
+      tolerance: Option[Long] = None,
+      allowExactMatches: Boolean = true,
+      broadcast: Option[Boolean] = None): DataFrame = {
+    val (purchases, clicks) = asofSides(s, dir)
+    val p = purchases
+      .select(col("user_id").as("p_user"), col("ts").as("p_ts"), col("purchase_id"))
+    val c = clicks.select(col("event_id"), col("user_id"), col("ts"))
+    graft.plans.AsOfJoinOps.asof(c, p, "user_id", "p_user", "ts", "p_ts",
+        direction, tolerance, allowExactMatches, broadcast)
+      .select(col("event_id"), col("user_id"), col("ts"),
+        col("purchase_id"), col("p_ts").as("purchase_ts"))
+  }
+
+  /** The two stream rows' input: purchases (`is_right`) and clicks as
+    * one tagged union, each carrying 0 for the other side's id.
+    */
+  private def asofRecs(s: SparkSession, dir: String)
+      : Dataset[graft.streaming.StatefulOps.AsOfRec] = {
+    import s.implicits._
+    val (purchases, clicks) = asofSides(s, dir)
+    val p = purchases.select(col("user_id"), col("ts"), lit(true).as("is_right"),
+      lit(0L).as("event_id"), col("purchase_id"))
+    val c = clicks.select(col("user_id"), col("ts"), lit(false).as("is_right"),
+      col("event_id"), lit(0L).as("purchase_id"))
+    p.unionByName(c).as[graft.streaming.StatefulOps.AsOfRec]
+  }
+
   val queries: Seq[Q] = Seq(
 
     // ── tumbling window aggregation ─────────────────────────────────
@@ -434,26 +508,13 @@ object EventOps {
     // ── as-of join: latest purchase at-or-before each click ─────────
     // Distributed single-shuffle plan (no range-join blowup): tag both
     // sides, union, and carry the last purchase forward with
-    // last_value(ignoreNulls) over (user, ts, tag). Purchases are
-    // first deduped per (user, ts) deterministically (max event_id) so
-    // ties are well-defined; DuckDB mirror is its native ASOF JOIN over
-    // the same deduped side.
-    Q("q_asof_join",
-      """WITH p AS (
-        |  SELECT user_id, ts, max(event_id) AS purchase_id
-        |  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts
-        |),
-        |c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click')
-        |SELECT c.event_id, c.user_id, c.ts, p.purchase_id, p.ts AS purchase_ts
-        |FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND p.ts <= c.ts""".stripMargin) { (s, dir) =>
-      val ev = events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy("user_id", "ts").agg(max("event_id").as("purchase_id"))
-        .select(col("user_id"), col("ts"), col("purchase_id"),
-          col("ts").as("purchase_ts"), lit(null).cast(LongType).as("event_id"), lit(0).as("tag"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), lit(null).cast(LongType).as("purchase_id"),
-          lit(null).cast("timestamp").as("purchase_ts"), col("event_id"), lit(1).as("tag"))
+    // last_value(ignoreNulls) over (user, ts, tag).
+    Q("q_asof_join", asofBackwardSql) { (s, dir) =>
+      val (p, c) = asofSides(s, dir)
+      val purchases = p.select(col("user_id"), col("ts"), col("purchase_id"),
+        col("ts").as("purchase_ts"), lit(null).cast(LongType).as("event_id"), lit(0).as("tag"))
+      val clicks = c.select(col("user_id"), col("ts"), lit(null).cast(LongType).as("purchase_id"),
+        lit(null).cast("timestamp").as("purchase_ts"), col("event_id"), lit(1).as("tag"))
       // At equal ts the purchase (tag 0) sorts before the click, so a
       // same-instant purchase is visible to the click (p.ts <= c.ts).
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("tag"))
@@ -467,95 +528,38 @@ object EventOps {
     },
 
     // ── as-of join, NATIVE operator path ────────────────────────────
-    // Same query and same DuckDB ASOF-JOIN oracle as q_asof_join, but
-    // executed by the engine's own whole-operator extension
-    // (graft.plans.AsOfJoinPlan -> AsOfJoinExec via the injected
-    // strategy): per-side hash shuffle on the key, per-partition
-    // (key, time) sorts that SPILL, and a streaming merge holding
-    // O(1) right rows. A hash match here
-    // proves the custom physical operator agrees row-for-row with
-    // DuckDB's native ASOF JOIN — the composed window formulation
-    // above certifies the SEMANTICS, this row certifies the OPERATOR.
-    Q("q_asof_native",
-      """WITH p AS (
-        |  SELECT user_id, ts, max(event_id) AS purchase_id
-        |  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts
-        |),
-        |c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click')
-        |SELECT c.event_id, c.user_id, c.ts, p.purchase_id, p.ts AS purchase_ts
-        |FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND p.ts <= c.ts""".stripMargin) { (s, dir) =>
-      val ev = events(s, dir)
-      val p = ev.filter(col("event_type") === "purchase")
-        .groupBy("user_id", "ts").agg(max("event_id").as("purchase_id"))
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"), col("purchase_id"))
-      val c = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      graft.plans.AsOfJoinOps.asof(c, p, "user_id", "p_user", "ts", "p_ts",
-          broadcast = Some(false)) // pin the shuffled sort-merge exec
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("purchase_id"), col("p_ts").as("purchase_ts"))
-    },
+    // The engine's own whole-operator extension (graft.plans.AsOfJoinPlan
+    // -> AsOfJoinExec via the injected strategy): per-side hash shuffle
+    // on the key, per-partition (key, time) sorts that SPILL, and a
+    // streaming merge holding O(1) right rows. The composed window
+    // formulation above certifies the SEMANTICS, this row certifies the
+    // OPERATOR.
+    Q("q_asof_native", asofBackwardSql)(
+      // pin the shuffled sort-merge exec
+      asofOperator(_, _, broadcast = Some(false))),
 
     // ── as-of join, BROADCAST operator path ─────────────────────────
-    // Same query and same oracle once more, forced onto the OTHER
-    // physical path: AsOfBroadcastExec — the right side broadcasts
-    // (zero shuffles, probe-side partitioning passes through), each
-    // task probes a bounded index built from the broadcast rows. With
-    // q_asof_native pinned to the shuffled sort-merge exec, the two
-    // rows certify BOTH planner outputs row-for-row against DuckDB;
-    // the forward/tolerance/nearest rows leave the hint unset so the
-    // stats-based strategy decision itself stays exercised per scale.
-    Q("q_asof_broadcast",
-      """WITH p AS (
-        |  SELECT user_id, ts, max(event_id) AS purchase_id
-        |  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts
-        |),
-        |c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click')
-        |SELECT c.event_id, c.user_id, c.ts, p.purchase_id, p.ts AS purchase_ts
-        |FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND p.ts <= c.ts""".stripMargin) { (s, dir) =>
-      val ev = events(s, dir)
-      val p = ev.filter(col("event_type") === "purchase")
-        .groupBy("user_id", "ts").agg(max("event_id").as("purchase_id"))
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"), col("purchase_id"))
-      val c = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      graft.plans.AsOfJoinOps.asof(c, p, "user_id", "p_user", "ts", "p_ts",
-          broadcast = Some(true))
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("purchase_id"), col("p_ts").as("purchase_ts"))
-    },
+    // Forced onto the OTHER physical path: AsOfBroadcastExec — the
+    // right side broadcasts (zero shuffles, probe-side partitioning
+    // passes through), each task probes a bounded index built from the
+    // broadcast rows. With q_asof_native pinned to the shuffled
+    // sort-merge exec, the two rows certify BOTH planner outputs
+    // row-for-row against DuckDB; the strict/forward/tolerance/nearest
+    // rows leave the hint unset so the stats-based strategy decision
+    // itself stays exercised per scale.
+    Q("q_asof_broadcast", asofBackwardSql)(
+      asofOperator(_, _, broadcast = Some(true))),
 
     // ── as-of join, STREAMING state machine ─────────────────────────
-    // Same query and same oracle a FOURTH time, through the streaming
-    // twin (StatefulOps.asofStream): both sides ride one tagged union
-    // into a flatMapGroupsWithState keyed by user, whose state holds
-    // watermark-compacted right postings and watermark-deferred left
-    // events. Run here in batch flush mode — the hash match proves the
-    // state machine agrees row-for-row with DuckDB's ASOF JOIN and
-    // with all three batch implementations (composed window,
-    // sort-merge exec, broadcast exec). StreamingAsOfSpec proves the
+    // The streaming twin (StatefulOps.asofStream): both sides ride one
+    // tagged union into a flatMapGroupsWithState keyed by user, whose
+    // state holds watermark-compacted right postings and
+    // watermark-deferred left events. Run here in batch flush mode.
+    // StreamingAsOfSpec proves the
     // SAME operator incrementally: out-of-order micro-batches under a
     // real watermark converge to this exact output.
-    Q("q_asof_stream",
-      """WITH p AS (
-        |  SELECT user_id, ts, max(event_id) AS purchase_id
-        |  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts
-        |),
-        |c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click')
-        |SELECT c.event_id, c.user_id, c.ts, p.purchase_id, p.ts AS purchase_ts
-        |FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND p.ts <= c.ts""".stripMargin) { (s, dir) =>
-      import s.implicits._
-      val ev = events(s, dir)
-      val p = ev.filter(col("event_type") === "purchase")
-        .groupBy("user_id", "ts").agg(max("event_id").as("purchase_id"))
-        .select(col("user_id"), col("ts"), lit(true).as("is_right"),
-          lit(0L).as("event_id"), col("purchase_id"))
-      val c = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), lit(false).as("is_right"),
-          col("event_id"), lit(0L).as("purchase_id"))
-      graft.streaming.StatefulOps
-        .asofStream(p.unionByName(c).as[graft.streaming.StatefulOps.AsOfRec],
-          flush = true)
+    Q("q_asof_stream", asofBackwardSql) { (s, dir) =>
+      graft.streaming.StatefulOps.asofStream(asofRecs(s, dir), flush = true)
         .toDF()
         .select(col("event_id"), col("user_id"), col("ts"),
           col("purchase_id"), col("purchase_ts"))
@@ -576,24 +580,9 @@ object EventOps {
     // record on time; cross-batch DISORDER convergence is
     // StreamingAsOfSpec's job.) Output rides foreachBatch parquet
     // appends — distributed writes, nothing driver-side.
-    Q("q_asof_stream_wm",
-      """WITH p AS (
-        |  SELECT user_id, ts, max(event_id) AS purchase_id
-        |  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts
-        |),
-        |c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click')
-        |SELECT c.event_id, c.user_id, c.ts, p.purchase_id, p.ts AS purchase_ts
-        |FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND p.ts <= c.ts""".stripMargin) { (s, dir) =>
+    Q("q_asof_stream_wm", asofBackwardSql) { (s, dir) =>
       import s.implicits._
-      val ev = events(s, dir)
-      val p = ev.filter(col("event_type") === "purchase")
-        .groupBy("user_id", "ts").agg(max("event_id").as("purchase_id"))
-        .select(col("user_id"), col("ts"), lit(true).as("is_right"),
-          lit(0L).as("event_id"), col("purchase_id"))
-      val c = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), lit(false).as("is_right"),
-          col("event_id"), lit(0L).as("purchase_id"))
-      val recs = p.unionByName(c).as[graft.streaming.StatefulOps.AsOfRec]
+      val recs = asofRecs(s, dir)
 
       val root = s"${Staging.dir(dir)}/asof_stream_wm"
       val (tminMs, tmaxMs) = timeBounds(recs.toDF())
@@ -911,53 +900,17 @@ object EventOps {
     // merge_asof's allow_exact_matches=false: the latest purchase
     // STRICTLY before each click (self-exclusion shape — "state as of
     // just before this event"). DuckDB's ASOF JOIN takes the strict
-    // inequality natively, so the oracle is one character away from
-    // q_asof_native's.
-    Q("q_asof_strict",
-      """WITH p AS (
-        |  SELECT user_id, ts, max(event_id) AS purchase_id
-        |  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts
-        |),
-        |c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click')
-        |SELECT c.event_id, c.user_id, c.ts, p.purchase_id, p.ts AS purchase_ts
-        |FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND p.ts < c.ts""".stripMargin) { (s, dir) =>
-      val ev = events(s, dir)
-      val p = ev.filter(col("event_type") === "purchase")
-        .groupBy("user_id", "ts").agg(max("event_id").as("purchase_id"))
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"), col("purchase_id"))
-      val c = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      graft.plans.AsOfJoinOps.asof(c, p, "user_id", "p_user", "ts", "p_ts",
-          allowExactMatches = false)
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("purchase_id"), col("p_ts").as("purchase_ts"))
-    },
+    // inequality natively.
+    Q("q_asof_strict", asofSql("p.ts < c.ts"))(
+      asofOperator(_, _, allowExactMatches = false)),
 
     // ── as-of join, FORWARD direction ───────────────────────────────
     // The other merge_asof direction: the EARLIEST purchase at-or-
     // after each click (time-to-conversion shape). Same native
     // operator, binary search flipped to smallest-time >= t; DuckDB's
-    // ASOF JOIN takes the reversed inequality natively, so the oracle
-    // is symmetric with q_asof_native's.
-    Q("q_asof_forward",
-      """WITH p AS (
-        |  SELECT user_id, ts, max(event_id) AS purchase_id
-        |  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts
-        |),
-        |c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click')
-        |SELECT c.event_id, c.user_id, c.ts, p.purchase_id, p.ts AS purchase_ts
-        |FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND p.ts >= c.ts""".stripMargin) { (s, dir) =>
-      val ev = events(s, dir)
-      val p = ev.filter(col("event_type") === "purchase")
-        .groupBy("user_id", "ts").agg(max("event_id").as("purchase_id"))
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"), col("purchase_id"))
-      val c = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      graft.plans.AsOfJoinOps.asof(c, p, "user_id", "p_user", "ts", "p_ts",
-          direction = "forward")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("purchase_id"), col("p_ts").as("purchase_ts"))
-    },
+    // ASOF JOIN takes the reversed inequality natively.
+    Q("q_asof_forward", asofSql("p.ts >= c.ts"))(
+      asofOperator(_, _, direction = "forward")),
 
     // ── as-of join with a TOLERANCE band ────────────────────────────
     // merge_asof's third dial: the latest purchase at-or-before each
@@ -967,26 +920,13 @@ object EventOps {
     // band: a match outside tolerance degrades to NULL (the row stays;
     // contrast q_range_join, which counts all in-window purchases).
     Q("q_asof_tolerance",
-      """WITH p AS (
-        |  SELECT user_id, ts, max(event_id) AS purchase_id
-        |  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts
-        |),
-        |c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click')
-        |SELECT c.event_id, c.user_id, c.ts,
-        |  CASE WHEN p.ts >= c.ts - INTERVAL '1 hour' THEN p.purchase_id END AS purchase_id,
-        |  CASE WHEN p.ts >= c.ts - INTERVAL '1 hour' THEN p.ts END AS purchase_ts
-        |FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND p.ts <= c.ts""".stripMargin) { (s, dir) =>
-      val ev = events(s, dir)
-      val p = ev.filter(col("event_type") === "purchase")
-        .groupBy("user_id", "ts").agg(max("event_id").as("purchase_id"))
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"), col("purchase_id"))
-      val c = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      graft.plans.AsOfJoinOps.asof(c, p, "user_id", "p_user", "ts", "p_ts",
-          tolerance = Some(3600L * 1000000L)) // 1 hour in timestamp micros
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("purchase_id"), col("p_ts").as("purchase_ts"))
-    },
+      s"""$asofSqlPrefix
+         |SELECT c.event_id, c.user_id, c.ts,
+         |  CASE WHEN p.ts >= c.ts - INTERVAL '1 hour' THEN p.purchase_id END AS purchase_id,
+         |  CASE WHEN p.ts >= c.ts - INTERVAL '1 hour' THEN p.ts END AS purchase_ts
+         |${asofFromSql("p.ts <= c.ts")}""".stripMargin)(
+      // 1 hour in timestamp micros
+      asofOperator(_, _, tolerance = Some(3600L * 1000000L))),
 
     // ── as-of join, NEAREST direction ───────────────────────────────
     // merge_asof's last direction: the purchase closest in time to
@@ -997,32 +937,18 @@ object EventOps {
     // also documents exactly why the single-operator form earns its
     // place.
     Q("q_asof_nearest",
-      """WITH p AS (
-        |  SELECT user_id, ts, max(event_id) AS purchase_id
-        |  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts
-        |),
-        |c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-        |b AS (SELECT c.event_id, c.user_id, c.ts, p.purchase_id AS b_id, p.ts AS b_ts
-        |      FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND p.ts <= c.ts),
-        |f AS (SELECT c.event_id, p.purchase_id AS f_id, p.ts AS f_ts
-        |      FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND p.ts > c.ts)
-        |SELECT b.event_id, b.user_id, b.ts,
-        |  CASE WHEN b_ts IS NOT NULL AND (f_ts IS NULL OR (b.ts - b_ts) <= (f_ts - b.ts))
-        |       THEN b_id ELSE f_id END AS purchase_id,
-        |  CASE WHEN b_ts IS NOT NULL AND (f_ts IS NULL OR (b.ts - b_ts) <= (f_ts - b.ts))
-        |       THEN b_ts ELSE f_ts END AS purchase_ts
-        |FROM b JOIN f ON b.event_id = f.event_id""".stripMargin) { (s, dir) =>
-      val ev = events(s, dir)
-      val p = ev.filter(col("event_type") === "purchase")
-        .groupBy("user_id", "ts").agg(max("event_id").as("purchase_id"))
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"), col("purchase_id"))
-      val c = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      graft.plans.AsOfJoinOps.asof(c, p, "user_id", "p_user", "ts", "p_ts",
-          direction = "nearest")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("purchase_id"), col("p_ts").as("purchase_ts"))
-    },
+      s"""$asofSqlPrefix,
+         |b AS (SELECT c.event_id, c.user_id, c.ts, p.purchase_id AS b_id, p.ts AS b_ts
+         |      ${asofFromSql("p.ts <= c.ts")}),
+         |f AS (SELECT c.event_id, p.purchase_id AS f_id, p.ts AS f_ts
+         |      ${asofFromSql("p.ts > c.ts")})
+         |SELECT b.event_id, b.user_id, b.ts,
+         |  CASE WHEN b_ts IS NOT NULL AND (f_ts IS NULL OR (b.ts - b_ts) <= (f_ts - b.ts))
+         |       THEN b_id ELSE f_id END AS purchase_id,
+         |  CASE WHEN b_ts IS NOT NULL AND (f_ts IS NULL OR (b.ts - b_ts) <= (f_ts - b.ts))
+         |       THEN b_ts ELSE f_ts END AS purchase_ts
+         |FROM b JOIN f ON b.event_id = f.event_id""".stripMargin)(
+      asofOperator(_, _, direction = "nearest")),
 
     // ── JSON column extraction + aggregation ────────────────────────
     Q("q_events_json",

@@ -326,6 +326,12 @@ object MultimodalOps {
     // SPI and dispatching directly is what AudioSystem does per call
     // minus the lock — same provider classes, byte-identical output —
     // and restores linear fan-out for the audio rows at any scale.
+    // Probe ORDER is not reproduced: both lists keep ServiceLoader
+    // order, AudioSystem probes in reverse. With the JDK's providers
+    // exactly one writer accepts this codec's PCM WAVE stream and one
+    // reader claims each container, so the order cannot matter;
+    // MultimodalSpec's "AudioCodec's direct SPI dispatch is
+    // byte/stat-identical to AudioSystem" pins that.
     private lazy val fileWriters: List[javax.sound.sampled.spi.AudioFileWriter] = {
       import scala.jdk.CollectionConverters._
       java.util.ServiceLoader
@@ -397,10 +403,12 @@ object MultimodalOps {
       * mismatch desyncs from the oracle immediately.
       */
     def decodeStats(wav: Array[Byte]): WavStats = {
-      // direct SPI dispatch (see fileReaders above): first provider
-      // that recognizes the container wins — AudioSystem's own loop,
-      // without the lock. Unrecognized bytes surface as the same
-      // UnsupportedAudioFileException the quarantine route expects.
+      // direct SPI dispatch (see fileReaders above): the first reader
+      // in ServiceLoader order that recognizes the container wins —
+      // AudioSystem's first-match rule without the lock, though not its
+      // (reverse) probe order (see fileWriters). Unrecognized bytes
+      // surface as the same UnsupportedAudioFileException the
+      // quarantine route expects.
       val ais = {
         var res: javax.sound.sampled.AudioInputStream = null
         val it = fileReaders.iterator
@@ -479,7 +487,10 @@ object MultimodalOps {
 
   /** Decode-or-route for audio: the WAV twin of [[routeDecodes]].
     * Undecodable payloads route to 'quarantined' per row on the
-    * executor; clean rows carry their decoded frame count.
+    * executor; clean rows carry their decoded frame count. Domain
+    * assumption: payloads are sampled audio, so MIDI bytes are
+    * quarantined, where AudioSystem would render them through the MIDI
+    * bridge that [[AudioCodec]]'s reader list excludes.
     */
   def routeWavDecodes(wavs: Dataset[WavRow]): Dataset[AudioRoutedRow] = {
     import wavs.sparkSession.implicits._

@@ -3,6 +3,8 @@ package graft.ops
 import graft.{Pipeline, Q, StdoutNotifier}
 import graft.io.{JsonArraySource, ParquetSource}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import java.nio.file.{Files, Paths}
 
@@ -45,20 +47,32 @@ object PipelineQueries {
   private def stagingDir(sfDir: String): String =
     s"${Staging.dir(sfDir)}/pipeline_e2e"
 
-  def runE2e(s: SparkSession, dir: String): DataFrame = {
-    val root = stagingDir(dir)
+  /** Stages both e2e rows' inputs under `root`: the JSON-array primary
+    * (`primary.json`) and the parquet secondary (`secondary.parquet`).
+    * Returns the primary as generated from `orders`; its schema is the
+    * one the JSON source is given.
+    *
+    * Fingerprint-guarded staging (the ensureBaseIvfIndex convention):
+    * the fixtures are pure functions of the orders and customer tables,
+    * so repeat runs (bench warm pairs, `graft.Verify`, the other e2e
+    * row — Verify/Bench run rows sequentially) skip the
+    * driver-streamed array serialization and go straight to the
+    * pipeline surface the row certifies.
+    */
+  private def stageE2e(s: SparkSession, dir: String, root: String): DataFrame = {
     val p = MergeQueries.primary(s, dir)
-    // Fingerprint-guarded staging (the ensureBaseIvfIndex convention):
-    // the JSON/parquet fixtures are pure functions of the orders and
-    // customer tables, so repeat runs (bench warm pairs, the driver's
-    // verify) skip the driver-streamed array serialization and go
-    // straight to the pipeline surface the row certifies.
     Staging.ensureStaged(root,
       Staging.sourceFingerprint(dir, Seq("orders", "customer"))) {
       writeJsonArrayFixture(p, s"$root/primary.json")
       MergeQueries.secondary(s, dir)
         .write.mode("overwrite").parquet(s"$root/secondary.parquet")
     }
+    p
+  }
+
+  def runE2e(s: SparkSession, dir: String): DataFrame = {
+    val root = stagingDir(dir)
+    val p = stageE2e(s, dir, root)
 
     // Explicit schema on the JSON source: preserves the reference's
     // original-column-order contract (O12) and exact types; inference
@@ -102,16 +116,7 @@ object PipelineQueries {
     */
   def runE2eParallel(s: SparkSession, dir: String): DataFrame = {
     val root = stagingDir(dir)
-    val p = MergeQueries.primary(s, dir)
-    // same fingerprint-guarded fixtures as pipeline_e2e (Verify/Bench
-    // run queries sequentially, so sharing the staged inputs is safe
-    // and skips a second driver-streamed JSON serialization)
-    Staging.ensureStaged(root,
-      Staging.sourceFingerprint(dir, Seq("orders", "customer"))) {
-      writeJsonArrayFixture(p, s"$root/primary.json")
-      MergeQueries.secondary(s, dir)
-        .write.mode("overwrite").parquet(s"$root/secondary.parquet")
-    }
+    val p = stageE2e(s, dir, root)
     val primary = JsonArraySource(s"$root/primary.json", Some(p.schema)).load(s)
     val secondary = ParquetSource(s"$root/secondary.parquet").load(s)
     val merged = MergeOps.coalesceMerge(primary, secondary, "id")
@@ -120,38 +125,43 @@ object PipelineQueries {
     // partition columns come back at the END of the inferred schema —
     // reorder to the merge's own column order (the O12 contract the
     // oracle's sorted-by-name compare doesn't see but consumers do)
-    s.read.parquet(out).select(merged.schema.fieldNames.map(org.apache.spark.sql.functions.col): _*)
+    s.read.parquet(out).select(merged.schema.fieldNames.map(col): _*)
   }
 
   /** ORC round-trip certified by the oracle: the parquet `documents`
     * fixture is mirrored to ORC (staging under target/, like the e2e
     * fixtures), read back through [[graft.io.OrcSource]], and reduced
-    * to a per-lang content digest — row counts, char totals, and a
-    * sum of per-row md5-derived text hashes. DuckDB computes the same
+    * to a per-lang [[documentsDigest]]. DuckDB computes the same
     * digest over the parquet ORIGINAL, so a hash match proves the ORC
-    * writer+reader preserved every row's text bit-exactly, not merely
-    * the row count. (DuckDB reads no ORC — mirroring on the Spark side
-    * and digest-comparing against the source format is what makes the
-    * format gap oracle-checkable at all.)
+    * writer+reader preserved every row's text bit-exactly. (DuckDB
+    * reads no ORC — mirroring on the Spark side and digest-comparing
+    * against the source format is what makes the format gap
+    * oracle-checkable at all.)
     */
   def runOrcMirror(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.LongType
     val root = stagingDir(dir)
     graft.Tables.load(s, dir, "documents")
       .write.mode("overwrite").orc(s"$root/documents.orc")
-    graft.io.OrcSource(s"$root/documents.orc").load(s)
-      .groupBy("lang")
+    documentsDigest(graft.io.OrcSource(s"$root/documents.orc").load(s), "lang")
+  }
+
+  /** Per-`by` content digest of `documents` rows, shared by the ORC and
+    * partition rows: row count, char total, and a sum of per-row
+    * md5-derived text hashes, so a match covers every row's text, not
+    * merely the row count.
+    */
+  private def documentsDigest(docs: DataFrame, by: String): DataFrame =
+    docs.groupBy(by)
       .agg(count(lit(1)).as("n_docs"),
         sum("n_chars").as("chars_total"),
         sum(graft.Cols.hex60(col("text")) % lit(1000003L)).cast(LongType)
           .as("text_digest"))
-  }
 
-  private val orcMirrorOracle: String =
-    s"""SELECT lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS chars_total,
+  /** DuckDB's [[documentsDigest]] over `from` (the parquet original). */
+  private def documentsDigestSql(by: String, from: String): String =
+    s"""SELECT $by, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS chars_total,
        |  CAST(sum(${graft.OracleSql.hex60("text")} % 1000003) AS BIGINT) AS text_digest
-       |FROM documents GROUP BY lang""".stripMargin
+       |FROM $from GROUP BY $by""".stripMargin
 
   /** Hive-partitioned layout + partition PRUNING certified by the
     * oracle: `documents` is rewritten partitioned by `lang`
@@ -167,25 +177,14 @@ object PipelineQueries {
     * right slice.
     */
   def runPartitionPrune(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.LongType
     val root = stagingDir(dir)
     graft.Tables.load(s, dir, "documents")
       .write.mode("overwrite").partitionBy("lang")
       .parquet(s"$root/documents_by_lang.parquet")
-    s.read.parquet(s"$root/documents_by_lang.parquet")
-      .filter(col("lang") === "en")
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_docs"),
-        sum("n_chars").as("chars_total"),
-        sum(graft.Cols.hex60(col("text")) % lit(1000003L)).cast(LongType)
-          .as("text_digest"))
+    documentsDigest(
+      s.read.parquet(s"$root/documents_by_lang.parquet").filter(col("lang") === "en"),
+      "source")
   }
-
-  private val partitionPruneOracle: String =
-    s"""SELECT source, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS chars_total,
-       |  CAST(sum(${graft.OracleSql.hex60("text")} % 1000003) AS BIGINT) AS text_digest
-       |FROM documents WHERE lang = 'en' GROUP BY source""".stripMargin
 
   /** JDBC round-trip certified by the oracle — the O4 operator
     * (`gule_test_job.py:82-94` reads its enrichment table over JDBC)
@@ -194,28 +193,33 @@ object PipelineQueries {
     * ("jdbc")`, read back through [[graft.io.JdbcSource]] with the
     * partitioned-read knobs set (partitionColumn/numPartitions — the
     * scan issues range-bounded queries in parallel, the shape a large
-    * enrichment table needs), and reduced to a per-nation digest of
-    * every column: row counts, a sum of md5-derived name hashes, and
-    * floor-quantized account balances (floor of an identical IEEE
-    * product is exact in both engines; DOUBLE round-trips Derby
-    * bit-exactly). DuckDB computes the same digest over the parquet
-    * ORIGINAL, so a hash match proves the JDBC writer+reader preserved
-    * every row of every column — not merely that a connection opened.
+    * enrichment table needs), and reduced to [[supplierDigest]].
+    * DuckDB computes the same digest over the parquet ORIGINAL, so a
+    * hash match proves the JDBC writer+reader preserved every row of
+    * every column — not merely that a connection opened.
     * Derby is in-process (jdbc:derby:memory:), standing in for the
     * reference's MariaDB server: [[graft.io.JdbcOptions]] is the same
     * options map either way, only url/driver differ per deployment.
     */
-  def runJdbcMirror(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.LongType
+  def runJdbcMirror(s: SparkSession, dir: String): DataFrame =
+    supplierDigest(graft.io.JdbcSource(
+      derbySupplierMirror(s, dir, "graft", "supplier_mirror")).load(s))
+
+  /** Writes the `supplier` fixture through `spark.write.format("jdbc")`
+    * into table `table` of the in-memory Derby database `db`, one
+    * database per fixture dir, and returns the options that read it
+    * back with the partitioned-read knobs set.
+    */
+  private def derbySupplierMirror(s: SparkSession, dir: String,
+      db: String, table: String): graft.io.JdbcOptions = {
     // Derby writes its boot log to derby.log in the cwd unless homed;
     // keep the engine's droppings inside the staging convention. The
     // property is read at Derby boot (first connection in the JVM).
     System.setProperty("derby.system.home", "target/staging/derby")
     val tag = dir.replaceAll("[^0-9A-Za-z.]", "_")
     val opts = graft.io.JdbcOptions(
-      url = s"jdbc:derby:memory:graft_$tag;create=true",
-      dbtable = "supplier_mirror",
+      url = s"jdbc:derby:memory:${db}_$tag;create=true",
+      dbtable = table,
       user = "app",
       password = "app",
       // Derby >= 10.15 ships the JDBC drivers in derbytools.jar
@@ -232,13 +236,28 @@ object PipelineQueries {
       .options(opts.asMap)
       .mode("overwrite")
       .save()
-    graft.io.JdbcSource(opts).load(s)
-      .groupBy("s_nationkey")
+    opts
+  }
+
+  /** Per-nation digest of every `supplier` column, shared by the two
+    * JDBC rows: row count, a sum of md5-derived name hashes, and
+    * floor-quantized account balances (floor of an identical IEEE
+    * product is exact in both engines; DOUBLE round-trips Derby
+    * bit-exactly).
+    */
+  private def supplierDigest(supp: DataFrame): DataFrame =
+    supp.groupBy("s_nationkey")
       .agg(count(lit(1)).as("n_supp"),
         sum(graft.Cols.hex60(col("s_name")) % lit(1000003L)).cast(LongType)
           .as("name_digest"),
         sum(floor(col("s_acctbal") * lit(10000.0)).cast(LongType)).as("bal_digest"))
-  }
+
+  /** DuckDB's [[supplierDigest]] over `from` (the parquet original). */
+  private def supplierDigestSql(from: String): String =
+    s"""SELECT s_nationkey, count(*) AS n_supp,
+       |  CAST(sum(${graft.OracleSql.hex60("s_name")} % 1000003) AS BIGINT) AS name_digest,
+       |  CAST(sum(CAST(floor(s_acctbal * 10000.0) AS BIGINT)) AS BIGINT) AS bal_digest
+       |FROM $from GROUP BY s_nationkey""".stripMargin
 
   /** JDBC predicate pushdown certified by the oracle — the other
     * production knob SURVEY O4 names beyond partitioned reads: a
@@ -256,26 +275,8 @@ object PipelineQueries {
     * the assertion flaky.
     */
   def runJdbcPushdown(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.LongType
-    System.setProperty("derby.system.home", "target/staging/derby")
-    val tag = dir.replaceAll("[^0-9A-Za-z.]", "_")
-    val opts = graft.io.JdbcOptions(
-      url = s"jdbc:derby:memory:graft_push_$tag;create=true",
-      dbtable = "supplier_push",
-      user = "app",
-      password = "app",
-      driver = "org.apache.derby.jdbc.EmbeddedDriver",
-      partitionColumn = Some("s_suppkey"),
-      lowerBound = Some(0L),
-      upperBound = Some(1L << 20),
-      numPartitions = Some(4))
-    graft.Tables.load(s, dir, "supplier")
-      .write.format("jdbc")
-      .options(opts.asMap)
-      .mode("overwrite")
-      .save()
-    val filtered = graft.io.JdbcSource(opts).load(s)
+    val filtered = graft.io.JdbcSource(
+        derbySupplierMirror(s, dir, "graft_push", "supplier_push")).load(s)
       .filter(col("s_acctbal") > lit(1000.0))
     val plan = filtered.queryExecution.executedPlan.toString.toLowerCase
     // rendering-tolerant: the exact filter string ("greaterthan(
@@ -285,25 +286,8 @@ object PipelineQueries {
     require(plan.contains("pushedfilters:") &&
       pushedGt.findFirstIn(plan).isDefined,
       s"JDBC scan did not push the predicate down:\n$plan")
-    filtered
-      .groupBy("s_nationkey")
-      .agg(count(lit(1)).as("n_supp"),
-        sum(graft.Cols.hex60(col("s_name")) % lit(1000003L)).cast(LongType)
-          .as("name_digest"),
-        sum(floor(col("s_acctbal") * lit(10000.0)).cast(LongType)).as("bal_digest"))
+    supplierDigest(filtered)
   }
-
-  private val jdbcPushdownOracle: String =
-    s"""SELECT s_nationkey, count(*) AS n_supp,
-       |  CAST(sum(${graft.OracleSql.hex60("s_name")} % 1000003) AS BIGINT) AS name_digest,
-       |  CAST(sum(CAST(floor(s_acctbal * 10000.0) AS BIGINT)) AS BIGINT) AS bal_digest
-       |FROM supplier WHERE s_acctbal > 1000.0 GROUP BY s_nationkey""".stripMargin
-
-  private val jdbcMirrorOracle: String =
-    s"""SELECT s_nationkey, count(*) AS n_supp,
-       |  CAST(sum(${graft.OracleSql.hex60("s_name")} % 1000003) AS BIGINT) AS name_digest,
-       |  CAST(sum(CAST(floor(s_acctbal * 10000.0) AS BIGINT)) AS BIGINT) AS bal_digest
-       |FROM supplier GROUP BY s_nationkey""".stripMargin
 
   // ── malformed-record quarantine (PERMISSIVE parse + split) ────────
   // What a 100 TB ingest meets on day one and the reference's pandas
@@ -362,9 +346,11 @@ object PipelineQueries {
   val queries: Seq[Q] = Seq(
     Q("pipeline_e2e", MergeQueries.coalesceOracle)(runE2e),
     Q("pipeline_e2e_parallel", MergeQueries.coalesceOracle)(runE2eParallel),
-    Q("q_orc_mirror", orcMirrorOracle)(runOrcMirror),
-    Q("q_partition_prune", partitionPruneOracle)(runPartitionPrune),
-    Q("q_jdbc_mirror", jdbcMirrorOracle)(runJdbcMirror),
-    Q("q_jdbc_pushdown", jdbcPushdownOracle)(runJdbcPushdown),
+    Q("q_orc_mirror", documentsDigestSql("lang", "documents"))(runOrcMirror),
+    Q("q_partition_prune",
+      documentsDigestSql("source", "documents WHERE lang = 'en'"))(runPartitionPrune),
+    Q("q_jdbc_mirror", supplierDigestSql("supplier"))(runJdbcMirror),
+    Q("q_jdbc_pushdown",
+      supplierDigestSql("supplier WHERE s_acctbal > 1000.0"))(runJdbcPushdown),
     Q("q_json_quarantine", jsonQuarantineOracle)(runJsonQuarantine))
 }

@@ -52,6 +52,23 @@ class SourcesSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(got.collect().map(_.toString).sorted === sample.collect().map(_.toString).sorted)
   }
 
+  test("a zero-row frame lands as exactly the header line, counted 0") {
+    sample.write.mode("overwrite").parquet(s"$root/csvempty_src")
+    val empties = Seq(
+      "empty local frame" -> spark.createDataFrame(Seq.empty[Row].asJava, schema),
+      "empty filtered parquet scan" ->
+        spark.read.parquet(s"$root/csvempty_src").filter(col("id") < 0L))
+    for (((label, df), i) <- empties.zipWithIndex) {
+      val destDir = s"$root/csvempty_$i"
+      val (csv, nWritten) = CsvSink.writeSingleCsv(df, destDir, "empty.csv")
+      assert(nWritten === 0L, label)
+      assert(Files.readString(csv) === "id,v,s\n", label)
+      val landed = Files.list(Paths.get(destDir)).iterator.asScala
+        .map(_.getFileName.toString).toSeq
+      assert(landed === Seq("empty.csv"), s"$label: $landed")
+    }
+  }
+
   test("a failed CSV write leaves no staging directory behind") {
     val destDir = s"$root/csvfail"
     val poisoned = sample.withColumn("boom",
