@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """A/B a change against its parent with the repo benchmark, in pairs.
 
-    python3 scripts/ab_pairs.py PARENT_DIR CHANGE_DIR --workload W \
+    python3 scripts/ab_pairs.py PARENT_DIR CHANGE_DIR --workload W[,W2...] \
         --seeds 101-110 [--seconds 6] [--trace 0|1] [--out ab.json]
 
 PARENT_DIR and CHANGE_DIR are two checkouts (e.g. the parent made with
@@ -10,6 +10,12 @@ PARENT_DIR and CHANGE_DIR are two checkouts (e.g. the parent made with
 once in each checkout, one run at a time, alternating which side runs
 first (the first pair runs the parent first). Each run's metrics are
 read from the JSON object on the last line of its stdout.
+
+With a comma list of workloads, each seed runs its pair of every
+workload back to back, so a claimed workload and its control share the
+host's conditions; progress lines then name the workload, and there is
+one table per workload (and `--out` holds a list of the per-workload
+objects a single workload writes).
 
 For every metric it prints each side's median and quartiles, the
 parent's interquartile range, the change's relative difference, how many
@@ -132,7 +138,8 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("parent", help="checkout of the parent commit")
     ap.add_argument("change", help="checkout of the change")
-    ap.add_argument("--workload", required=True)
+    ap.add_argument("--workload", required=True,
+                    help="a workload, or a comma list run seed by seed back to back")
     ap.add_argument("--seeds", required=True, help="e.g. 101-110 or 3,5,9")
     ap.add_argument("--seconds", type=float, default=6)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
@@ -144,21 +151,31 @@ def main():
         if not (d / "perfbench" / "run.py").exists():
             sys.exit(f"ab_pairs: {side} checkout {d} has no perfbench/run.py")
     specs = metric_specs(json.loads((sides["change"] / "BENCHMARK.json").read_text()))
+    workloads = a.workload.split(",")
 
-    runs = []
+    runs = {w: [] for w in workloads}
     for i, seed in enumerate(parse_seeds(a.seeds)):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
-        pair = {"seed": seed, "first": order[0]}
-        for side in order:
-            pair[side] = run_once(sides[side], a.workload, seed, a.seconds, a.trace)
-            res = pair[side]
-            status = res.get("error") or (
-                f"failed {res['failed']}/{res['attempted']}" + "".join(
-                    f" {k}={v:.4g}" for k, v in res["metrics"].items()
-                    if k in ("job_s", "cold_job_s", "setup_s", "records_per_s")))
-            print(f"seed {seed} {side:6s} {status}", flush=True)
-        runs.append(pair)
+        for w in workloads:
+            label = f"{w} " if len(workloads) > 1 else ""
+            pair = {"seed": seed, "first": order[0]}
+            for side in order:
+                pair[side] = run_once(sides[side], w, seed, a.seconds, a.trace)
+                res = pair[side]
+                status = res.get("error") or (
+                    f"failed {res['failed']}/{res['attempted']}" + "".join(
+                        f" {k}={v:.4g}" for k, v in res["metrics"].items()
+                        if k in ("job_s", "cold_job_s", "setup_s", "records_per_s")))
+                print(f"{label}seed {seed} {side:6s} {status}", flush=True)
+            runs[w].append(pair)
 
+    out = [report(w, runs[w], specs, a, sides) for w in workloads]
+    if a.out:
+        Path(a.out).write_text(json.dumps(out[0] if len(out) == 1 else out, indent=1) + "\n")
+
+
+def report(workload, runs, specs, a, sides):
+    """Prints one workload's summary and table; returns what `--out` holds for it."""
     def clean(res):
         return "metrics" in res and res["failed"] == 0
 
@@ -181,16 +198,14 @@ def main():
 
     unclean = {side: sum(1 for r in runs if not clean(r[side]))
                for side in ("parent", "change")}
-    print(f"\n{a.workload}: {len(runs)} pairs; runs errored or with failed operations:"
+    print(f"\n{workload}: {len(runs)} pairs; runs errored or with failed operations:"
           f" parent {unclean['parent']}, change {unclean['change']};"
           f" failed operations (an errored run counts one): parent {par_failed},"
           f" change {chg_failed}")
     print_table(summary)
-    if a.out:
-        Path(a.out).write_text(json.dumps(
-            {"workload": a.workload, "seconds": a.seconds, "trace": a.trace,
-             "parent": str(sides["parent"]), "change": str(sides["change"]),
-             "runs": runs, "summary": summary}, indent=1) + "\n")
+    return {"workload": workload, "seconds": a.seconds, "trace": a.trace,
+            "parent": str(sides["parent"]), "change": str(sides["change"]),
+            "runs": runs, "summary": summary}
 
 
 if __name__ == "__main__":

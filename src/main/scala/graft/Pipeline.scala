@@ -2,7 +2,8 @@ package graft
 
 import graft.io.{CsvSink, RelationSource}
 import graft.ops.MergeOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftPlanShim, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 import java.nio.file.Path
 import scala.util.{Failure, Success, Try}
@@ -24,10 +25,11 @@ import scala.util.control.NonFatal
   * over rows collected to the driver (`gule_test_job.py:94,125-156`) —
   * every data-plane step here is a Spark plan. The driver-side work is
   * folding the JSON reader's per-split lexer summaries (a few numbers
-  * per split, [[graft.io.JsonArraySplits]]), the ≤10-row report sample
-  * and the final part-file rename. The primary is parsed once per run
-  * and cached for the run's two consumers, the unmatched report and
-  * the CSV write.
+  * per split, [[graft.io.JsonArraySplits]]), the ≤10-row report sample,
+  * the CSV header line and joining the CSV part files into one
+  * ([[graft.io.CsvSink]]). The primary is parsed once per run and its
+  * rows kept for the run's two consumers, the unmatched report and the
+  * CSV write ([[RowCache]]).
   */
 object Pipeline {
 
@@ -59,17 +61,8 @@ object Pipeline {
           Left(PipelineError(name, msg))
       }
 
-    def fromPrimary(primary: DataFrame): Either[PipelineError, PipelineResult] =
+    def fromRows(primary: DataFrame, secondary: DataFrame): Either[PipelineError, PipelineResult] =
       for {
-        secondary <- stage("read-secondary",
-          m => s"Error: failed to read ${spec.secondary.describe}: $m") {
-          spec.secondary.load(spark)
-        }
-        _ <- stage("validate-key",
-          m => s"Error: '${spec.key}' column not found: $m") {
-          MergeOps.requireKey(primary, spec.key, spec.primary.describe)
-          MergeOps.requireKey(secondary, spec.key, spec.secondary.describe)
-        }
         // inside a stage: Spark analyzes transformations eagerly, so an
         // incompatible shared-column type raises AnalysisException at
         // PLAN time — it must follow the same notify+Left routing, not
@@ -95,16 +88,48 @@ object Pipeline {
         PipelineResult(rows, unmatchedCount, csv)
       }
 
-    // The primary is parsed once per run: the unmatched report builds
-    // this cache and the CSV write reads it, instead of each parsing the
-    // file again. Released on every exit path.
     stage("read-primary",
       m => s"Error: failed to read ${spec.primary.describe}: $m") {
-      spec.primary.load(spark).persist()
+      spec.primary.load(spark)
     }.flatMap { primary =>
-      try fromPrimary(primary)
-      finally primary.unpersist()
+      for {
+        secondary <- stage("read-secondary",
+          m => s"Error: failed to read ${spec.secondary.describe}: $m") {
+          spec.secondary.load(spark)
+        }
+        _ <- stage("validate-key",
+          m => s"Error: '${spec.key}' column not found: $m") {
+          MergeOps.requireKey(primary, spec.key, spec.primary.describe)
+          MergeOps.requireKey(secondary, spec.key, spec.secondary.describe)
+        }
+        // The primary is parsed once per run: the unmatched report
+        // computes its rows and keeps them, and the CSV write reads them,
+        // instead of each parsing the file again. Made after the key is
+        // validated: planning a scan of a primary that is one corrupt
+        // record fails, and that primary must fail at validate-key.
+        // Released on every exit path.
+        cache <- stage("plan-merge", m => s"Error: failed to plan merge: $m") {
+          new RowCache(primary)
+        }
+        result <- try fromRows(cache.frame, secondary) finally cache.release()
+      } yield result
     }
+  }
+
+  /** `df`'s rows, kept from their first computation until [[release]]:
+    * Spark's rows as its physical plan yields them, copied, in memory and
+    * past it on disk. `Dataset.persist` would build compressed column
+    * batches with statistics per column; the run reads the rows whole,
+    * twice, and its mostly distinct strings gain nothing from them. The
+    * frame carries `df`'s size estimate, so joins over it are planned as
+    * joins over `df`.
+    */
+  private final class RowCache(df: DataFrame) {
+    private val rows =
+      GraftPlanShim.internalRows(df).map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
+    val frame: DataFrame = GraftPlanShim.ofInternalRows(df.sparkSession, rows, df.schema,
+      df.queryExecution.optimizedPlan.stats.sizeInBytes)
+    def release(): Unit = rows.unpersist(blocking = false)
   }
 
   private def reportUnmatched(

@@ -14,10 +14,11 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      // repartition(1), NOT coalesce(1): coalesce folds into the parent
-      // stage and would run every shuffle-free per-row query on a
-      // single core; repartition keeps the compute stages parallel and
-      // only the final write is single-task (same lesson as CsvSink)
+      // one parquet file per row, written by one task. repartition(1),
+      // NOT coalesce(1): coalesce folds into the parent stage and would
+      // run every shuffle-free per-row query on a single core;
+      // repartition keeps the compute stages parallel and only the
+      // final write is single-task
       try fn(spark, sfDir).repartition(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -1,18 +1,22 @@
 package graft.io
 
+import com.fasterxml.jackson.core.{JsonFactory, JsonParser}
 import org.apache.hadoop.fs.{FSDataInputStream, Path}
 import org.apache.hadoop.io.{BytesWritable, LongWritable}
 import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.hadoop.mapreduce.{InputSplit, Job, JobContext, RecordReader, TaskAttemptContext}
 import org.apache.hadoop.mapreduce.lib.input.{FileInputFormat, FileSplit}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Encoders, GraftPlanShim, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftPlanShim, SparkSession, classic}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.ExprUtils
+import org.apache.spark.sql.catalyst.json.{JSONOptions, JacksonParser, JsonInferSchema}
+import org.apache.spark.sql.catalyst.util.FailureSafeParser
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionDirectory}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
-import java.nio.ByteBuffer
-import java.nio.charset.{CharacterCodingException, StandardCharsets}
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 import scala.util.Try
@@ -38,16 +42,20 @@ import scala.util.Try
   *     the file's first byte, which gives every split its exact state
   *     and depth at its first byte, checks the array's shape, and moves
   *     each cut forward to the end of the object it falls in;
-  *  2. the records RDD: one task per moved cut emits, as a string, every
-  *     depth-1 element between its cut and the next. Tasks read exactly
-  *     their own bytes. Structural bytes are ASCII, so a cut never
-  *     splits a multi-byte character;
-  *  3. `spark.read.json(records)` infers the schema with the session's
-  *     JSON options. Inference is also the syntax check: Spark's
-  *     `multiLine` read turns a syntax error anywhere in the file into
-  *     one corrupt row, so an inferred corrupt-record column sends the
-  *     read back to `multiLine`. With a schema, the records are then
-  *     parsed with it.
+  *  2. the records RDD: one task per moved cut emits, as the file's own
+  *     UTF-8 bytes (`UTF8String`), every depth-1 element between its cut
+  *     and the next. Tasks read exactly their own bytes. Structural
+  *     bytes are ASCII, so a cut never splits a multi-byte character;
+  *  3. Spark's JSON schema inference and row parser
+  *     (`JsonInferSchema`, then `JacksonParser` under a
+  *     `FailureSafeParser`: what `spark.read.json` runs over a dataset
+  *     of strings, with the session's JSON options) read the records
+  *     through Jackson's byte parser, as `multiLine` reads the file, so
+  *     no byte is decoded to a Java string and encoded back. Inference
+  *     is also the syntax check: Spark's `multiLine` read turns a syntax
+  *     error anywhere in the file into one corrupt row, so an inferred
+  *     corrupt-record column sends the read back to `multiLine`. The
+  *     records are then parsed with the given schema, or the inferred one.
   *
   * Tasks read through Hadoop's `FileSystem` (so `s3a://` and `file:`
   * paths work and Spark records each task's input bytes), and both RDDs
@@ -186,7 +194,7 @@ private[graft] object JsonArraySplits {
     else None
   }
 
-  /** The array's elements in one task's bytes, as strings. */
+  /** The array's elements in one task's bytes. */
   private final class Elements(chunks: Iterator[(LongWritable, BytesWritable)],
       depthAt: Map[Long, Int]) {
     private var buf: Array[Byte] = Array.emptyByteArray
@@ -196,7 +204,6 @@ private[graft] object JsonArraySplits {
     private var mark = -1 // where the element being captured starts in buf
     private var acc = new Array[Byte](1024)
     private var accLen = 0
-    private val utf8 = StandardCharsets.UTF_8.newDecoder()
 
     private def nextChunk(): Boolean = chunks.hasNext && {
       val (k, v) = chunks.next()
@@ -219,12 +226,13 @@ private[graft] object JsonArraySplits {
     // an element that is not UTF-8 becomes a record Jackson rejects, so
     // inference marks it corrupt and the read falls back to multiLine,
     // which rejects the file
-    private def decoded(): String =
-      try utf8.decode(ByteBuffer.wrap(acc, 0, accLen)).toString
-      catch { case _: CharacterCodingException => "{" }
+    private def record(): UTF8String = {
+      val r = UTF8String.fromBytes(java.util.Arrays.copyOf(acc, accLen))
+      if (r.isValid) r else NotUtf8
+    }
 
     /** The next element, or null after the last. */
-    def next(): String = {
+    def next(): UTF8String = {
       while (i < n || { if (mark >= 0) append(n); nextChunk() }) {
         val b = buf(i)
         if (state == InString) {
@@ -241,7 +249,7 @@ private[graft] object JsonArraySplits {
           append(i + 1)
           mark = -1
           i += 1
-          return decoded()
+          return record()
         }
         i += 1
       }
@@ -301,16 +309,44 @@ private[graft] object JsonArraySplits {
               val elements = new Elements(it, depthAt)
               Iterator.continually(elements.next()).takeWhile(_ != null)
             }
-          val json = spark.createDataset(records)(Encoders.STRING)
-          val inferred = spark.read.json(json)
-          if (inferred.schema.fieldNames.contains(spark.sessionState.conf.columnNameOfCorruptRecord))
-            None
-          // sized as Spark sizes its own scan of the file, so joins plan
-          // the split read as they plan the multiLine one
-          else Some(GraftPlanShim.withSizeInBytes(
-            schema.fold(inferred)(spark.read.schema(_).json(json)), st.getLen))
+          val options = new JSONOptions(Map.empty[String, String],
+            spark.sessionState.conf.sessionLocalTimeZone,
+            spark.sessionState.conf.columnNameOfCorruptRecord)
+          val inferred = SQLExecution.withSQLConfPropagated(spark.asInstanceOf[classic.SparkSession]) {
+            new JsonInferSchema(options).infer(records, parser)
+          }
+          if (inferred.fieldNames.contains(options.columnNameOfCorruptRecord)) None
+          else {
+            val rowSchema = schema.fold(inferred)(GraftPlanShim.asNullable)
+            // sized as Spark sizes its own scan of the file, so joins plan
+            // the split read as they plan the multiLine one
+            Some(GraftPlanShim.ofInternalRows(spark, parse(records, rowSchema, options),
+              rowSchema, st.getLen))
+          }
         }
       }
+    }
+  }
+
+  private val NotUtf8 = UTF8String.fromString("{")
+
+  private def parser(factory: JsonFactory, record: UTF8String): JsonParser = {
+    val b = record.getByteBuffer
+    factory.createParser(b.array, b.arrayOffset + b.position, b.remaining)
+  }
+
+  /** The records as rows of `schema`, as `spark.read.schema(schema).json`
+    * parses a dataset of strings.
+    */
+  private def parse(records: RDD[UTF8String], schema: StructType,
+      options: JSONOptions): RDD[InternalRow] = {
+    ExprUtils.verifyColumnNameOfCorruptRecord(schema, options.columnNameOfCorruptRecord)
+    val fields = StructType(schema.filterNot(_.name == options.columnNameOfCorruptRecord))
+    records.mapPartitions { it =>
+      val raw = new JacksonParser(fields, options, allowArrayAsStructs = true)
+      val rows = new FailureSafeParser[UTF8String](raw.parse(_, parser, identity[UTF8String]),
+        options.parseMode, schema, options.columnNameOfCorruptRecord)
+      it.flatMap(rows.parse)
     }
   }
 

@@ -100,19 +100,16 @@ object PipelineQueries {
       .csv(result.csvPath.toString)
   }
 
-  /** The AT-SCALE sink twin of [[runE2e]]: the identical read -> merge
-    * pipeline over the SAME staged fixtures, but the result lands as
-    * PARTITIONED PARQUET written in parallel — the deployment shape
-    * the CsvSink header documents as "drop the single-object contract
-    * at scale", here executed and oracle-certified rather than
-    * asserted in a comment. The layout is hive-partitioned by
-    * `priority` (5 values — per-priority consumers prune to their
-    * directory) with the write parallelism left to the engine (no
-    * repartition(1) anywhere), and the read-back + oracle compare
-    * certify the partitioned round-trip preserved every row and
-    * column of the merge. Benchable against pipeline_e2e: the sf10
-    * gap between the two rows IS the measured cost of the
-    * single-object contract.
+  /** The partitioned-layout twin of [[runE2e]]: the identical read ->
+    * merge pipeline over the SAME staged fixtures, but the result lands
+    * as PARTITIONED PARQUET, hive-partitioned by `priority` (5 values —
+    * per-priority consumers prune to their directory), and the
+    * read-back + oracle compare certify the partitioned round-trip
+    * preserved every row and column of the merge. Both rows write in
+    * parallel ([[graft.io.CsvSink]] encodes the merge's partitions as
+    * they are and joins the files), so the gap between them is the cost
+    * of the layout: `partitionBy` sorts each task's rows by `priority`
+    * under the write, in the same stage as the JSON parse.
     */
   def runE2eParallel(s: SparkSession, dir: String): DataFrame = {
     val root = stagingDir(dir)

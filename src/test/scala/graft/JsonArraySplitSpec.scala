@@ -63,6 +63,14 @@ class JsonArraySplitSpec extends AnyFunSuite with SparkSessionTestWrapper {
       "[\r\n\t{\"id\" :\t1 ,  \"s\":\"a\\tb\"}\r\n  ,\r\n\t\t{ \"id\":2,\"s\" : \"c\" }  \r\n\t]\r\n  \t",
     "bare NaN and infinities" ->
       """[{"id":1,"x":NaN},{"id":2,"x":1.5},{"id":3,"x":Infinity},{"id":4,"x":-Infinity}]""",
+    "2-, 3- and 4-byte UTF-8 in keys and values" ->
+      ("[{\"id\":1,\"\u00e9\":\"\u00e9\u00f1\",\"k\":\"\u20ac\u65e5\"}," +
+        "{\"id\":2,\"k\":\"\ud83d\ude00x\ud83d\ude01\"}," +
+        "{\"id\":3,\"\u00e9\":\"\u00f1\",\"k\":\"\u2603\ud83c\udf89\"}]"),
+    "escaped surrogate pairs and bare NaN" ->
+      ("[{\"id\":1,\"s\":\"\\ud83d\\ude00\",\"x\":NaN}," +
+        "{\"id\":2,\"s\":\"a\\uD83C\\uDF89b\",\"x\":-1.5}," +
+        "{\"id\":3,\"s\":\"\\ud83d\\ude00\\ud83d\\ude01\",\"x\":NaN}]"),
     "one object larger than several splits" ->
       s"""[{"id":1,"s":"a"},{"id":2,"big":"${"0123456789" * 12}","nest":{"k":[1,2,3]}},{"id":3,"s":"b"}]""")
 
@@ -110,6 +118,55 @@ class JsonArraySplitSpec extends AnyFunSuite with SparkSessionTestWrapper {
     }
     // default sizes: a small file is one split and keeps the multiLine read
     assert(JsonArraySplits.read(spark, file("one-split.json", """[{"id":1},{"id":2}]"""), None).isEmpty)
+  }
+
+  test("an invalid UTF-8 byte inside a string falls back to multiLine, with and without a schema") {
+    val schema = StructType.fromDDL("id BIGINT, s STRING")
+    val invalid = Seq(0xFF, 0x80, 0xC3).map(_.toByte)
+    for ((bad, i) <- invalid.zipWithIndex) {
+      val bytes = "[{\"id\":1,\"s\":\"a".getBytes(UTF_8) ++ Array(bad) ++
+        "b\"},{\"id\":2,\"s\":\"c\"}]".getBytes(UTF_8)
+      val p = root.resolve(s"not-utf8-$i.json")
+      Files.write(p, bytes)
+      for (bytes <- splitSizes; s <- Seq(None, Some(schema))) withSplitBytes(bytes) {
+        val clue = f"byte 0x$bad%02X, split size $bytes, schema $s"
+        assert(JsonArraySplits.read(spark, p.toString, s).isEmpty, clue)
+        val got = JsonArraySource(p.toString, s).load(spark)
+        val expected = multiLine(p.toString, s)
+        assert(got.schema === expected.schema, clue)
+        // without a schema the file reads as the corrupt-record column
+        // alone, which Spark refuses to scan
+        if (s.isDefined) assert(rows(got) === rows(expected), clue)
+      }
+    }
+  }
+
+  test("multi-byte characters across the 64 KiB chunk boundary") {
+    // the first task of each pass starts at byte 0 and reads 64 KiB
+    // chunks, so a character whose first byte is k bytes before 65536 is
+    // cut in two by a chunk boundary. The file is about 206 kB: splits
+    // of 70000 and 140000 bytes give three and two tasks, and the first
+    // of them runs past that boundary
+    val chars = Seq("\u00e9", "\u20ac", "\ud83d\ude00")
+    for (c <- chars; k <- 1 until c.getBytes(UTF_8).length) {
+      val head = "[{\"id\":0,\"s\":\""
+      val pad = "a" * (65536 - head.length - k)
+      val body = (1 to 5200).map(i => s"""{"id":$i,"s":"b$c$i"}""").mkString(",")
+      val bytes = s"""$head$pad$c"},$body]""".getBytes(UTF_8)
+      assert(new String(bytes, 65536 - k, c.getBytes(UTF_8).length, UTF_8) === c)
+      val p = root.resolve(s"chunk-${c.codePointAt(0)}-$k.json")
+      Files.write(p, bytes)
+      val inferred = multiLine(p.toString, None).schema
+      for (bytes <- Seq(70000L, 140000L);
+           schema <- Seq(None, Some(StructType(inferred.fields.reverse)))) withSplitBytes(bytes) {
+        val clue = s"char $c, $k bytes before the boundary, split size $bytes, schema $schema"
+        val split = JsonArraySplits.read(spark, p.toString, schema)
+        assert(split.isDefined, s"fell back to multiLine at $clue")
+        val expected = multiLine(p.toString, schema)
+        assert(split.get.schema === expected.schema, clue)
+        assert(rows(split.get) === rows(expected), clue)
+      }
+    }
   }
 
   test("malformed input with an explicit schema falls back to multiLine") {

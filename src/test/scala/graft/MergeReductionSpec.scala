@@ -104,8 +104,9 @@ class MergeReductionSpec extends AnyFunSuite with SparkSessionTestWrapper {
     * alone picks the branch, and no empty-input rule folds the plan away.
     */
   private def sized(rows: Seq[Row], schema: StructType, bytes: Long): DataFrame =
-    GraftPlanShim.withSizeInBytes(
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema), bytes)
+    GraftPlanShim.ofInternalRows(spark, GraftPlanShim.internalRows(
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)).map(_.copy()),
+      schema, bytes)
 
   private def frames(k: KeyKind, ps: Seq[PRow], ss: Seq[SRow], reduce: Boolean) = {
     val (pBytes, sBytes) = if (reduce) (1000L, 2000L) else (2000L, 1000L)

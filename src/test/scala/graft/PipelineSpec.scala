@@ -52,11 +52,16 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     destDir = s"$root/out",
     destFile = destFile)
 
-  /** Runs on an empty cache; the run must leave no cached relation behind. */
+  /** Runs on an empty cache; the run must leave no cached relation and
+    * no persisted RDD behind.
+    */
   private def runChecked(s: Pipeline.PipelineSpec, notifier: Notifier) = {
     spark.catalog.clearCache()
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     val result = Pipeline.run(spark, s, notifier)
     assert(spark.sharedState.cacheManager.isEmpty, s"run left a cached relation: $result")
+    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(persisted),
+      s"run left a persisted RDD: $result")
     result
   }
 
@@ -132,8 +137,10 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       def notify(text: String): Unit = throw new InterruptedException("cancelled")
     }
     spark.catalog.clearCache()
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     intercept[InterruptedException](Pipeline.run(spark, spec("int.csv"), interrupting))
     assert(spark.sharedState.cacheManager.isEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(persisted))
   }
 
   // Malformed and unusual primaries, with file splits forced to 4 bytes
